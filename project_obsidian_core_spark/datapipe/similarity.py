@@ -712,9 +712,11 @@ def pagerank_int_inrow(edges: DataFrame, iters: int = 2) -> DataFrame:
     dedges = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    # a global aggregate yields one row even on an empty edge set; drop it
+    # so an empty graph scores no nodes, as the relational twin does
     g = dedges.groupBy().agg(
         F.expr("sort_array(collect_list(struct(src, dst)))").alias("es")
-    )
+    ).filter(F.size("es") > 0)
     base = PR_DAMP_DEN - PR_DAMP_NUM
     nodes_e = "array_sort(array_distinct(transform(es, e -> e.src)))"
     eidx_e = (
@@ -765,9 +767,11 @@ def label_propagation_inrow(edges: DataFrame, rounds: int = 3) -> DataFrame:
     dedges = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    # a global aggregate yields one row even on an empty edge set; drop it
+    # so an empty graph scores no nodes, as the relational twin does
     g = dedges.groupBy().agg(
         F.expr("sort_array(collect_list(struct(src, dst)))").alias("es")
-    )
+    ).filter(F.size("es") > 0)
     nodes_e = "array_sort(array_distinct(transform(es, e -> e.src)))"
     eidx_e = (
         "transform(es, e -> struct("

@@ -18,8 +18,9 @@ import itertools
 import os
 import tempfile
 import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,6 +44,131 @@ _SNAP_SCHEMA = T.StructType(
         T.StructField("value_cents", T.LongType()),
     ]
 )
+
+
+# ------------------------------------------------------ replay harness ---
+# Every twin below replays a parquet snapshot of its input table as a file
+# stream (fresh checkpoint per run), drains it into a memory table, and —
+# for versioned emissions — reads back each key's max-version rows.
+
+
+def _materialize(key: str, run: int, build: Callable[[], DataFrame]) -> str:
+    """Write ``build()`` once per process as a parquet dir a file-source
+    stream can replay; later runs with the same ``key`` reuse it (fixture
+    construction, not the operator under test)."""
+    src = _SRC_CACHE.get(key)
+    if src is None:
+        src = f"{tempfile.mkdtemp(prefix=f'obsidian_src_{run}_')}/src"
+        build().write.mode("overwrite").parquet(src)
+        _SRC_CACHE[key] = src
+    return src
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events columns the twins replay, with exact-cents values (the
+    raw ``value`` double rides along for the twins that key on it)."""
+    return load(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type",
+        cents("value").alias("cents"), "value",
+    )
+
+
+def _events_src(spark: SparkSession, sf_dir: str, run: int) -> str:
+    return _materialize(f"events:{sf_dir}", run, lambda: _events(spark, sf_dir))
+
+
+def _documents_src(
+    spark: SparkSession, sf_dir: str, run: int, *cols: str
+) -> str:
+    """The named columns of the documents table."""
+    return _materialize(
+        f"documents:{','.join(cols)}:{sf_dir}",
+        run,
+        lambda: load(spark, sf_dir, "documents").select(*cols),
+    )
+
+
+def _replay(
+    spark: SparkSession, src: str, max_files: str | None = None
+) -> DataFrame:
+    """A file-source stream over the parquet dir ``src``, optionally
+    split into micro-batches of ``max_files`` files."""
+    reader = spark.readStream.schema(spark.read.parquet(src).schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.parquet(src)
+
+
+def _run_memory(
+    df: DataFrame, name: str, ckpt: str, spark: SparkSession, mode: str
+) -> None:
+    """Drain an availableNow stream into the memory table ``name`` —
+    ``mode`` "complete" for aggregations, "append" for stateful
+    emissions — at 8 shuffle partitions."""
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
+def _latest(emitted: DataFrame, *keys: str) -> DataFrame:
+    """The max-version drain of a superseding emission: per key, only the
+    rows of its highest ``version`` (each version re-emits the key's
+    whole current answer)."""
+    w = Window.partitionBy(*keys)
+    return emitted.withColumn("_vmax", F.max("version").over(w)).filter(
+        F.col("version") == F.col("_vmax")
+    )
+
+
+def _metric_name() -> Column:
+    """events.event_type as the metrics_db ``metric_name`` the batch
+    metric operators key on."""
+    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
+
+    return (
+        F.when(F.col("event_type") == "view", F.lit(HIT))
+        .when(F.col("event_type") == "click", F.lit(READ))
+        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
+        .alias("metric_name")
+    )
+
+
+#: event-time bucket expressions of the minute / hour metric series
+_MINUTE = "unix_micros(ts) div 60000000"
+_HOUR = "unix_micros(ts) div 3600000000"
+
+
+def _replay_metric_series(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    bucket: str,
+    op: Callable[..., DataFrame],
+    *args,
+) -> DataFrame:
+    """Replay events as (metric_name, bucket, v=cents) rows — ``bucket``
+    a SQL expression over ``ts`` — through the bucket-series operator
+    ``op(keyed, *args)`` and return its max-version rows per metric."""
+    run = next(_RUN_IDS)
+    keyed = _replay(spark, _events_src(spark, sf_dir, run), "4").select(
+        _metric_name(), F.expr(bucket).alias("bucket"), F.col("cents").alias("v")
+    )
+    name = f"stream_{tag}_{run}"
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_{tag}_{run}_")
+    _run_memory(op(keyed, *args), name, f"{tmp}/ckpt", spark, "append")
+    return _latest(spark.table(name), "metric_name")
 
 
 def synthesize_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,18 +221,12 @@ def stream_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale you size this to the instance count, not the table width.
     """
     run = next(_RUN_IDS)
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_stream_{run}_")
-    ckpt = f"{tmp}/ckpt"
-    # The synthesized snapshot history is FIXTURE construction (stands in
-    # for a live collector feed), not the operator under test — memoize its
-    # materialization per sf_dir so repeated runs time the streaming replay,
-    # which always starts from a fresh checkpoint below.
-    src = _SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = f"{tmp}/src"
-        synthesize_snapshots(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[sf_dir] = src
-
+    ckpt = f"{tempfile.mkdtemp(prefix=f'obsidian_stream_{run}_')}/ckpt"
+    # The synthesized snapshot history stands in for a live collector
+    # feed; each run replays it from a fresh checkpoint.
+    src = _materialize(
+        f"snapshots:{sf_dir}", run, lambda: synthesize_snapshots(spark, sf_dir)
+    )
     stream = spark.readStream.schema(_SNAP_SCHEMA).parquet(src)
     deltas = DS.stateful_deltas(
         stream,
@@ -190,28 +310,13 @@ def stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run = next(_RUN_IDS)
     tmp = tempfile.mkdtemp(prefix=f"obsidian_ij_{run}_")
-    src = _SRC_CACHE.get(f"events:{sf_dir}")
-    if src is None:
-        src = f"{tmp}/events_src"
-        load(spark, sf_dir, "events").select(
-            # `value` raw double rides along for the KS twin (distribution
-            # state keys on the exact value, not the cents projection);
-            # all three builders share _SRC_CACHE so must write one schema
-            "event_id", "user_id", "ts", "event_type",
-            cents("value").alias("cents"), "value",
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"events:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
+    src = _events_src(spark, sf_dir, run)
     anchors = (
-        spark.readStream.schema(schema)
-        .parquet(src)
+        _replay(spark, src)
         .filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", "ts")
     )
-    probes = spark.readStream.schema(schema).parquet(src).select(
-        "user_id", "ts", "cents"
-    )
+    probes = _replay(spark, src).select("user_id", "ts", "cents")
     pairs = IJ.interval_join(
         anchors, probes, on="user_id", span_seconds=RANGE_SPAN_US // 1_000_000
     )
@@ -257,20 +362,7 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run = next(_RUN_IDS)
     tmp = tempfile.mkdtemp(prefix=f"obsidian_sess_{run}_")
-    src = _SRC_CACHE.get(f"events:{sf_dir}")
-    if src is None:
-        src = f"{tmp}/events_src"
-        load(spark, sf_dir, "events").select(
-            # `value` raw double rides along for the KS twin (distribution
-            # state keys on the exact value, not the cents projection);
-            # all three builders share _SRC_CACHE so must write one schema
-            "event_id", "user_id", "ts", "event_type",
-            cents("value").alias("cents"), "value",
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"events:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = _replay(spark, _events_src(spark, sf_dir, run))
     sess = stream.groupBy(
         F.session_window("ts", _SESSION_GAP), F.col("user_id")
     ).agg(
@@ -280,22 +372,9 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("value_sum"),
     )
     name = f"stream_session_stats_{run}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sess.drop("session_window")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(
+        sess.drop("session_window"), name, f"{tmp}/ckpt", spark, "complete"
+    )
     return spark.table(name).orderBy("user_id", "session_start_us")
 
 
@@ -319,36 +398,19 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.write.mode("append").parquet(src)
         _SRC_CACHE[f"events2x:{sf_dir}"] = src
 
-    schema = spark.read.parquet(src).schema
     # the watermark delay must cover the table's full time span: replay
     # file order is not time order, so a shorter delay would drop late
     # FIRST copies (undercount) rather than just late duplicates. A live
     # deployment uses a realistic delay; the gate needs exact equality
     # under arbitrary file-batch order.
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(src)
+        _replay(spark, src, "8")
         .withWatermark("ts", "90 days")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
     name = f"stream_dedup_events_{run}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(counts, name, f"{tmp}/ckpt", spark, "complete")
     return spark.table(name).select(
         "event_type", F.col("n_events").cast("long").alias("n_events")
     ).orderBy("event_type")
@@ -363,43 +425,6 @@ ORDER BY event_type
 
 
 # ------------------------------------------------- streaming minute rollup
-def _events_src(spark: SparkSession, sf_dir: str, run: int) -> str:
-    """Materialize (once per process) the events table with exact-cents
-    values as a parquet dir a file-source stream can replay."""
-    src = _SRC_CACHE.get(f"events:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_evsrc_{run}_")
-        src = f"{tmp}/events_src"
-        load(spark, sf_dir, "events").select(
-            # `value` raw double rides along for the KS twin (distribution
-            # state keys on the exact value, not the cents projection);
-            # all three builders share _SRC_CACHE so must write one schema
-            "event_id", "user_id", "ts", "event_type",
-            cents("value").alias("cents"), "value",
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"events:{sf_dir}"] = src
-    return src
-
-
-def _run_complete(df: DataFrame, name: str, ckpt: str, spark: SparkSession) -> None:
-    """Drain an availableNow complete-mode aggregation into a memory sink."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
 def stream_rollup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events through a STREAMING tumbling-window rollup — 1-minute
     windows per (user, event type) with count/sum/max/min in exact cents —
@@ -414,9 +439,7 @@ def stream_rollup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, not the row count, so a 100 TB replay holds only the open windows.
     """
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = _replay(spark, _events_src(spark, sf_dir, run))
     roll = (
         stream.groupBy(
             F.window("ts", "1 minute"), F.col("user_id"), F.col("event_type")
@@ -439,7 +462,7 @@ def stream_rollup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_rollup_minute_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_roll_{run}_")
-    _run_complete(roll, name, f"{tmp}/ckpt", spark)
+    _run_memory(roll, name, f"{tmp}/ckpt", spark, "complete")
     return spark.table(name).orderBy("time", "user_id", "event_type")
 
 
@@ -458,16 +481,14 @@ def stream_top_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, so no per-batch global sort is paid.
     """
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = _replay(spark, _events_src(spark, sf_dir, run))
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("total_calls"),
         F.sum("cents").alias("total_value_cents"),
     )
     name = f"stream_top_digests_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_topd_{run}_")
-    _run_complete(agg, name, f"{tmp}/ckpt", spark)
+    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
     return (
         spark.table(name)
         .withColumn(
@@ -499,8 +520,7 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     run = next(_RUN_IDS)
     src = _events_src(spark, sf_dir, run)
     dim = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = _replay(spark, src)
     joined = stream.join(
         F.broadcast(dim), stream.user_id % 25 == dim.n_nationkey
     )
@@ -510,7 +530,7 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_enrich_events_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_enrich_{run}_")
-    _run_complete(agg, name, f"{tmp}/ckpt", spark)
+    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
     return spark.table(name).orderBy("n_name")
 
 
@@ -539,39 +559,11 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_obsidian_core_spark.datapipe import curation as C
 
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"documents:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_docsrc_{run}_")
-        src = f"{tmp}/documents_src"
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"documents:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _documents_src(spark, sf_dir, run, "doc_id", "text"), "4")
     gated = C.quality_filter(stream)
     name = f"stream_quality_filter_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_qf_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            gated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp2}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_qf_{run}_")
+    _run_memory(gated, name, f"{tmp}/ckpt", spark, "append")
     return spark.table(name).orderBy("doc_id")
 
 
@@ -653,15 +645,13 @@ def stream_sliding_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard two-level shape for streaming COUNT(DISTINCT).
     """
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = _replay(spark, _events_src(spark, sf_dir, run))
     pairs = stream.groupBy(
         F.window("ts", "1 hour", "15 minutes"), F.col("user_id")
     ).agg(F.count(F.lit(1)).alias("n_events"))
     name = f"stream_sliding_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_slide_{run}_")
-    _run_complete(pairs, name, f"{tmp}/ckpt", spark)
+    _run_memory(pairs, name, f"{tmp}/ckpt", spark, "complete")
     return (
         spark.table(name)
         .groupBy(F.unix_micros(F.col("window.start")).alias("win_start_us"))
@@ -692,41 +682,13 @@ def stream_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"documents:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_docsrc_{run}_")
-        src = f"{tmp}/documents_src"
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"documents:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _documents_src(spark, sf_dir, run, "doc_id", "text"), "4")
     chunked = P.chunk_documents(
         stream, size=_CHUNK_SIZE, overlap=_CHUNK_OVERLAP
     )
     name = f"stream_chunk_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_chunk_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            chunked.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp2}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_chunk_{run}_")
+    _run_memory(chunked, name, f"{tmp}/ckpt", spark, "append")
     return spark.table(name).orderBy("doc_id", "chunk_idx")
 
 
@@ -748,19 +710,10 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator. State is one row per (metric, open bucket) — bounded by
     time span x series cardinality, never by row volume.
     """
-    from project_obsidian_core_spark.plans import metrics_queries as MQ
-
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(MQ.HIT))
-        .when(F.col("event_type") == "click", F.lit(MQ.READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run))
     rows = stream.select(
-        name_col.alias("metric_name"),
+        _metric_name(),
         (F.expr("unix_micros(ts) div 300000000") * F.lit(300)).alias(
             "bucket_epoch_s"
         ),
@@ -777,7 +730,7 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_ohlc_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_ohlc_{run}_")
-    _run_complete(agg, name, f"{tmp}/ckpt", spark)
+    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
     return (
         spark.table(name)
         .select(
@@ -809,9 +762,7 @@ def stream_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     A32 PSI rationale); the equivalence contract here is on the exact
     value space."""
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = _replay(spark, _events_src(spark, sf_dir, run))
     agg = stream.select(
         "event_type",
         "value",
@@ -823,9 +774,7 @@ def stream_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_ks_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_ks_{run}_")
-    _run_complete(agg, name, f"{tmp}/ckpt", spark)
-
-    from pyspark.sql import Window
+    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
 
     per_val = spark.table(name)
     wcum = (
@@ -881,41 +830,15 @@ def stream_discovery_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     out = streaming_discovery(
         stream.select("user_id", "event_type", "ts", "event_id")
     )
     name = f"stream_discovery_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_disc_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    from pyspark.sql import Window
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("user_id")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "user_id")
     return latest.select(
         "user_id",
         "event_type",
@@ -944,13 +867,7 @@ def stream_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     iv = stream.select(
         "event_type",
         F.unix_micros("ts").alias("start_us"),
@@ -962,29 +879,9 @@ def stream_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_islands(iv, ["event_type"])
     name = f"stream_islands_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_isl_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    from pyspark.sql import Window
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("event_type")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "event_type")
     wid = Window.partitionBy("event_type").orderBy("island_start_us")
     return latest.select(
         "event_type",
@@ -994,7 +891,6 @@ def stream_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_intervals",
         (F.col("island_end_us") - F.col("island_start_us")).alias("covered_us"),
     ).orderBy("event_type", "island_id")
-
 
 
 # ----------------------------- T14: streaming top-k (exact-capacity gate) --
@@ -1019,18 +915,10 @@ def stream_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate also asserts err_bound drained to 0 by summing it into the
     output (any eviction would poison the hash).
     """
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.streaming.topk_state import streaming_topk
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     keyed = stream.select(F.col("user_id").cast("string").alias("user_key"))
     out = streaming_topk(
         keyed, key_col="user_key",
@@ -1038,27 +926,9 @@ def stream_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_topk_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_topk_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("shard")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "shard")
     # each key lives in exactly one shard, so the drained summaries union
     # without reconciliation; err_bound rides along so any eviction
     # (est != exact) breaks the value hash loudly
@@ -1102,20 +972,12 @@ def stream_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the repo-wide double rule); err_bound rides in the output so any
     compaction would poison the hash.
     """
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.streaming.quantile_state import (
         streaming_quantiles,
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     keyed = stream.select(
         F.col("event_type"),
         F.expr("CAST(floor(value * 1000000) AS BIGINT)").alias("v_micro"),
@@ -1126,27 +988,9 @@ def stream_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_quant_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_quant_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("series")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "series")
     return latest.select(
         "series", "q_pct", "value", "n", "err_bound"
     ).orderBy("series", "q_pct")
@@ -1183,54 +1027,21 @@ def stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as `corpus_priority_sample`). Exactly-k per source, odds ~
     n_chars, O(k) state per group forever.
     """
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.streaming.sample_state import (
         streaming_priority_sample,
     )
 
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"documents_meta:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_docmeta_{run}_")
-        src = f"{tmp}/documents_meta_src"
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"documents_meta:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
+    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "n_chars")
+    stream = _replay(spark, src, "2")
     out = streaming_priority_sample(
         stream, k=4, weight=F.col("n_chars"), group_col="source"
     )
     name = f"stream_psample_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_ps_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp2}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_ps_{run}_")
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("grp")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "grp")
     return latest.select(
         F.col("grp").alias("source"),
         F.col("id").alias("doc_id"),
@@ -1255,44 +1066,18 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast-sized window over ≤|types|² rows) reproduces the batch
     shape exactly.
     """
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_transitions,
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     out = streaming_transitions(stream)
     name = f"stream_markov_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_mkv_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("user_id")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "user_id")
     mat = latest.groupBy("prev_type", "next_type").agg(
         F.sum("n").alias("n_transitions")
     )
@@ -1319,8 +1104,6 @@ def stream_sequence_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit.  Gates on the batch `events_sequence_funnel` oracle: the
     drained max-version per-user progress, folded to per-stage user
     counts, must equal the batch greedy exactly."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.plans.behavior_queries import (
         _SEQ_WINDOW_US,
         _STAGES,
@@ -1330,37 +1113,13 @@ def stream_sequence_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     out = streaming_sequence_funnel(stream, _STAGES, _SEQ_WINDOW_US)
     name = f"stream_funnel_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_fnl_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("user_id")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "user_id")
     agg = latest.agg(
         *[
             F.sum((F.col("max_stage") >= i).cast("long")).alias(f"s{i}")
@@ -1389,8 +1148,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     finalized the split).  Gates on the batch `sessionize_events`
     oracle: drained max-version sessions must equal the batch
     lag-window sessionization bit-exactly."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.plans.pipeline_queries import (
         _SESSION_GAP_US,
     )
@@ -1399,37 +1156,13 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     out = streaming_gap_sessions(stream, _SESSION_GAP_US)
     name = f"stream_sess_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_sess_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("user_id")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "user_id")
     return latest.select(
         "user_id",
         "session_idx",
@@ -1465,10 +1198,7 @@ def _events_src_ordered(
     base = tempfile.mkdtemp(prefix=f"obsidian_evord_{run}_")
     src = f"{base}/events_src"
     os.makedirs(src)
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type",
-        cents("value").alias("cents"), "value",
-    )
+    ev = _events(spark, sf_dir)
     lo, hi = ev.selectExpr(
         "min(unix_micros(ts))", "max(unix_micros(ts))"
     ).first()
@@ -1569,31 +1299,14 @@ def _sessionize_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run = next(_RUN_IDS)
     src = _events_src_ordered(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        _replay(spark, src, "1")
         .withWatermark("ts", "1 minute")
     )
     out = streaming_gap_sessions(stream, _SESSION_GAP_US, evict=True)
     name = f"stream_sess_evict_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_sessev_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
     return spark.table(name)
 
@@ -1663,11 +1376,8 @@ def _funnel_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run = next(_RUN_IDS)
     src = _events_src_ordered(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        _replay(spark, src, "1")
         .withWatermark("ts", "1 minute")
     )
     out = streaming_sequence_funnel(
@@ -1675,21 +1385,7 @@ def _funnel_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_funnel_evict_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_fnlev_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
     return spark.table(name)
 
@@ -1756,11 +1452,8 @@ def _asof_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run = next(_RUN_IDS)
     src = _events_src_ordered(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        _replay(spark, src, "1")
         .withWatermark("ts", "1 minute")
         .filter(F.col("event_type").isin("click", "purchase"))
         .select(
@@ -1776,21 +1469,7 @@ def _asof_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_asof_join(stream, evict=True)
     name = f"stream_asof_evict_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_asofev_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
     return spark.table(name)
 
@@ -1804,55 +1483,13 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the reconstructed series on every emit. Out-of-order bucket
     delivery that would silently corrupt a scalar-state EWMA converges
     here to the batch value bit-exactly."""
-    from pyspark.sql import Window
-
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_ewma,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "ewma", _MINUTE, streaming_ewma
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 60000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_ewma(keyed)
-    name = f"stream_ewma_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_ewma_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name", "n_buckets", "ewma_fast", "ewma_slow"
     ).orderBy("metric_name")
@@ -1873,19 +1510,14 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Drain: max-version rows per user are that user's final matches;
     the batch oracle's row set is exactly the final click inventory.
     """
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_asof_join,
     )
 
     run = next(_RUN_IDS)
     src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+        _replay(spark, src, "4")
         .filter(F.col("event_type").isin("click", "purchase"))
         .select(
             "user_id",
@@ -1900,27 +1532,9 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_asof_join(stream)
     name = f"stream_asof_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_asof_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("user_id")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "user_id")
     return latest.select(
         "event_id",
         "user_id",
@@ -1932,11 +1546,6 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------- T25: streaming Pettitt change point (A66 live) ----------
-# Registration note: implemented + unit-pinned (drained == batch) in round
-# 10 session 4; REGISTRATION deferred to round 11 (the round-10 gate
-# window was exactly full at 40 new + the 10-row r05 refresh). The r11
-# registry block should add:
-#   ("stream_pettitt", st.stream_pettitt, m.ORACLE_metric_pettitt)
 def stream_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T25: the A66 rank-based change point served LIVE — SIXTH consumer
     of the sequence-state family and its first RANK recursion: state is
@@ -1946,64 +1555,19 @@ def stream_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket can re-rank every other point — no incremental scalar state
     survives that. Drained max-version rows gate on the batch
     `metric_pettitt` DuckDB oracle."""
-    from pyspark.sql import Window
-
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_pettitt,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "pettitt", _HOUR, streaming_pettitt
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_pettitt(keyed)
-    name = f"stream_pettitt_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_ptt_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name", "n_buckets", "last_hour_of_seg1", "k_signed", "k_stat"
     ).orderBy("metric_name")
 
 
 # ---------------- T26: streaming Bollinger breakouts (A72 live) -----------
-# Registration note: REGISTERED r12 (Block R12 queue drain; was queued via
-# scripts/check_queued.py). Registry row:
-#   ("stream_bollinger", st.stream_bollinger, m.ORACLE_metric_bollinger)
 def stream_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T26: the A72 exact-int volatility-band breakout served LIVE —
     SEVENTH consumer of the bucket-sum state family and its first
@@ -2015,66 +1579,19 @@ def stream_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     could never supersede under the max-version drain — the sentinel
     carries the version, the drain drops it).  Drained rows gate on the
     batch `metric_bollinger` DuckDB oracle bit-exactly."""
-    from pyspark.sql import Window
-
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_bollinger,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_bollinger(keyed)
-    name = f"stream_boll_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_boll_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(
-        (F.col("version") == F.col("_vmax")) & F.col("hour").isNotNull()
-    )
+    latest = _replay_metric_series(spark, sf_dir, "boll", _HOUR, streaming_bollinger)
+    # the drain drops the NULL-hour retraction sentinels
+    latest = latest.filter(F.col("hour").isNotNull())
     return latest.select(
         "metric_name", "hour", "value_cents", "dev_num", "var_num", "is_upper"
     ).orderBy("metric_name", "hour")
 
 
 # ---------------- T27: streaming max drawdown (A75 live) ------------------
-# Registration note: REGISTERED r12 (Block R12 queue drain; was queued via
-# scripts/check_queued.py). Registry row:
-#   ("stream_drawdown", st.stream_drawdown, m.ORACLE_metric_drawdown)
 def stream_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T27: the A75 running-peak drawdown served LIVE — EIGHTH consumer
     of the bucket-sum state family, its first PATH statistic: drawdown
@@ -2082,55 +1599,13 @@ def stream_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise every later peak or fill the trough), so each emit re-walks
     the reconstructed series and the drained max-version rows gate on
     the batch `metric_drawdown` DuckDB oracle bit-exactly."""
-    from pyspark.sql import Window
-
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_drawdown,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "dd", _HOUR, streaming_drawdown
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_drawdown(keyed)
-    name = f"stream_dd_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_dd_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name",
         "n_hours",
@@ -2150,62 +1625,19 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is exactly the silent corruption this family exists to
     avoid).  Drained max-version rows gate on the batch `metric_cusum`
     DuckDB oracle bit-exactly."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.plans.metrics_queries import (
         _OHLC_BUCKET_S,
-        HIT,
-        READ,
     )
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_cusum,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    bucket = (
+        f"unix_micros(ts) div {_OHLC_BUCKET_S * 1_000_000} * {_OHLC_BUCKET_S}"
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
+    latest = _replay_metric_series(
+        spark, sf_dir, "cusum", bucket, streaming_cusum
     )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        (
-            F.expr(f"unix_micros(ts) div {_OHLC_BUCKET_S * 1_000_000}")
-            * _OHLC_BUCKET_S
-        ).alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_cusum(keyed)
-    name = f"stream_cusum_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_cusum_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name",
         "bucket_epoch_s",
@@ -2225,60 +1657,17 @@ def stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical IEEE chain the batch fold evaluates.  Drained max-version
     rows gate on the batch `metric_holt` recursive-CTE oracle
     bit-exactly."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.plans.metrics_queries import (
-        HIT,
         HOLT_ALPHA,
         HOLT_BETA,
-        READ,
     )
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_holt,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "holt", _HOUR, streaming_holt, HOLT_ALPHA, HOLT_BETA
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_holt(keyed, HOLT_ALPHA, HOLT_BETA)
-    name = f"stream_holt_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_holt_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name",
         "n_buckets",
@@ -2296,59 +1685,16 @@ def stream_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the whole lag table; drained max-version rows gate on
     the batch `metric_acf` DuckDB oracle bit-exactly (including the one
     float division/sqrt per row — identical IEEE chain)."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.plans.metrics_queries import (
         _ACF_MAX_LAG,
-        HIT,
-        READ,
     )
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_acf,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "acf", _MINUTE, streaming_acf, _ACF_MAX_LAG
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 60000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_acf(keyed, _ACF_MAX_LAG)
-    name = f"stream_acf_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_acf_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name",
         "lag",
@@ -2367,55 +1713,13 @@ def stream_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator re-derives per emit (numpy-vectorized over the
     retention-bounded hour grid).  Drained max-version rows gate on the
     batch `metric_theil_sen` DuckDB oracle bit-exactly."""
-    from pyspark.sql import Window
-
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_theil_sen,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "ts", _HOUR, streaming_theil_sen
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_theil_sen(keyed)
-    name = f"stream_ts_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_ts_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name",
         "n_buckets",
@@ -2425,10 +1729,6 @@ def stream_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------- T28: streaming Mann-Whitney U (A64 live) ----------------
-# Registration note: REGISTERED r12 (Block R12 queue drain; was queued via
-# scripts/check_queued.py). Registry row:
-#   ("stream_mannwhitney", st.stream_mannwhitney,
-#    ax.ORACLE_events_mannwhitney)
 def stream_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T28: the A64 exact rank-sum drift test served LIVE — the first
     TWO-SAMPLE rank statistic in the state family: per event type the
@@ -2437,19 +1737,14 @@ def stream_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one late value re-ranks everything above it). Drained max-version
     rows gate on the batch `events_mannwhitney` DuckDB oracle
     bit-exactly, z included."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_mannwhitney,
     )
 
     run = next(_RUN_IDS)
     src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+        _replay(spark, src, "4")
         .select(
             "event_type",
             "value",
@@ -2459,37 +1754,15 @@ def stream_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_mannwhitney(stream)
     name = f"stream_mw_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_mw_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("event_type")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "event_type")
     return latest.select(
         "event_type", "n_a", "n_b", "r_a_x2", "u_a_x2", "tie_term", "z"
     ).orderBy("event_type")
 
 
 # ---------------- T33: streaming count-min sketch (staged r13) ------------
-# Registration note: REGISTERED r14 (Block R14 queue drain; was staged
-# round 13 when that gate window closed full).  Registry row:
-#   ("stream_cms_heavy", st.stream_cms_heavy,
-#    x.ORACLE_events_cms_heavy)   # the A88 batch oracle, verbatim
 def stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T33: the A88 count-min sketch SERVED LIVE — counters build as a
     complete-mode streaming aggregation over the exploded (r, bucket)
@@ -2515,13 +1788,7 @@ def stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     counters_s = (
         cms_keyed(stream)
         .select(F.explode(cms_probes()).alias("p"))
@@ -2530,17 +1797,13 @@ def stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_cms_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_cms_{run}_")
-    _run_complete(counters_s, name, f"{tmp}/ckpt", spark)
+    _run_memory(counters_s, name, f"{tmp}/ckpt", spark, "complete")
     counters = spark.table(name)
     keyed = cms_keyed(load(spark, sf_dir, "events"))
     return cms_report(keyed, counters)
 
 
 # ---------------- T34: streaming KMV distinct sketch (staged r13) ----------
-# Registration note: REGISTERED r14 (Block R14 queue drain; was staged
-# round 13 when that gate window closed full).  Registry row:
-#   ("stream_kmv_distinct", st.stream_kmv_distinct,
-#    x.ORACLE_events_kmv_distinct)   # the A87 batch oracle, verbatim
 def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T34: the A87 KMV sketch SERVED LIVE — T33's bounded-state
     companion on the other classic sketch axis (CMS bounds frequency
@@ -2562,13 +1825,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     hashed_s = stream.select(
         "event_type",
         shared_hash60(
@@ -2578,28 +1835,10 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_kmv(hashed_s, k=_KMV_K)
     name = f"stream_kmv_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_kmv_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("event_type")
-    sk = (
-        emitted.withColumn("_vmax", F.max("version").over(wmax))
-        .filter(F.col("version") == F.col("_vmax"))
-        .select("event_type", "n_state", "kth_hash")
+    sk = _latest(spark.table(name), "event_type").select(
+        "event_type", "n_state", "kth_hash"
     )
     # batch audit (exactly the A87 report): exact count + full distinct
     # hash count alongside the stream-drained sketch
@@ -2657,10 +1896,6 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------- T35: streaming last-touch attribution (staged r13) ---------
-# Registration note: REGISTERED r14 (Block R14 queue drain; was staged
-# round 13 when that gate window closed full).  Registry row:
-#   ("stream_attribution", st.stream_attribution,
-#    b.ORACLE_events_attribution)   # the A28 batch oracle, verbatim
 def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T35: A28's last-touch revenue attribution served LIVE over the
     ordered-chunk replay — the minimal-state end of the T2x spectrum:
@@ -2679,13 +1914,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src_ordered(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src_ordered(spark, sf_dir, run), "1")
     # the ordered src drops `props`; rebuild the channel from the raw
     # table keyed by event_id (a broadcast-size static dim at gate SFs,
     # a plain join at scale) so the channel definition stays A28's
@@ -2717,21 +1946,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_last_touch(shaped, _ATTR_LOOKBACK_S * 1_000_000)
     name = f"stream_attr_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_attr_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
     return (
         spark.table(name)
@@ -2745,10 +1960,6 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------- T36: streaming SPC rules (staged r13) --------------------
-# Registration note: REGISTERED r14 (Block R14 queue drain; was staged
-# round 13 when that gate window closed full).  Registry row:
-#   ("stream_spc_rules", st.stream_spc_rules,
-#    m.ORACLE_metric_spc_rules)   # the A100 batch oracle, verbatim
 def stream_spc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T36: the A100 control chart served LIVE — the bucket-sum state
     family's GLOBAL-statistic member: Bollinger's trailing frame made
@@ -2758,64 +1969,18 @@ def stream_spc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     all revisions).  Gated on the batch `metric_spc_rules` oracle
     verbatim: the fold re-derivation and the window formulation are the
     same operator."""
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_spc,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_spc(keyed)
-    name = f"stream_spc_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_spc_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(
-        (F.col("version") == F.col("_vmax")) & F.col("bucket").isNotNull()
-    )
+    latest = _replay_metric_series(spark, sf_dir, "spc", _HOUR, streaming_spc)
+    # the drain drops the NULL-bucket retraction sentinels
+    latest = latest.filter(F.col("bucket").isNotNull())
     return latest.select(
         "metric_name", "bucket", "value_dollars", "side", "rule1", "rule4"
     ).orderBy("metric_name", "bucket")
 
 
-# Registration note: REGISTERED r14 (Block R14b — built and gated this
-# round; the r13 verdict's Next #5).  Registry row:
-#   ("stream_seasonal_decompose", st.stream_seasonal_decompose,
-#    m.ORACLE_metric_seasonal_decompose)
 def stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T37: the A84 additive trend/seasonal decomposition served LIVE —
     the bucket-sum state family's second GLOBAL-statistic member after
@@ -2827,63 +1992,19 @@ def stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derivation and the window formulation are the same operator
     (r13 verdict Next #5 — its governor-style consumers are streaming,
     the batch twin alone left the live path unproven)."""
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_seasonal,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "seasonal", _HOUR, streaming_seasonal
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_seasonal(keyed)
-    name = f"stream_seasonal_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_seasonal_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name", "bucket", "v", "trend_sum25", "n_win", "detr25",
         "hod", "seasonal",
     ).orderBy("metric_name", "bucket")
 
 
-# Registration note: REGISTERED r14 (Block R14b — built and gated this
-# round; the r13 verdict's Next #5).  Registry row:
-#   ("stream_autoperiod", st.stream_autoperiod,
-#    m.ORACLE_metric_autoperiod)
 def stream_autoperiod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T38: the A102 ACF-argmax dominant-period detector served LIVE —
     the bucket-sum state family's third global-statistic member: any
@@ -2893,61 +2014,19 @@ def stream_autoperiod(spark: SparkSession, sf_dir: str) -> DataFrame:
     `metric_autoperiod` oracle verbatim — the emit-time re-derivation
     (A48 moment machinery, one-sqrt IEEE correlation) and the
     lag-expanded equi-join formulation are the same operator."""
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_autoperiod,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "autoperiod", _HOUR, streaming_autoperiod
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_autoperiod(keyed)
-    name = f"stream_autoperiod_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_autoperiod_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name", "dominant_lag", "dominant_acf", "second_lag",
         "second_acf", "is_daily",
     ).orderBy("metric_name")
 
 
-# Registration note: REGISTERED r14 (Block R14b).  Registry row:
-#   ("stream_winsorize", st.stream_winsorize, m.ORACLE_metric_winsorize)
 def stream_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T39: the A86 winsorized robust statistics served LIVE — the
     bucket-sum state family's fourth global-statistic member: a new or
@@ -2957,62 +2036,19 @@ def stream_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gated on the batch `metric_winsorize` oracle verbatim — the
     emit-time re-derivation (nearest-rank clip + one IEEE division) and
     the rank-window formulation are the same operator."""
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_winsorize,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "winsorize", _HOUR, streaming_winsorize
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_winsorize(keyed)
-    name = f"stream_winsorize_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_winsor_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name", "n_buckets", "p05", "p95", "n_clip_low",
         "n_clip_high", "sum_raw", "sum_winsor", "winsor_mean",
     ).orderBy("metric_name")
 
 
-# Registration note: REGISTERED r14 (Block R14b).  Registry row:
-#   ("stream_range_rate", st.stream_range_rate,
-#    m.ORACLE_metric_range_rate)
 def stream_range_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T40: the A104 reset-aware range rate served LIVE — rate() over a
     live counter IS the canonical observability stream; the counter is
@@ -3020,53 +2056,13 @@ def stream_range_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket shifts every later sample's counter and the whole window
     table revises per emit.  Gated on the batch `metric_range_rate`
     oracle verbatim."""
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_range_rate,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "range_rate", _HOUR, streaming_range_rate
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_range_rate(keyed)
-    name = f"stream_range_rate_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_rangerate_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name", "win", "n_samples", "first_bucket", "last_bucket",
         "counter_first", "counter_last", "n_resets", "increase",
@@ -3074,10 +2070,6 @@ def stream_range_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("metric_name", "win")
 
 
-# Registration note: REGISTERED r15 (Block R15 queue drain; was staged
-# via scripts/check_queued.py).  Registry row:
-#   ("stream_language_mixture", st.stream_language_mixture,
-#    cu.ORACLE_corpus_language_mixture)
 def stream_language_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T41: the corpus language mixture served LIVE — the ingestion
     monitor a curation front-door actually watches (mixture drift
@@ -3089,27 +2081,14 @@ def stream_language_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IDENTICAL integer expression as the batch plan.  Gated on the
     batch `corpus_language_mixture` oracle verbatim."""
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"documents_mix:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_docmix_{run}_")
-        src = f"{tmp}/documents_mix_src"
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "lang"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"documents_mix:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "lang")
+    stream = _replay(spark, src, "4")
     counts = stream.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     name = f"stream_langmix_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_langmix_{run}_")
-    _run_complete(counts, name, f"{tmp}/ckpt", spark)
+    _run_memory(counts, name, f"{tmp}/ckpt", spark, "complete")
     emitted = spark.table(name)
     # exact-ppm shares on the drained reduced relation — the IDENTICAL
     # integer expression as datapipe.curation.language_mixture
@@ -3128,60 +2107,18 @@ def stream_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the train/test split, the A53 train fold, HALF_UP-rounded
     holdout errors and the integer MAE/improvement.  Drained max-version
     rows gate on the batch `metric_forecast_backtest` oracle verbatim."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.plans.metrics_queries import (
-        HIT,
         HOLT_ALPHA,
         HOLT_BETA,
-        READ,
     )
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_forecast_backtest,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
+    latest = _replay_metric_series(
+        spark, sf_dir, "fbt", _HOUR,
+        streaming_forecast_backtest, HOLT_ALPHA, HOLT_BETA,
     )
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
-    )
-    keyed = stream.select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    out = streaming_forecast_backtest(keyed, HOLT_ALPHA, HOLT_BETA)
-    name = f"stream_fbt_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_fbt_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("metric_name")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
     return latest.select(
         "metric_name",
         "n_train",
@@ -3205,17 +2142,11 @@ def stream_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     The stream carries (nation, l_suppkey, cents) — the supplier→nation
     dimension is broadcast-attached at source materialization, the
     same pre-projection the events twins apply to `cents`."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_supplier_hhi,
     )
 
-    run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"li_hhi:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_lisrc_{run}_")
-        src = f"{tmp}/lineitem_src"
+    def lineitem_by_nation() -> DataFrame:
         nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
         supp = (
             load(spark, sf_dir, "supplier")
@@ -3225,21 +2156,16 @@ def stream_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("s_suppkey", F.col("n_name").alias("nation"))
         )
-        (
+        return (
             load(spark, sf_dir, "lineitem")
             .select("l_suppkey", cents("l_extendedprice").alias("epc"))
             .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
             .select("nation", "l_suppkey", "epc")
-            .write.mode("overwrite")
-            .parquet(src)
         )
-        _SRC_CACHE[f"li_hhi:{sf_dir}"] = src
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(src)
-    )
+
+    run = next(_RUN_IDS)
+    src = _materialize(f"li_hhi:{sf_dir}", run, lineitem_by_nation)
+    stream = _replay(spark, src, "8")
     keyed = stream.select(
         "nation",
         F.col("l_suppkey").alias("bucket"),
@@ -3248,27 +2174,9 @@ def stream_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_supplier_hhi(keyed)
     name = f"stream_hhi_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_hhi_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("nation")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "nation")
     return latest.select(
         "nation", "n_suppliers", "revenue_cents", "hhi", "band"
     ).orderBy("nation")
@@ -3294,25 +2202,11 @@ def stream_token_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"docs_tok:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_doctok_{run}_")
-        src = f"{tmp}/documents_src"
-        load(spark, sf_dir, "documents").select(
-            "source", "text"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"docs_tok:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _documents_src(spark, sf_dir, run, "source", "text"), "4")
     grid = token_anomaly_grid(token_doc_stats(stream))
     name = f"stream_toktom_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_toktom_{run}_")
-    _run_complete(grid, name, f"{tmp2}/ckpt", spark)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_toktom_{run}_")
+    _run_memory(grid, name, f"{tmp}/ckpt", spark, "complete")
     return token_anomaly_report(spark.table(name))
 
 
@@ -3335,25 +2229,11 @@ def stream_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"docs_tok:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_doctok_{run}_")
-        src = f"{tmp}/documents_src"
-        load(spark, sf_dir, "documents").select(
-            "source", "text"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"docs_tok:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _documents_src(spark, sf_dir, run, "source", "text"), "4")
     sums = charclass_sums(charclass_counts(stream))
     name = f"stream_cclass_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_cclass_{run}_")
-    _run_complete(sums, name, f"{tmp2}/ckpt", spark)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_cclass_{run}_")
+    _run_memory(sums, name, f"{tmp}/ckpt", spark, "complete")
     return charclass_report(spark.table(name), summed=True)
 
 
@@ -3365,8 +2245,6 @@ def stream_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing dwell); drained max-version user grids sum to the global
     grid and the SHARED `dwell_report` derivation finishes — gated on
     the batch `events_dwell_time` oracle verbatim."""
-    from pyspark.sql import Window
-
     from project_obsidian_core_spark.plans.behavior_queries import (
         dwell_report,
     )
@@ -3375,13 +2253,7 @@ def stream_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
     keyed = stream.select(
         "user_id",
         F.expr("unix_micros(ts)").alias("ts_us"),
@@ -3391,27 +2263,9 @@ def stream_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_dwell_grid(keyed)
     name = f"stream_dwell_{run}"
     tmp = tempfile.mkdtemp(prefix=f"obsidian_dwell_{run}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    emitted = spark.table(name)
-    wmax = Window.partitionBy("user_id")
-    latest = emitted.withColumn(
-        "_vmax", F.max("version").over(wmax)
-    ).filter(F.col("version") == F.col("_vmax"))
+    latest = _latest(spark.table(name), "user_id")
     grid = latest.groupBy("event_type", "dwell_s").agg(
         F.sum("cnt").alias("cnt")
     )
@@ -3419,26 +2273,6 @@ def stream_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------- T47: streaming state-size budget report (round 16) ------------
-def _run_append(df: DataFrame, name: str, ckpt: str, spark: SparkSession) -> None:
-    """Drain an append-mode stateful emission into a memory sink (the
-    boilerplate every applyInPandasWithState twin repeats)."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
 def stream_state_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T47: the streaming state-size BUDGET — one representative of each
     state family drained and SIZED (r15 verdict #6: the bounds were
@@ -3479,7 +2313,6 @@ def stream_state_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_keyed,
         cms_probes,
     )
-    from project_obsidian_core_spark.plans.metrics_queries import HIT, READ
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_ewma,
         streaming_kmv,
@@ -3488,14 +2321,7 @@ def stream_state_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run = next(_RUN_IDS)
     src = _events_src(spark, sf_dir, run)
-    schema = spark.read.parquet(src).schema
-
-    def new_stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "4")
-            .parquet(src)
-        )
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_budget_{run}_")
 
     def fam_row(df: DataFrame, family: str, key: str, rows: str) -> DataFrame:
         return df.agg(
@@ -3505,16 +2331,19 @@ def stream_state_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(rows).cast("long").alias("max_rows_per_key"),
         )
 
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_budget_{run}_")
+    def drain(out: DataFrame, fam: str, key: str, rows: str) -> DataFrame:
+        name = f"budget_{fam}_{run}"
+        _run_memory(out, name, f"{tmp}/{fam}", spark, "append")
+        return fam_row(_latest(spark.table(name), key), fam, key, rows)
 
     # family: cms_counters (T33) — complete-mode counter table rows
     counters_s = (
-        cms_keyed(new_stream())
+        cms_keyed(_replay(spark, src, "4"))
         .select(F.explode(cms_probes()).alias("p"))
         .groupBy(F.col("p.r").alias("r"), F.col("p.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    _run_complete(counters_s, f"budget_cms_{run}", f"{tmp}/cms", spark)
+    _run_memory(counters_s, f"budget_cms_{run}", f"{tmp}/cms", spark, "complete")
     cms_rows = spark.table(f"budget_cms_{run}").select(
         "r", F.lit(1).alias("one")
     )
@@ -3526,73 +2355,30 @@ def stream_state_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # family: ewma_bucket_sums (T23) — n_buckets from the emission
-    name_col = (
-        F.when(F.col("event_type") == "view", F.lit(HIT))
-        .when(F.col("event_type") == "click", F.lit(READ))
-        .otherwise(F.concat(F.lit("postgresql."), F.col("event_type")))
+    ewma_last = _replay_metric_series(
+        spark, sf_dir, "budget_ewma", _MINUTE, streaming_ewma
     )
-    keyed_e = new_stream().select(
-        name_col.alias("metric_name"),
-        F.expr("unix_micros(ts) div 60000000").alias("bucket"),
-        F.col("cents").alias("v"),
-    )
-    _run_append(
-        streaming_ewma(keyed_e), f"budget_ewma_{run}", f"{tmp}/ewma", spark
-    )
-    we = Window.partitionBy("metric_name")
-    ewma_last = (
-        spark.table(f"budget_ewma_{run}")
-        .withColumn("_vmax", F.max("version").over(we))
-        .filter(F.col("version") == F.col("_vmax"))
-    )
-    ewma_fam = fam_row(
-        ewma_last, "ewma_bucket_sums", "metric_name", "n_buckets"
-    )
+    ewma_fam = fam_row(ewma_last, "ewma_bucket_sums", "metric_name", "n_buckets")
 
     # family: kmv_minima (T34) — n_state from the emission
-    hashed_s = new_stream().select(
+    hashed_s = _replay(spark, src, "4").select(
         "event_type",
         shared_hash60(
             F.concat(F.lit("kmv:"), F.col("user_id").cast("string"))
         ).alias("h"),
     )
-    _run_append(
-        streaming_kmv(hashed_s, k=_KMV_K),
-        f"budget_kmv_{run}",
-        f"{tmp}/kmv",
-        spark,
+    kmv_fam = drain(
+        streaming_kmv(hashed_s, k=_KMV_K), "kmv_minima", "event_type", "n_state"
     )
-    wk = Window.partitionBy("event_type")
-    kmv_last = (
-        spark.table(f"budget_kmv_{run}")
-        .withColumn("_vmax", F.max("version").over(wk))
-        .filter(F.col("version") == F.col("_vmax"))
-    )
-    kmv_fam = fam_row(kmv_last, "kmv_minima", "event_type", "n_state")
 
     # family: sequence_evict (T20e family) — the live-state probe on
     # the ordered-chunk replay (the eviction contract's transport)
-    src_ord = _events_src_ordered(spark, sf_dir, run)
-    schema_ord = spark.read.parquet(src_ord).schema
-    stream_ord = (
-        spark.readStream.schema(schema_ord)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_ord)
-        .withWatermark("ts", "1 minute")
+    stream_ord = _replay(
+        spark, _events_src_ordered(spark, sf_dir, run), "1"
+    ).withWatermark("ts", "1 minute")
+    seq_fam = drain(
+        streaming_state_rows(stream_ord), "sequence_evict", "user_id", "n_state"
     )
-    _run_append(
-        streaming_state_rows(stream_ord),
-        f"budget_seq_{run}",
-        f"{tmp}/seq",
-        spark,
-    )
-    wu = Window.partitionBy("user_id")
-    seq_last = (
-        spark.table(f"budget_seq_{run}")
-        .withColumn("_vmax", F.max("version").over(wu))
-        .filter(F.col("version") == F.col("_vmax"))
-    )
-    seq_fam = fam_row(seq_last, "sequence_evict", "user_id", "n_state")
 
     return (
         cms_fam.unionByName(ewma_fam)
@@ -3712,25 +2498,12 @@ def stream_extract_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"docs_x34:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_docx34_{run}_")
-        src = f"{tmp}/documents_src"
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"docs_x34:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "text")
+    stream = _replay(spark, src, "4")
     sums = extract_sums(extract_doc_stats(stream))
     name = f"stream_x34_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_x34_{run}_")
-    _run_complete(sums, name, f"{tmp2}/ckpt", spark)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_x34_{run}_")
+    _run_memory(sums, name, f"{tmp}/ckpt", spark, "complete")
     return extract_report(spark.table(name))
 
 
@@ -3747,38 +2520,29 @@ def stream_gini_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression set, both engines, so the batch and live gates cannot
     drift (the T41/T44/T45/T48 rule).  Gated on the batch
     `orders_gini_segment` oracle verbatim."""
-    from project_obsidian_core_spark.plans.common import cents
     from project_obsidian_core_spark.plans.relational_queries import (
         gini_grid,
         gini_report,
     )
 
-    run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"orders_seg:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_oseg_{run}_")
-        src = f"{tmp}/orders_seg_src"
+    def orders_by_segment() -> DataFrame:
         orders = load(spark, sf_dir, "orders")
         cust = load(spark, sf_dir, "customer")
-        orders.join(
+        return orders.join(
             F.broadcast(cust.select("c_custkey", "c_mktsegment")),
             orders.o_custkey == F.col("c_custkey"),
         ).select(
             F.col("c_mktsegment").alias("segment"),
             cents("o_totalprice").alias("v"),
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"orders_seg:{sf_dir}"] = src
+        )
 
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    run = next(_RUN_IDS)
+    src = _materialize(f"orders_seg:{sf_dir}", run, orders_by_segment)
+    stream = _replay(spark, src, "4")
     grid = gini_grid(stream)
     name = f"stream_gini_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_gini_{run}_")
-    _run_complete(grid, name, f"{tmp2}/ckpt", spark)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_gini_{run}_")
+    _run_memory(grid, name, f"{tmp}/ckpt", spark, "complete")
     return gini_report(spark.table(name))
 
 
@@ -3802,23 +2566,10 @@ def stream_shard_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     run = next(_RUN_IDS)
-    src = _SRC_CACHE.get(f"docs_x34:{sf_dir}")
-    if src is None:
-        tmp = tempfile.mkdtemp(prefix=f"obsidian_docx34_{run}_")
-        src = f"{tmp}/documents_src"
-        load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        ).write.mode("overwrite").parquet(src)
-        _SRC_CACHE[f"docs_x34:{sf_dir}"] = src
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-    )
+    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "text")
+    stream = _replay(spark, src, "4")
     sums = shard_sums(shard_stats(stream))
     name = f"stream_shskew_{run}"
-    tmp2 = tempfile.mkdtemp(prefix=f"obsidian_shskew_{run}_")
-    _run_complete(sums, name, f"{tmp2}/ckpt", spark)
+    tmp = tempfile.mkdtemp(prefix=f"obsidian_shskew_{run}_")
+    _run_memory(sums, name, f"{tmp}/ckpt", spark, "complete")
     return shard_report(spark.table(name))

@@ -37,7 +37,8 @@ window uses.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -763,26 +764,34 @@ def fold_bucket_sums(
     return [b for b, _ in items], [s for _, s in items]
 
 
-def ewma_pair(sums: list[int], alpha_fast: float, alpha_slow: float):
-    """The governor's dual-EWMA left fold over the bucket-ordered series
-    — float ops in the SAME order as the batch `aggregate` expression
-    and the DuckDB `list_reduce`, so all three agree bit-exactly
-    (python floats ARE IEEE doubles). Pure; unit-tested."""
-    if not sums:
-        return None, None
-    fast = slow = float(sums[0])
-    for v in sums[1:]:
-        x = float(v)
-        fast = fast + alpha_fast * (x - fast)
-        slow = slow + alpha_slow * (x - slow)
-    return fast, slow
+# ---------------- the bucket-series kernel (T23 and its 14 siblings) ------
+#: ``emit(key, buckets, sums, version)`` -> one output frame, or None
+Emit = Callable[[str, list, list, int], "pd.DataFrame | None"]
 
 
-def make_ewma_fn(alpha_fast: float, alpha_slow: float):
+def bucket_series_fn(emit: Emit):
+    """The one group function of the bucket-series family.
+
+    State is ``(buckets, sums, version)``: exact-int per-bucket sums,
+    folded by :func:`fold_bucket_sums` (integer addition — commutative,
+    so any micro-batch arrival order rebuilds the identical series), and
+    ``version`` = rows absorbed so far.  Each non-empty batch folds its
+    rows, bumps the version and calls ``emit`` once with the whole
+    bucket-ordered series; an empty batch emits nothing and touches no
+    state.  ``emit`` re-derives the operator's full answer from the
+    series (a late bucket can revise any earlier row) and returns it as
+    one frame stamped with ``version``, or None for no row yet.
+
+    Readers take the max-version rows per key.  An operator whose answer
+    can shrink to zero rows (a late bucket RETRACTS every hit) must still
+    emit one sentinel row with NULL payload columns carrying the new
+    version — an empty emission could never supersede the older rows —
+    and its drain drops the sentinel.  An operator whose answer only
+    grows, or is always exactly one row once it exists, needs none."""
+
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
         if state.exists:
             buckets, sums, version = state.get
             buckets, sums = list(buckets), list(sums)
@@ -800,18 +809,63 @@ def make_ewma_fn(alpha_fast: float, alpha_slow: float):
             return
         version += absorbed
         state.update((buckets, sums, version))
-        fast, slow = ewma_pair(sums, alpha_fast, alpha_slow)
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "n_buckets": [len(buckets)],
-                "ewma_fast": [fast],
-                "ewma_slow": [slow],
-                "version": [version],
-            }
-        )
+        out = emit(str(key[0]), buckets, sums, version)
+        if out is not None:
+            yield out
 
     return fn
+
+
+def bucket_series_stream(
+    stream: DataFrame, key: str, emit: Emit, schema: T.StructType
+) -> DataFrame:
+    """Run ``emit`` over per-``key`` bucket series built from a
+    (key, bucket, v) stream: casts key→string, bucket/v→long, groups by
+    ``key`` and makes the single ``applyInPandasWithState`` call of the
+    family (append mode, no timeout).  The state schema
+    (``EWMA_STATE_SCHEMA``), the grouping key and each operator's output
+    schema are unchanged from the per-operator wrappers this kernel
+    replaced, so replay checkpoints written by them still resume."""
+    keyed = stream.select(
+        F.col(key).cast("string").alias(key),
+        F.col("bucket").cast("long").alias("bucket"),
+        F.col("v").cast("long").alias("v"),
+    )
+    return keyed.groupBy(key).applyInPandasWithState(
+        bucket_series_fn(emit),
+        outputStructType=schema,
+        stateStructType=EWMA_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def ewma_pair(sums: list[int], alpha_fast: float, alpha_slow: float):
+    """The governor's dual-EWMA left fold over the bucket-ordered series
+    — float ops in the SAME order as the batch `aggregate` expression
+    and the DuckDB `list_reduce`, so all three agree bit-exactly
+    (python floats ARE IEEE doubles). Pure; unit-tested."""
+    if not sums:
+        return None, None
+    fast = slow = float(sums[0])
+    for v in sums[1:]:
+        x = float(v)
+        fast = fast + alpha_fast * (x - fast)
+        slow = slow + alpha_slow * (x - slow)
+    return fast, slow
+
+
+def emit_ewma(metric, buckets, sums, version, *, alpha_fast, alpha_slow):
+    fast, slow = ewma_pair(sums, alpha_fast, alpha_slow)
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "n_buckets": [len(buckets)],
+            "ewma_fast": [fast],
+            "ewma_slow": [slow],
+            "version": [version],
+        }
+    )
 
 
 def streaming_ewma(
@@ -827,17 +881,9 @@ def streaming_ewma(
     accepts arrival-order sensitivity; this operator buys exactness
     with window-bounded state (one long per bucket in retention).
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_ewma_fn(alpha_fast, alpha_slow),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    emit = partial(emit_ewma, alpha_fast=alpha_fast, alpha_slow=alpha_slow)
+    return bucket_series_stream(
+        stream, "metric_name", emit, EWMA_OUTPUT_SCHEMA
     )
 
 
@@ -1173,44 +1219,21 @@ def pettitt_from_series(
     return n, best[1], best[2], -best[0]
 
 
-def make_pettitt_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        res = pettitt_from_series(buckets, sums)
-        if res is None:
-            return
-        n, split, k_signed, k_stat = res
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "n_buckets": [n],
-                "last_hour_of_seg1": [split],
-                "k_signed": [k_signed],
-                "k_stat": [k_stat],
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_pettitt(metric, buckets, sums, version):
+    res = pettitt_from_series(buckets, sums)
+    if res is None:
+        return None
+    n, split, k_signed, k_stat = res
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "n_buckets": [n],
+            "last_hour_of_seg1": [split],
+            "k_signed": [k_signed],
+            "k_stat": [k_stat],
+            "version": [version],
+        }
+    )
 
 
 def streaming_pettitt(stream: DataFrame) -> DataFrame:
@@ -1223,17 +1246,8 @@ def streaming_pettitt(stream: DataFrame) -> DataFrame:
     failure mode no incremental scalar state survives.  The drained
     max-version rows equal the batch `metric_pettitt` exactly.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_pettitt_fn(),
-        outputStructType=PETTITT_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_pettitt, PETTITT_OUTPUT_SCHEMA
     )
 
 
@@ -1285,54 +1299,31 @@ def bollinger_from_series(
     return out
 
 
-def make_bollinger_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        hits = bollinger_from_series(buckets, sums)
-        # zero-breakout versions still emit ONE sentinel row (NULL hour):
-        # a late bucket can RETRACT every breakout, and an empty emission
-        # could never supersede an earlier version under the max-version
-        # drain — the sentinel carries the version, the drain drops it.
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric] * max(len(hits), 1),
-                "hour": pd.array([h[0] for h in hits] or [None], dtype="Int64"),
-                "value_cents": pd.array(
-                    [h[1] for h in hits] or [None], dtype="Int64"
-                ),
-                "dev_num": pd.array(
-                    [h[2] for h in hits] or [None], dtype="Int64"
-                ),
-                "var_num": pd.array(
-                    [h[3] for h in hits] or [None], dtype="Int64"
-                ),
-                "is_upper": pd.array(
-                    [h[4] for h in hits] or [None], dtype="boolean"
-                ),
-                "version": [version] * max(len(hits), 1),
-            }
-        )
-
-    return fn
+def emit_bollinger(metric, buckets, sums, version):
+    hits = bollinger_from_series(buckets, sums)
+    # zero-breakout versions still emit ONE sentinel row (NULL hour):
+    # a late bucket can RETRACT every breakout, and an empty emission
+    # could never supersede an earlier version under the max-version
+    # drain — the sentinel carries the version, the drain drops it.
+    return pd.DataFrame(
+        {
+            "metric_name": [metric] * max(len(hits), 1),
+            "hour": pd.array([h[0] for h in hits] or [None], dtype="Int64"),
+            "value_cents": pd.array(
+                [h[1] for h in hits] or [None], dtype="Int64"
+            ),
+            "dev_num": pd.array(
+                [h[2] for h in hits] or [None], dtype="Int64"
+            ),
+            "var_num": pd.array(
+                [h[3] for h in hits] or [None], dtype="Int64"
+            ),
+            "is_upper": pd.array(
+                [h[4] for h in hits] or [None], dtype="boolean"
+            ),
+            "version": [version] * max(len(hits), 1),
+        }
+    )
 
 
 def streaming_bollinger(stream: DataFrame) -> DataFrame:
@@ -1346,17 +1337,8 @@ def streaming_bollinger(stream: DataFrame) -> DataFrame:
     a breakout; the versioned-emission drain (max version per metric)
     resolves every revision, and the drained rows equal the batch
     `metric_bollinger` exactly.  Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_bollinger_fn(),
-        outputStructType=BOLLINGER_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_bollinger, BOLLINGER_OUTPUT_SCHEMA
     )
 
 
@@ -1394,45 +1376,22 @@ def drawdown_from_series(
     return len(sums), best[1], best[2], best[3], -best[0]
 
 
-def make_drawdown_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        res = drawdown_from_series(buckets, sums)
-        if res is None:
-            return
-        n, trough_x, peak, trough, dd = res
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "n_hours": [n],
-                "trough_hour": [trough_x],
-                "peak_cents": [peak],
-                "trough_cents": [trough],
-                "drawdown_cents": [dd],
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_drawdown(metric, buckets, sums, version):
+    res = drawdown_from_series(buckets, sums)
+    if res is None:
+        return None
+    n, trough_x, peak, trough, dd = res
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "n_hours": [n],
+            "trough_hour": [trough_x],
+            "peak_cents": [peak],
+            "trough_cents": [trough],
+            "drawdown_cents": [dd],
+            "version": [version],
+        }
+    )
 
 
 def streaming_drawdown(stream: DataFrame) -> DataFrame:
@@ -1446,17 +1405,8 @@ def streaming_drawdown(stream: DataFrame) -> DataFrame:
     delivery. One row per (metric, version); drained max-version rows
     equal the batch `metric_drawdown` exactly.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_drawdown_fn(),
-        outputStructType=DRAWDOWN_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_drawdown, DRAWDOWN_OUTPUT_SCHEMA
     )
 
 
@@ -1497,41 +1447,18 @@ def cusum_from_series(
     return out
 
 
-def make_cusum_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        rows = cusum_from_series(buckets, sums)
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric] * len(rows),
-                "bucket_epoch_s": [r[0] for r in rows],
-                "v_cents": [r[1] for r in rows],
-                "cusum_pos": [r[2] for r in rows],
-                "cusum_neg": [r[3] for r in rows],
-                "version": [version] * len(rows),
-            }
-        )
-
-    return fn
+def emit_cusum(metric, buckets, sums, version):
+    rows = cusum_from_series(buckets, sums)
+    return pd.DataFrame(
+        {
+            "metric_name": [metric] * len(rows),
+            "bucket_epoch_s": [r[0] for r in rows],
+            "v_cents": [r[1] for r in rows],
+            "cusum_pos": [r[2] for r in rows],
+            "cusum_neg": [r[3] for r in rows],
+            "version": [version] * len(rows),
+        }
+    )
 
 
 def streaming_cusum(stream: DataFrame) -> DataFrame:
@@ -1545,17 +1472,8 @@ def streaming_cusum(stream: DataFrame) -> DataFrame:
     max-version rows equal the batch `metric_cusum` bit-exactly.
     Expects (metric_name, bucket, v) with bucket already in the batch
     operator's epoch-seconds grid."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_cusum_fn(),
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_cusum, CUSUM_OUTPUT_SCHEMA
     )
 
 
@@ -1592,44 +1510,21 @@ def holt_from_series(
     return l, b
 
 
-def make_holt_fn(alpha: float, beta: float):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        res = holt_from_series(sums, alpha, beta)
-        if res is None:
-            return
-        l, b = res
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "n_buckets": pd.Series([len(sums)], dtype="int32"),
-                "level": [l],
-                "trend": [b],
-                "forecast_next": [l + b],
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_holt(metric, buckets, sums, version, *, alpha, beta):
+    res = holt_from_series(sums, alpha, beta)
+    if res is None:
+        return None
+    l, b = res
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "n_buckets": pd.Series([len(sums)], dtype="int32"),
+            "level": [l],
+            "trend": [b],
+            "forecast_next": [l + b],
+            "version": [version],
+        }
+    )
 
 
 def streaming_holt(
@@ -1644,17 +1539,9 @@ def streaming_holt(
     replays the recursion over the reconstructed series.  Drained
     max-version rows equal the batch `metric_holt` bit-exactly.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_holt_fn(alpha, beta),
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    emit = partial(emit_holt, alpha=alpha, beta=beta)
+    return bucket_series_stream(
+        stream, "metric_name", emit, HOLT_OUTPUT_SCHEMA
     )
 
 
@@ -1715,45 +1602,22 @@ def acf_from_series(
     return out
 
 
-def make_acf_fn(max_lag: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        rows = acf_from_series(buckets, sums, max_lag)
-        if not rows:
-            return
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric] * len(rows),
-                "lag": pd.Series([r[0] for r in rows], dtype="int32"),
-                "n": [r[1] for r in rows],
-                "acf_num": [r[2] for r in rows],
-                "var_a_num": [r[3] for r in rows],
-                "var_b_num": [r[4] for r in rows],
-                "acf": pd.array([r[5] for r in rows], dtype="float64"),
-                "version": [version] * len(rows),
-            }
-        )
-
-    return fn
+def emit_acf(metric, buckets, sums, version, *, max_lag):
+    rows = acf_from_series(buckets, sums, max_lag)
+    if not rows:
+        return None
+    return pd.DataFrame(
+        {
+            "metric_name": [metric] * len(rows),
+            "lag": pd.Series([r[0] for r in rows], dtype="int32"),
+            "n": [r[1] for r in rows],
+            "acf_num": [r[2] for r in rows],
+            "var_a_num": [r[3] for r in rows],
+            "var_b_num": [r[4] for r in rows],
+            "acf": pd.array([r[5] for r in rows], dtype="float64"),
+            "version": [version] * len(rows),
+        }
+    )
 
 
 def streaming_acf(stream: DataFrame, max_lag: int) -> DataFrame:
@@ -1764,18 +1628,8 @@ def streaming_acf(stream: DataFrame, max_lag: int) -> DataFrame:
     exact-int bucket sums.  Drained max-version rows equal the batch
     `metric_acf` bit-exactly (the float column evaluates the identical
     IEEE chain).  Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_acf_fn(max_lag),
-        outputStructType=ACF_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    emit = partial(emit_acf, max_lag=max_lag)
+    return bucket_series_stream(stream, "metric_name", emit, ACF_OUTPUT_SCHEMA)
 
 
 # ------------- T32: streaming Theil-Sen slope over bucket-sum state -------
@@ -1813,43 +1667,20 @@ def theil_sen_from_series(
     return p, float(slopes[-(-p // 2) - 1])
 
 
-def make_theilsen_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        res = theil_sen_from_series(buckets, sums)
-        if res is None:
-            return
-        n_pairs, med = res
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "n_buckets": pd.Series([len(sums)], dtype="int32"),
-                "n_pairs": pd.Series([n_pairs], dtype="int32"),
-                "median_slope_cents_per_hour": [med],
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_theilsen(metric, buckets, sums, version):
+    res = theil_sen_from_series(buckets, sums)
+    if res is None:
+        return None
+    n_pairs, med = res
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "n_buckets": pd.Series([len(sums)], dtype="int32"),
+            "n_pairs": pd.Series([n_pairs], dtype="int32"),
+            "median_slope_cents_per_hour": [med],
+            "version": [version],
+        }
+    )
 
 
 def streaming_theil_sen(stream: DataFrame) -> DataFrame:
@@ -1860,17 +1691,8 @@ def streaming_theil_sen(stream: DataFrame) -> DataFrame:
     corpus — the same bound the batch operator documents).  Drained
     max-version rows equal the batch `metric_theil_sen` bit-exactly.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_theilsen_fn(),
-        outputStructType=THEILSEN_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_theilsen, THEILSEN_OUTPUT_SCHEMA
     )
 
 
@@ -2275,55 +2097,32 @@ def spc_from_series(
     return out
 
 
-def make_spc_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        hits = spc_from_series(buckets, sums)
-        # NULL-bucket sentinel on zero-violation versions: a late bucket
-        # shifts the GLOBAL center line, so earlier violations can
-        # RETRACT — the sentinel carries the superseding version
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric] * max(len(hits), 1),
-                "bucket": pd.array(
-                    [h[0] for h in hits] or [None], dtype="Int64"
-                ),
-                "value_dollars": pd.array(
-                    [h[1] for h in hits] or [None], dtype="Int64"
-                ),
-                "side": pd.array(
-                    [h[2] for h in hits] or [None], dtype="Int64"
-                ),
-                "rule1": pd.array(
-                    [h[3] for h in hits] or [None], dtype="boolean"
-                ),
-                "rule4": pd.array(
-                    [h[4] for h in hits] or [None], dtype="boolean"
-                ),
-                "version": [version] * max(len(hits), 1),
-            }
-        )
-
-    return fn
+def emit_spc(metric, buckets, sums, version):
+    hits = spc_from_series(buckets, sums)
+    # NULL-bucket sentinel on zero-violation versions: a late bucket
+    # shifts the GLOBAL center line, so earlier violations can
+    # RETRACT — the sentinel carries the superseding version
+    return pd.DataFrame(
+        {
+            "metric_name": [metric] * max(len(hits), 1),
+            "bucket": pd.array(
+                [h[0] for h in hits] or [None], dtype="Int64"
+            ),
+            "value_dollars": pd.array(
+                [h[1] for h in hits] or [None], dtype="Int64"
+            ),
+            "side": pd.array(
+                [h[2] for h in hits] or [None], dtype="Int64"
+            ),
+            "rule1": pd.array(
+                [h[3] for h in hits] or [None], dtype="boolean"
+            ),
+            "rule4": pd.array(
+                [h[4] for h in hits] or [None], dtype="boolean"
+            ),
+            "version": [version] * max(len(hits), 1),
+        }
+    )
 
 
 def streaming_spc(stream: DataFrame) -> DataFrame:
@@ -2335,17 +2134,8 @@ def streaming_spc(stream: DataFrame) -> DataFrame:
     same commutative exact-int cents sums as every family member;
     drained rows gate on the batch `metric_spc_rules` oracle verbatim.
     Expects (metric_name, bucket, v=cents)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_spc_fn(),
-        outputStructType=SPC_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_spc, SPC_OUTPUT_SCHEMA
     )
 
 
@@ -2409,48 +2199,25 @@ def seasonal_from_series(buckets: list[int], sums: list[int]):
     ]
 
 
-def make_seasonal_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        rows = seasonal_from_series(buckets, sums)
-        # every version emits the FULL per-bucket decomposition (a late
-        # bucket shifts the trend window of its 24 neighbors and the
-        # global seasonal means), so the max-version drain needs no
-        # retraction sentinel: versions are always non-empty supersets
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric] * len(rows),
-                "bucket": pd.array([r[0] for r in rows], dtype="Int64"),
-                "v": pd.array([r[1] for r in rows], dtype="Int64"),
-                "trend_sum25": pd.array([r[2] for r in rows], dtype="Int64"),
-                "n_win": pd.array([r[3] for r in rows], dtype="Int64"),
-                "detr25": pd.array([r[4] for r in rows], dtype="Int64"),
-                "hod": pd.array([r[5] for r in rows], dtype="Int64"),
-                "seasonal": pd.array([r[6] for r in rows], dtype="Float64"),
-                "version": [version] * len(rows),
-            }
-        )
-
-    return fn
+def emit_seasonal(metric, buckets, sums, version):
+    rows = seasonal_from_series(buckets, sums)
+    # every version emits the FULL per-bucket decomposition (a late
+    # bucket shifts the trend window of its 24 neighbors and the
+    # global seasonal means), so the max-version drain needs no
+    # retraction sentinel: versions are always non-empty supersets
+    return pd.DataFrame(
+        {
+            "metric_name": [metric] * len(rows),
+            "bucket": pd.array([r[0] for r in rows], dtype="Int64"),
+            "v": pd.array([r[1] for r in rows], dtype="Int64"),
+            "trend_sum25": pd.array([r[2] for r in rows], dtype="Int64"),
+            "n_win": pd.array([r[3] for r in rows], dtype="Int64"),
+            "detr25": pd.array([r[4] for r in rows], dtype="Int64"),
+            "hod": pd.array([r[5] for r in rows], dtype="Int64"),
+            "seasonal": pd.array([r[6] for r in rows], dtype="Float64"),
+            "version": [version] * len(rows),
+        }
+    )
 
 
 def streaming_seasonal(stream: DataFrame) -> DataFrame:
@@ -2463,17 +2230,8 @@ def streaming_seasonal(stream: DataFrame) -> DataFrame:
     bucket sums as every family member; drained rows gate on the batch
     `metric_seasonal_decompose` oracle verbatim.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_seasonal_fn(),
-        outputStructType=SEASONAL_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_seasonal, SEASONAL_OUTPUT_SCHEMA
     )
 
 
@@ -2541,47 +2299,24 @@ def autoperiod_from_series(buckets: list[int], sums: list[int]):
     return (d_lag, d_acf, s_lag, s_acf, is_daily)
 
 
-def make_autoperiod_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        row = autoperiod_from_series(buckets, sums)
-        if row is None:
-            # no qualifying lag yet; the series only grows, so once a
-            # version emits, every later version emits too — the
-            # max-version drain never resurrects a stale row
-            return
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "dominant_lag": pd.array([row[0]], dtype="Int64"),
-                "dominant_acf": pd.array([row[1]], dtype="Float64"),
-                "second_lag": pd.array([row[2]], dtype="Int64"),
-                "second_acf": pd.array([row[3]], dtype="Float64"),
-                "is_daily": pd.array([row[4]], dtype="boolean"),
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_autoperiod(metric, buckets, sums, version):
+    row = autoperiod_from_series(buckets, sums)
+    if row is None:
+        # no qualifying lag yet; the series only grows, so once a
+        # version emits, every later version emits too — the
+        # max-version drain never resurrects a stale row
+        return None
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "dominant_lag": pd.array([row[0]], dtype="Int64"),
+            "dominant_acf": pd.array([row[1]], dtype="Float64"),
+            "second_lag": pd.array([row[2]], dtype="Int64"),
+            "second_acf": pd.array([row[3]], dtype="Float64"),
+            "is_daily": pd.array([row[4]], dtype="boolean"),
+            "version": [version],
+        }
+    )
 
 
 def streaming_autoperiod(stream: DataFrame) -> DataFrame:
@@ -2592,17 +2327,8 @@ def streaming_autoperiod(stream: DataFrame) -> DataFrame:
     the metric's one report row and the drain keeps the max version.
     Gated on the batch `metric_autoperiod` oracle verbatim.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_autoperiod_fn(),
-        outputStructType=AUTOPERIOD_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_autoperiod, AUTOPERIOD_OUTPUT_SCHEMA
     )
 
 
@@ -2657,45 +2383,22 @@ def winsorize_from_series(buckets: list[int], sums: list[int]):
     )
 
 
-def make_winsorize_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        r = winsorize_from_series(buckets, sums)
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "n_buckets": pd.array([r[0]], dtype="Int64"),
-                "p05": pd.array([r[1]], dtype="Int64"),
-                "p95": pd.array([r[2]], dtype="Int64"),
-                "n_clip_low": pd.array([r[3]], dtype="Int64"),
-                "n_clip_high": pd.array([r[4]], dtype="Int64"),
-                "sum_raw": pd.array([r[5]], dtype="Int64"),
-                "sum_winsor": pd.array([r[6]], dtype="Int64"),
-                "winsor_mean": pd.array([r[7]], dtype="Float64"),
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_winsorize(metric, buckets, sums, version):
+    r = winsorize_from_series(buckets, sums)
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "n_buckets": pd.array([r[0]], dtype="Int64"),
+            "p05": pd.array([r[1]], dtype="Int64"),
+            "p95": pd.array([r[2]], dtype="Int64"),
+            "n_clip_low": pd.array([r[3]], dtype="Int64"),
+            "n_clip_high": pd.array([r[4]], dtype="Int64"),
+            "sum_raw": pd.array([r[5]], dtype="Int64"),
+            "sum_winsor": pd.array([r[6]], dtype="Int64"),
+            "winsor_mean": pd.array([r[7]], dtype="Float64"),
+            "version": [version],
+        }
+    )
 
 
 def streaming_winsorize(stream: DataFrame) -> DataFrame:
@@ -2705,17 +2408,8 @@ def streaming_winsorize(stream: DataFrame) -> DataFrame:
     the metric's one report row and the drain keeps the max version.
     Gated on the batch `metric_winsorize` oracle verbatim.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_winsorize_fn(),
-        outputStructType=WINSOR_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_winsorize, WINSOR_OUTPUT_SCHEMA
     )
 
 
@@ -2807,48 +2501,25 @@ def range_rate_from_series(buckets: list[int], sums: list[int]):
     return out
 
 
-def make_range_rate_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        rows = range_rate_from_series(buckets, sums)
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric] * len(rows),
-                "win": pd.array([r[0] for r in rows], dtype="Int64"),
-                "n_samples": pd.array([r[1] for r in rows], dtype="Int64"),
-                "first_bucket": pd.array([r[2] for r in rows], dtype="Int64"),
-                "last_bucket": pd.array([r[3] for r in rows], dtype="Int64"),
-                "counter_first": pd.array([r[4] for r in rows], dtype="Int64"),
-                "counter_last": pd.array([r[5] for r in rows], dtype="Int64"),
-                "n_resets": pd.array([r[6] for r in rows], dtype="Int64"),
-                "increase": pd.array([r[7] for r in rows], dtype="Int64"),
-                "rate_per_hour": pd.array(
-                    [r[8] for r in rows], dtype="Float64"
-                ),
-                "version": [version] * len(rows),
-            }
-        )
-
-    return fn
+def emit_range_rate(metric, buckets, sums, version):
+    rows = range_rate_from_series(buckets, sums)
+    return pd.DataFrame(
+        {
+            "metric_name": [metric] * len(rows),
+            "win": pd.array([r[0] for r in rows], dtype="Int64"),
+            "n_samples": pd.array([r[1] for r in rows], dtype="Int64"),
+            "first_bucket": pd.array([r[2] for r in rows], dtype="Int64"),
+            "last_bucket": pd.array([r[3] for r in rows], dtype="Int64"),
+            "counter_first": pd.array([r[4] for r in rows], dtype="Int64"),
+            "counter_last": pd.array([r[5] for r in rows], dtype="Int64"),
+            "n_resets": pd.array([r[6] for r in rows], dtype="Int64"),
+            "increase": pd.array([r[7] for r in rows], dtype="Int64"),
+            "rate_per_hour": pd.array(
+                [r[8] for r in rows], dtype="Float64"
+            ),
+            "version": [version] * len(rows),
+        }
+    )
 
 
 def streaming_range_rate(stream: DataFrame) -> DataFrame:
@@ -2860,17 +2531,8 @@ def streaming_range_rate(stream: DataFrame) -> DataFrame:
     supersets; the drain keeps the max version).  Gated on the batch
     `metric_range_rate` oracle verbatim.
     Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_range_rate_fn(),
-        outputStructType=RANGE_RATE_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return bucket_series_stream(
+        stream, "metric_name", emit_range_rate, RANGE_RATE_OUTPUT_SCHEMA
     )
 
 
@@ -2962,47 +2624,24 @@ def forecast_backtest_from_series(
     )
 
 
-def make_forecast_backtest_fn(alpha: float, beta: float):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        metric = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        res = forecast_backtest_from_series(sums, alpha, beta)
-        if res is None:
-            return
-        n_train, n_test, l, b, mae_h, mae_n, imp = res
-        yield pd.DataFrame(
-            {
-                "metric_name": [metric],
-                "n_train": pd.Series([n_train], dtype="int32"),
-                "n_test": pd.Series([n_test], dtype="int32"),
-                "level": [l],
-                "trend": [b],
-                "mae_holt_cents": pd.Series([mae_h], dtype="int64"),
-                "mae_naive_cents": pd.Series([mae_n], dtype="int64"),
-                "improvement_ppm": pd.Series([imp], dtype="int64"),
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_forecast_backtest(metric, buckets, sums, version, *, alpha, beta):
+    res = forecast_backtest_from_series(sums, alpha, beta)
+    if res is None:
+        return None
+    n_train, n_test, l, b, mae_h, mae_n, imp = res
+    return pd.DataFrame(
+        {
+            "metric_name": [metric],
+            "n_train": pd.Series([n_train], dtype="int32"),
+            "n_test": pd.Series([n_test], dtype="int32"),
+            "level": [l],
+            "trend": [b],
+            "mae_holt_cents": pd.Series([mae_h], dtype="int64"),
+            "mae_naive_cents": pd.Series([mae_n], dtype="int64"),
+            "improvement_ppm": pd.Series([imp], dtype="int64"),
+            "version": [version],
+        }
+    )
 
 
 def streaming_forecast_backtest(
@@ -3018,17 +2657,9 @@ def streaming_forecast_backtest(
     itself, so no partial fold survives out-of-order delivery.  Drained
     max-version rows gate on the batch `metric_forecast_backtest`
     oracle verbatim.  Expects (metric_name, bucket, v)."""
-    keyed = stream.select(
-        F.col("metric_name").cast("string").alias("metric_name"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("metric_name").applyInPandasWithState(
-        make_forecast_backtest_fn(alpha, beta),
-        outputStructType=FORECAST_BT_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    emit = partial(emit_forecast_backtest, alpha=alpha, beta=beta)
+    return bucket_series_stream(
+        stream, "metric_name", emit, FORECAST_BT_OUTPUT_SCHEMA
     )
 
 
@@ -3068,44 +2699,21 @@ def hhi_from_series(sums: list[int]) -> tuple | None:
     return (len(sums), tot, hhi, band)
 
 
-def make_hhi_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        nation = str(key[0])
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        res = hhi_from_series(sums)
-        if res is None:
-            return
-        n_supp, tot, hhi, band = res
-        yield pd.DataFrame(
-            {
-                "nation": [nation],
-                "n_suppliers": pd.Series([n_supp], dtype="int64"),
-                "revenue_cents": pd.Series([tot], dtype="int64"),
-                "hhi": pd.Series([hhi], dtype="int64"),
-                "band": [band],
-                "version": [version],
-            }
-        )
-
-    return fn
+def emit_hhi(nation, buckets, sums, version):
+    res = hhi_from_series(sums)
+    if res is None:
+        return None
+    n_supp, tot, hhi, band = res
+    return pd.DataFrame(
+        {
+            "nation": [nation],
+            "n_suppliers": pd.Series([n_supp], dtype="int64"),
+            "revenue_cents": pd.Series([tot], dtype="int64"),
+            "hhi": pd.Series([hhi], dtype="int64"),
+            "band": [band],
+            "version": [version],
+        }
+    )
 
 
 def streaming_supplier_hhi(stream: DataFrame) -> DataFrame:
@@ -3120,18 +2728,7 @@ def streaming_supplier_hhi(stream: DataFrame) -> DataFrame:
     no incremental HHI survives).  Drained max-version rows gate on
     the batch `nation_supplier_hhi` oracle verbatim.
     Expects (nation, bucket=suppkey, v=cents)."""
-    keyed = stream.select(
-        F.col("nation").cast("string").alias("nation"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("v").cast("long").alias("v"),
-    )
-    return keyed.groupBy("nation").applyInPandasWithState(
-        make_hhi_fn(),
-        outputStructType=HHI_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return bucket_series_stream(stream, "nation", emit_hhi, HHI_OUTPUT_SCHEMA)
 
 
 # ---------- T46: streaming post-event dwell grid (A110 served live) -------

@@ -18,3 +18,38 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+class FakeState:
+    """Stand-in for pyspark's ``GroupState`` so a stateful group function
+    can be driven batch by batch without Spark.  ``wm_ms`` is the event-
+    time watermark the evict-mode functions read; ``timeout_ms`` records
+    the last timeout they arm (Spark requires it past the watermark)."""
+
+    def __init__(self, wm_ms=0):
+        self.exists = False
+        self._v = None
+        self.wm_ms = wm_ms
+        self.hasTimedOut = False
+        self.timeout_ms = None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+        self.exists = True
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ms):
+        assert ms > self.wm_ms  # Spark's contract
+        self.timeout_ms = ms
+
+
+@pytest.fixture
+def fake_state():
+    """The :class:`FakeState` class, for tests to instantiate per key."""
+    return FakeState

@@ -240,31 +240,19 @@ def test_bollinger_from_series_matches_bruteforce():
         assert bollinger_from_series(buckets, ys, w, k) == ref, (ys, w, k)
 
 
-def test_bollinger_fn_retracts_via_sentinel():
+def test_bollinger_fn_retracts_via_sentinel(fake_state):
     """A late EARLY bucket that re-bases the window must retract the
     earlier breakout: the later version emits the NULL-hour sentinel so
     the max-version drain supersedes the stale breakout rows."""
     import pandas as pd
 
     from project_obsidian_core_spark.streaming.sequence_state import (
-        make_bollinger_fn,
+        bucket_series_fn,
+        emit_bollinger,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    fn = make_bollinger_fn()
-    state = FakeState()
+    fn = bucket_series_fn(emit_bollinger)
+    state = fake_state()
     # batch 1: 24 flat hours then one blowout -> breakout at hour 124
     b1 = pd.DataFrame(
         {

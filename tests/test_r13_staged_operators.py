@@ -710,7 +710,7 @@ def test_vocab_coverage_invariants(spark):
         prev = r["coverage_ppm"]
 
 
-def test_kmv_fold_merges_across_batches():
+def test_kmv_fold_merges_across_batches(fake_state):
     """The T34 mergeability contract without a cluster: k-minima folded
     over arbitrary micro-batch splits must equal the one-shot fold, and
     state never exceeds k entries."""
@@ -722,19 +722,6 @@ def test_kmv_fold_merges_across_batches():
         make_kmv_fn,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
     k = 8
     hashes = [
         int(hashlib.md5(f"kmv:{u}".encode()).hexdigest()[:15], 16)
@@ -744,13 +731,13 @@ def test_kmv_fold_merges_across_batches():
 
     # one-shot
     fn = make_kmv_fn(k)
-    s1 = FakeState()
+    s1 = fake_state()
     out = list(fn(("t",), iter([pd.DataFrame({"h": hashes})]), s1))
     assert list(s1.get[0]) == want
     assert out[-1]["kth_hash"][0] == want[k - 1]
 
     # three uneven batches, duplicates across batches
-    s2 = FakeState()
+    s2 = fake_state()
     chunks = [hashes[:10], hashes[5:60], hashes[50:]]
     for ch in chunks:
         list(fn(("t",), iter([pd.DataFrame({"h": ch})]), s2))
@@ -758,7 +745,7 @@ def test_kmv_fold_merges_across_batches():
     assert list(s2.get[0]) == want
 
     # sub-k group: state IS the full distinct set, kth is NULL
-    s3 = FakeState()
+    s3 = fake_state()
     out3 = list(fn(("t",), iter([pd.DataFrame({"h": hashes[:5]})]), s3))
     assert out3[0]["n_state"][0] == len(set(hashes[:5]))
     assert pd.isna(out3[0]["kth_hash"][0])
@@ -889,7 +876,7 @@ def test_trade_similarity_invariants(spark):
             assert sim[(b, a)] == c
 
 
-def test_lasttouch_fold_semantics():
+def test_lasttouch_fold_semantics(fake_state):
     """FakeState drive of the T35 fold: ordered batches, tie-break by
     event_id at equal ts, lookback expiry, direct fallback, exactly-once
     purchase emission across batches."""
@@ -899,21 +886,8 @@ def test_lasttouch_fold_semantics():
         make_lasttouch_fn,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
     fn = make_lasttouch_fn(lookback_us=100)
-    state = FakeState()
+    state = fake_state()
 
     def drive(rows):
         pdf = pd.DataFrame(
@@ -1151,32 +1125,20 @@ def test_stratified_exact_invariants(spark):
     assert again == {r["doc_id"] for r in rows}
 
 
-def test_spc_fold_retracts_on_late_bucket():
+def test_spc_fold_retracts_on_late_bucket(fake_state):
     """The T36 revision contract: a late bucket that moves the center
     line retracts a previously-emitted violation, and the sentinel
     carries the superseding version."""
     import pandas as pd
 
     from project_obsidian_core_spark.streaming.sequence_state import (
-        make_spc_fn,
+        bucket_series_fn,
+        emit_spc,
         spc_from_series,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    fn = make_spc_fn()
-    state = FakeState()
+    fn = bucket_series_fn(emit_spc)
+    state = fake_state()
     # batch 1: 30 flat hours + one blowout -> rule-1 violation
     b1 = pd.DataFrame(
         {

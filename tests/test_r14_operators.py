@@ -9,20 +9,6 @@ import pandas as pd
 import pytest
 
 
-class FakeState:
-    def __init__(self):
-        self.exists = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-
 def _decompose_reference(buckets, sums):
     """Independent recompute of the A84 formulas (no shared code)."""
     n = len(buckets)
@@ -64,18 +50,19 @@ def test_seasonal_from_series_matches_reference_formulas():
     assert rows[12][4] is not None and rows[47][4] is not None
 
 
-def test_seasonal_fold_late_bucket_revises_neighbors_and_means():
+def test_seasonal_fold_late_bucket_revises_neighbors_and_means(fake_state):
     """The T37 revision contract: a late bucket shifts the positional
     trend window of its 24 neighbors AND the global per-hod seasonal
     means — the new version re-emits the FULL decomposition and every
     re-emitted row reflects the shifted statistics."""
     from project_obsidian_core_spark.streaming.sequence_state import (
-        make_seasonal_fn,
+        bucket_series_fn,
+        emit_seasonal,
         seasonal_from_series,
     )
 
-    fn = make_seasonal_fn()
-    state = FakeState()
+    fn = bucket_series_fn(emit_seasonal)
+    state = fake_state()
     # batch 1: hours 100..139 except 120 (one hole mid-series)
     hrs = [h for h in range(100, 140) if h != 120]
     b1 = pd.DataFrame({"bucket": hrs, "v": [100 + h for h in hrs]})
@@ -110,13 +97,14 @@ def test_seasonal_fold_late_bucket_revises_neighbors_and_means():
     ]
 
 
-def test_seasonal_fold_empty_batch_emits_nothing():
+def test_seasonal_fold_empty_batch_emits_nothing(fake_state):
     from project_obsidian_core_spark.streaming.sequence_state import (
-        make_seasonal_fn,
+        bucket_series_fn,
+        emit_seasonal,
     )
 
-    fn = make_seasonal_fn()
-    state = FakeState()
+    fn = bucket_series_fn(emit_seasonal)
+    state = fake_state()
     out = list(fn(("m",), iter([pd.DataFrame({"bucket": [], "v": []})]), state))
     assert out == []
     assert not state.exists
@@ -152,17 +140,18 @@ def test_autoperiod_from_series_matches_reference():
     assert d_acf == float(n * sab - sa * sb) / math.sqrt(float(dx) * float(dy))
 
 
-def test_autoperiod_fold_short_series_emits_nothing_then_reports():
+def test_autoperiod_fold_short_series_emits_nothing_then_reports(fake_state):
     """No qualifying lag -> no emission; once lags exist every version
     emits (the series only grows, so the max-version drain is safe)."""
     import pandas as pd
 
     from project_obsidian_core_spark.streaming.sequence_state import (
-        make_autoperiod_fn,
+        bucket_series_fn,
+        emit_autoperiod,
     )
 
-    fn = make_autoperiod_fn()
-    state = FakeState()
+    fn = bucket_series_fn(emit_autoperiod)
+    state = fake_state()
     out1 = list(fn(("m",), iter([pd.DataFrame({"bucket": [10], "v": [5]})]), state))
     assert out1 == []  # single bucket: no lag-2..36 pair
     b2 = pd.DataFrame({"bucket": list(range(11, 60)), "v": [100 * i for i in range(49)]})

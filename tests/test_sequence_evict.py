@@ -540,7 +540,7 @@ def test_funnel_evict_finals_plus_live_equal_batch(spark, tmp_path):
     assert set(fusers) == {1, 2}  # expired anchors finalize, others live
 
 
-def test_funnel_evict_state_bound_direct():
+def test_funnel_evict_state_bound_direct(fake_state):
     """State-bound pin via a fake GroupState: finalized users keep only
     the tombstone (empty arrays); anchorless users' below-watermark rows
     are pruned; a frozen unexpired anchor keeps only its window slice."""
@@ -550,33 +550,10 @@ def test_funnel_evict_state_bound_direct():
         make_funnel_fn,
     )
 
-    class FakeState:
-        def __init__(self, wm_ms=0):
-            self.exists = False
-            self._v = None
-            self.wm_ms = wm_ms
-            self.hasTimedOut = False
-            self.timeout_ms = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def setTimeoutTimestamp(self, ms):
-            assert ms > self.wm_ms  # Spark's contract
-            self.timeout_ms = ms
-
     fn = make_funnel_fn(_F_STAGES, _F_WITHIN_US, evict=True)
 
     # anchorless user: 100 noise rows below the watermark all prune away
-    st = FakeState(wm_ms=(BASE_US + 3_600_000_000) // 1000)
+    st = fake_state(wm_ms=(BASE_US + 3_600_000_000) // 1000)
     b = pd.DataFrame(
         {
             "ts_us": [BASE_US + i * 1_000 for i in range(100)],
@@ -590,7 +567,7 @@ def test_funnel_evict_state_bound_direct():
     assert ts == [] and not done
 
     # frozen unexpired anchor: only the [anchor, anchor+within] slice stays
-    st2 = FakeState(wm_ms=(BASE_US + 120_000_000) // 1000)
+    st2 = fake_state(wm_ms=(BASE_US + 120_000_000) // 1000)
     b2 = pd.DataFrame(
         {
             "ts_us": [
@@ -609,7 +586,7 @@ def test_funnel_evict_state_bound_direct():
     assert ts2 == [BASE_US, BASE_US + 60_000_000] and not done2
 
     # expired anchor: final emit + tombstone; later rows emit NOTHING
-    st3 = FakeState(wm_ms=(BASE_US + _F_WITHIN_US + 120_000_000) // 1000)
+    st3 = fake_state(wm_ms=(BASE_US + _F_WITHIN_US + 120_000_000) // 1000)
     out3 = list(fn((6,), iter([b2]), st3))
     assert bool(out3[0]["is_final"][0]) and int(out3[0]["max_stage"][0]) == 2
     ts3, _, _, _, done3 = st3.get
