@@ -2803,11 +2803,15 @@ def events_markov_stationary(
     # so the values are bit-identical (oracle-gated at both SFs).  The
     # final inner joins restrict output to from∩to types, mirrored by the
     # `keep` filter.  The corpus stage (lead window → matrix) is unchanged.
+    # A global aggregate over an empty matrix still yields one row whose
+    # `ms` is empty; `sequence(1, size(un))` would then count down to
+    # [1, 0] and the `div size(fts)` seed divide by zero, so that row is
+    # dropped (no transitions → no stationary rows, as in the oracle).
     g = matrix.groupBy().agg(
         F.expr(
             "sort_array(collect_list(struct(from_type, to_type, c, r)))"
         ).alias("ms")
-    )
+    ).filter("size(ms) > 0")
 
     def bind(val: str, name: str, body: str) -> str:
         return f"element_at(transform(array({val}), {name} -> {body}), 1)"

@@ -15,18 +15,20 @@ A38 output, pinned by a shuffled multi-batch replay test.
 
 State bound: one (type, ts, id) triple per event type the user ever
 used — the same |users|x|types| bound as the batch operator's output,
-independent of event volume.
+independent of event volume.  The fold runs on the versioned-fold kernel
+(`streaming/versioned_fold.py`), which owns state, version and emission.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from project_obsidian_core_spark.streaming.versioned_fold import (
+    versioned_fold_stream,
+)
 
 STATE_SCHEMA = T.StructType(
     [
@@ -63,47 +65,32 @@ def fold_first_seen(
     return seen
 
 
-def _discovery_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    user = int(key[0])
-    if state.exists:
-        types_l, ts_l, eid_l, version = state.get
-        seen = {
-            t: (int(ts), int(e)) for t, ts, e in zip(types_l, ts_l, eid_l)
-        }
-    else:
-        seen, version = {}, 0
-    absorbed = 0
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        absorbed += len(pdf)
-        fold_first_seen(
-            seen,
-            zip(pdf["event_type"], pdf["ts_us"], pdf["event_id"]),
-        )
-    if not absorbed:
-        return
-    version += absorbed
-    types = list(seen)
-    state.update(
-        (
-            types,
-            [seen[t][0] for t in types],
-            [seen[t][1] for t in types],
-            version,
-        )
+def _fold_discovery(acc, pdf: pd.DataFrame):
+    seen = {t: (ts, e) for t, ts, e in zip(*acc)} if acc else {}
+    fold_first_seen(
+        seen,
+        zip(
+            pdf["event_type"].tolist(),
+            pdf["ts_us"].tolist(),
+            pdf["event_id"].tolist(),
+        ),
     )
-    ordered = sorted(seen.items(), key=lambda kv: kv[1])
-    yield pd.DataFrame(
+    types = list(seen)
+    return types, [seen[t][0] for t in types], [seen[t][1] for t in types]
+
+
+def _emit_timeline(user, acc, version):
+    # by first (ts, event_id); the sort is stable over the fold's order
+    ordered = sorted(zip(*acc), key=lambda r: (r[1], r[2]))
+    n = len(ordered)
+    return pd.DataFrame(
         {
-            "user_id": [user] * len(ordered),
-            "event_type": [t for t, _ in ordered],
-            "first_ts_us": [v[0] for _, v in ordered],
-            "first_event_id": [v[1] for _, v in ordered],
-            "discovery_rank": list(range(1, len(ordered) + 1)),
-            "version": [version] * len(ordered),
+            "user_id": [int(user)] * n,
+            "event_type": [t for t, _, _ in ordered],
+            "first_ts_us": [ts for _, ts, _ in ordered],
+            "first_event_id": [e for _, _, e in ordered],
+            "discovery_rank": list(range(1, n + 1)),
+            "version": [version] * n,
         }
     )
 
@@ -117,10 +104,7 @@ def streaming_discovery(stream: DataFrame) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
     )
-    return rows.groupBy("user_id").applyInPandasWithState(
-        _discovery_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        rows, "user_id", _fold_discovery, _emit_timeline,
+        STATE_SCHEMA, OUTPUT_SCHEMA,
     )

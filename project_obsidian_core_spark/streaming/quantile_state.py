@@ -1,5 +1,6 @@
 """T18: streaming quantiles over unbounded value streams — a
-deterministic KLL-style sketch in `applyInPandasWithState`.
+deterministic KLL-style sketch folded by the versioned-fold kernel
+(`streaming/versioned_fold.py`, which owns state, version and emission).
 
 `qan_latency_quantiles` computes exact per-key percentiles by sorting —
 fine in batch, impossible on a stream whose history cannot be replayed.
@@ -44,14 +45,17 @@ in the exact regime.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 from math import ceil
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from project_obsidian_core_spark.streaming.versioned_fold import (
+    versioned_fold_stream,
+)
 
 #: default per-level capacity (level 0 holds this many raw values).
 QUANTILE_CAPACITY = 4096
@@ -115,19 +119,8 @@ class KllSketch:
     def quantile(self, q: float) -> int:
         """Smallest value whose cumulative weight reaches ceil(q·n) —
         the lower order statistic when no compaction has fired."""
-        assert self.n_total > 0
-        # ceil over the SAME double product the SQL oracle computes
-        # (math.ceil(q*n) == SQL ceil(q*n) bit-for-bit on IEEE doubles)
-        target = max(1, ceil(q * self.n_total))
-        weighted = sorted(
-            (v, 1 << i) for i, buf in enumerate(self.buffers) for v in buf
-        )
-        cum = 0
-        for v, w in weighted:
-            cum += w
-            if cum >= target:
-                return v
-        return weighted[-1][0]
+        values, levels, *_ = self.dump()
+        return _weighted_quantiles(values, levels, self.n_total, (q,))[0]
 
     # ---- state (de)serialisation over flat parallel arrays ----
     def dump(self) -> tuple[list[int], list[int], list[int], int, int]:
@@ -152,39 +145,44 @@ class KllSketch:
         return s
 
 
-def make_quantile_fn(capacity: int, qs: tuple[float, ...]):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        series = str(key[0])
-        if state.exists:
-            values, levels, toggles, n_total, err, version = state.get
-            sketch = KllSketch.load(capacity, values, levels, toggles, n_total, err)
-        else:
-            sketch, version = KllSketch(capacity), 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            sketch.add_many(pdf["v"].tolist())
-        if not absorbed:
-            return
-        version += absorbed
-        values, levels, toggles, n_total, err = sketch.dump()
-        state.update((values, levels, toggles, n_total, err, version))
-        yield pd.DataFrame(
-            {
-                "series": [series] * len(qs),
-                "q_pct": [int(q * 100) for q in qs],
-                "value": [sketch.quantile(q) for q in qs],
-                "n": [n_total] * len(qs),
-                "err_bound": [err] * len(qs),
-                "version": [version] * len(qs),
-            }
-        )
+def _weighted_quantiles(values, levels, n_total: int, qs) -> list[int]:
+    """Per q, the smallest value whose cumulative weight (2^level per
+    item) reaches ceil(q·n), over the flat (values, levels) arrays."""
+    assert n_total > 0
+    weighted = sorted(zip(values, [1 << lv for lv in levels]))
+    out = []
+    for q in qs:
+        # ceil over the SAME double product the SQL oracle computes
+        # (math.ceil(q*n) == SQL ceil(q*n) bit-for-bit on IEEE doubles)
+        target = max(1, ceil(q * n_total))
+        cum = 0
+        for v, w in weighted:
+            cum += w
+            if cum >= target:
+                break
+        out.append(v)
+    return out
 
-    return fn
+
+def _fold_sketch(acc, pdf: pd.DataFrame, *, capacity: int):
+    sketch = KllSketch.load(capacity, *acc) if acc else KllSketch(capacity)
+    sketch.add_many(pdf["v"].tolist())
+    return sketch.dump()
+
+
+def _emit_quantiles(series, acc, version, *, qs: tuple[float, ...]):
+    values, levels, _, n_total, err = acc
+    n = len(qs)
+    return pd.DataFrame(
+        {
+            "series": [str(series)] * n,
+            "q_pct": [int(q * 100) for q in qs],
+            "value": _weighted_quantiles(values, levels, n_total, qs),
+            "n": [n_total] * n,
+            "err_bound": [err] * n,
+            "version": [version] * n,
+        }
+    )
 
 
 def streaming_quantiles(
@@ -201,10 +199,8 @@ def streaming_quantiles(
         F.col(series_col).cast("string").alias("series"),
         F.col(value_col).cast("long").alias("v"),
     )
-    return keyed.groupBy("series").applyInPandasWithState(
-        make_quantile_fn(capacity, qs),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        keyed, "series",
+        partial(_fold_sketch, capacity=capacity), partial(_emit_quantiles, qs=qs),
+        STATE_SCHEMA, OUTPUT_SCHEMA,
     )

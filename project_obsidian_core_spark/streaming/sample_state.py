@@ -17,7 +17,8 @@ matter how the stream is sliced.
 State per group: exactly k (prio, id, weight) triples (less while the
 group is filling) — O(k) forever.  Emission: superseding versioned
 re-emissions of the current sample per touched group (islands/topk
-contract, max-version read).
+contract, max-version read) — the fold runs on the versioned-fold kernel
+(`streaming/versioned_fold.py`), which owns state, version and emission.
 
 The priority is computed JVM-side BEFORE the state operator (a codegen
 expression on the stream), so the python fold only merges sorted
@@ -26,15 +27,17 @@ triples — no hashing in python, no drift risk against the batch twin.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from project_obsidian_core_spark.datapipe.text import shared_hash60
+from project_obsidian_core_spark.streaming.versioned_fold import (
+    versioned_fold_stream,
+)
 
 STATE_SCHEMA = T.StructType(
     [
@@ -65,52 +68,32 @@ def fold_topk(sample: list[tuple[int, int, int]], k: int, batch) -> list:
     return sample
 
 
-def make_sample_fn(k: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        grp = str(key[0])
-        if state.exists:
-            prios, ids, weights, version = state.get
-            sample = list(zip(map(int, prios), map(int, ids), map(int, weights)))
-        else:
-            sample, version = [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            fold_topk(
-                sample,
-                k,
-                zip(
-                    pdf["prio"].astype(int),
-                    pdf["id"].astype(int),
-                    pdf["weight"].astype(int),
-                ),
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update(
-            (
-                [t[0] for t in sample],
-                [t[1] for t in sample],
-                [t[2] for t in sample],
-                version,
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "grp": [grp] * len(sample),
-                "id": [t[1] for t in sample],
-                "weight": [t[2] for t in sample],
-                "prio": [t[0] for t in sample],
-                "version": [version] * len(sample),
-            }
-        )
+def _fold_sample(acc, pdf: pd.DataFrame, *, k: int):
+    sample = list(zip(*acc)) if acc else []
+    fold_topk(
+        sample,
+        k,
+        zip(*(pdf[c].astype(int).tolist() for c in ("prio", "id", "weight"))),
+    )
+    return (
+        [t[0] for t in sample],
+        [t[1] for t in sample],
+        [t[2] for t in sample],
+    )
 
-    return fn
+
+def _emit_sample(grp, acc, version):
+    prios, ids, weights = acc
+    n = len(ids)
+    return pd.DataFrame(
+        {
+            "grp": [str(grp)] * n,
+            "id": ids,
+            "weight": weights,
+            "prio": prios,
+            "version": [version] * n,
+        }
+    )
 
 
 def streaming_priority_sample(
@@ -137,10 +120,7 @@ def streaming_priority_sample(
             F.expr("_u DIV _w").alias("prio"),
         )
     )
-    return keyed.groupBy("grp").applyInPandasWithState(
-        make_sample_fn(k),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        keyed, "grp", partial(_fold_sample, k=k), _emit_sample,
+        STATE_SCHEMA, OUTPUT_SCHEMA,
     )

@@ -47,6 +47,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from project_obsidian_core_spark.streaming.versioned_fold import (
+    versioned_fold_fn,
+    versioned_fold_stream,
+)
+
 # --- per-group Python-boundary helpers (guide §4, r17 optimization) -------
 # applyInPandasWithState calls the state fn once per key per micro-batch
 # (~1.5k calls/batch here), so per-call constant costs dominate the replay
@@ -764,79 +769,43 @@ def fold_bucket_sums(
     return [b for b, _ in items], [s for _, s in items]
 
 
-# ---------------- the bucket-series kernel (T23 and its 14 siblings) ------
+# ---------------- the bucket-series family (T23 and its 14 siblings) -----
 #: ``emit(key, buckets, sums, version)`` -> one output frame, or None
 Emit = Callable[[str, list, list, int], "pd.DataFrame | None"]
 
 
+def _fold_bucket_frame(acc, pdf: pd.DataFrame):
+    return fold_bucket_sums(
+        *(acc or ((), ())), zip(pdf["bucket"].tolist(), pdf["v"].tolist())
+    )
+
+
+def _bucket_emit(emit: Emit):
+    return lambda key, acc, version: emit(str(key), *acc, version)
+
+
 def bucket_series_fn(emit: Emit):
-    """The one group function of the bucket-series family.
-
-    State is ``(buckets, sums, version)``: exact-int per-bucket sums,
-    folded by :func:`fold_bucket_sums` (integer addition — commutative,
-    so any micro-batch arrival order rebuilds the identical series), and
-    ``version`` = rows absorbed so far.  Each non-empty batch folds its
-    rows, bumps the version and calls ``emit`` once with the whole
-    bucket-ordered series; an empty batch emits nothing and touches no
-    state.  ``emit`` re-derives the operator's full answer from the
-    series (a late bucket can revise any earlier row) and returns it as
-    one frame stamped with ``version``, or None for no row yet.
-
-    Readers take the max-version rows per key.  An operator whose answer
-    can shrink to zero rows (a late bucket RETRACTS every hit) must still
-    emit one sentinel row with NULL payload columns carrying the new
-    version — an empty emission could never supersede the older rows —
-    and its drain drops the sentinel.  An operator whose answer only
-    grows, or is always exactly one row once it exists, needs none."""
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buckets, sums, version = state.get
-            buckets, sums = list(buckets), list(sums)
-        else:
-            buckets, sums, version = [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            buckets, sums = fold_bucket_sums(
-                buckets, sums, zip(pdf["bucket"].tolist(), pdf["v"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((buckets, sums, version))
-        out = emit(str(key[0]), buckets, sums, version)
-        if out is not None:
-            yield out
-
-    return fn
+    """The group function of the bucket-series family: the versioned fold
+    (``streaming/versioned_fold.py``) over ``(buckets, sums, version)``
+    with :func:`fold_bucket_sums` as the fold.  ``emit`` gets the whole
+    bucket-ordered series and re-derives the operator's full answer."""
+    return versioned_fold_fn(_fold_bucket_frame, _bucket_emit(emit))
 
 
 def bucket_series_stream(
     stream: DataFrame, key: str, emit: Emit, schema: T.StructType
 ) -> DataFrame:
     """Run ``emit`` over per-``key`` bucket series built from a
-    (key, bucket, v) stream: casts key→string, bucket/v→long, groups by
-    ``key`` and makes the single ``applyInPandasWithState`` call of the
-    family (append mode, no timeout).  The state schema
-    (``EWMA_STATE_SCHEMA``), the grouping key and each operator's output
-    schema are unchanged from the per-operator wrappers this kernel
-    replaced, so replay checkpoints written by them still resume."""
+    (key, bucket, v) stream: casts key→string, bucket/v→long and runs the
+    versioned fold under ``EWMA_STATE_SCHEMA``."""
     keyed = stream.select(
         F.col(key).cast("string").alias(key),
         F.col("bucket").cast("long").alias("bucket"),
         F.col("v").cast("long").alias("v"),
     )
-    return keyed.groupBy(key).applyInPandasWithState(
-        bucket_series_fn(emit),
-        outputStructType=schema,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        keyed, key, _fold_bucket_frame, _bucket_emit(emit),
+        EWMA_STATE_SCHEMA, schema,
     )
 
 
@@ -1793,43 +1762,27 @@ def mannwhitney_from_counts(
     return n_a, n_b, r_a_x2, u_a_x2, tie_term, z
 
 
-def make_mannwhitney_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        etype = str(key[0])
-        if state.exists:
-            vals, da, db, version = state.get
-            vals, da, db = list(vals), list(da), list(db)
-        else:
-            vals, da, db, version = [], [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            vals, da, db = fold_value_counts(
-                vals, da, db, zip(pdf["value"].tolist(), pdf["is_a"].tolist())
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((vals, da, db, version))
-        n_a, n_b, r2, u2, tie, z = mannwhitney_from_counts(vals, da, db)
-        yield pd.DataFrame(
-            {
-                "event_type": [etype],
-                "n_a": [n_a],
-                "n_b": [n_b],
-                "r_a_x2": [r2],
-                "u_a_x2": [u2],
-                "tie_term": [tie],
-                "z": pd.array([z], dtype="float64"),
-                "version": [version],
-            }
-        )
+def _fold_mannwhitney_frame(acc, pdf: pd.DataFrame):
+    return fold_value_counts(
+        *(acc or ((), (), ())),
+        zip(pdf["value"].tolist(), pdf["is_a"].tolist()),
+    )
 
-    return fn
+
+def emit_mannwhitney(etype, acc, version):
+    n_a, n_b, r2, u2, tie, z = mannwhitney_from_counts(*acc)
+    return pd.DataFrame(
+        {
+            "event_type": [str(etype)],
+            "n_a": [n_a],
+            "n_b": [n_b],
+            "r_a_x2": [r2],
+            "u_a_x2": [u2],
+            "tie_term": [tie],
+            "z": pd.array([z], dtype="float64"),
+            "version": [version],
+        }
+    )
 
 
 def streaming_mannwhitney(stream: DataFrame) -> DataFrame:
@@ -1847,12 +1800,9 @@ def streaming_mannwhitney(stream: DataFrame) -> DataFrame:
         F.col("value").cast("double").alias("value"),
         F.col("is_a").cast("boolean").alias("is_a"),
     )
-    return keyed.groupBy("event_type").applyInPandasWithState(
-        make_mannwhitney_fn(),
-        outputStructType=MANNWHITNEY_OUTPUT_SCHEMA,
-        stateStructType=MANNWHITNEY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        keyed, "event_type", _fold_mannwhitney_frame, emit_mannwhitney,
+        MANNWHITNEY_STATE_SCHEMA, MANNWHITNEY_OUTPUT_SCHEMA,
     )
 
 
@@ -1878,51 +1828,32 @@ KMV_OUTPUT_SCHEMA = T.StructType(
 KMV_K = 64
 
 
-def make_kmv_fn(k: int = KMV_K):
-    """Per-key fold keeping the k smallest DISTINCT hashes — the KMV
-    merge is a sorted-unique union truncated at k, which is exactly why
-    the sketch is mergeable: minima(A ∪ B) = trunc_k(minima(A) ∪
-    minima(B)), associative and commutative, so micro-batch order and
-    shard boundaries cannot change the drained state.  State is ≤ k
-    int64s per key FOREVER (the bounded-state contract the exact
-    distinct count cannot offer); when the state holds fewer than k
-    entries it IS the full distinct-hash set and the estimate downstream
-    is exact by definition."""
+def _fold_kmv_frame(acc, pdf: pd.DataFrame, *, k: int):
+    """Keep the k smallest DISTINCT hashes — the KMV merge is a
+    sorted-unique union truncated at k, which is exactly why the sketch
+    is mergeable: minima(A ∪ B) = trunc_k(minima(A) ∪ minima(B)),
+    associative and commutative, so micro-batch order and shard
+    boundaries cannot change the drained state.  State is ≤ k int64s
+    per key FOREVER (the bounded-state contract the exact distinct
+    count cannot offer); when the state holds fewer than k entries it
+    IS the full distinct-hash set and the estimate downstream is exact
+    by definition."""
+    minima = acc[0] if acc else ()
+    return (sorted(set(minima).union(pdf["h"].tolist()))[:k],)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        etype = str(key[0])
-        if state.exists:
-            minima, version = state.get
-            cur = list(minima)
-        else:
-            cur, version = [], 0
-        absorbed = 0
-        incoming: set[int] = set()
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            incoming.update(pdf["h"].tolist())
-        if not absorbed:
-            return
-        merged = sorted(set(cur) | incoming)[:k]
-        version += absorbed
-        state.update((merged, version))
-        yield pd.DataFrame(
-            {
-                "event_type": [etype],
-                "n_state": [len(merged)],
-                "kth_hash": pd.array(
-                    [merged[k - 1] if len(merged) >= k else None],
-                    dtype="Int64",
-                ),
-                "version": [version],
-            }
-        )
 
-    return fn
+def emit_kmv(etype, acc, version, *, k: int):
+    (minima,) = acc
+    return pd.DataFrame(
+        {
+            "event_type": [str(etype)],
+            "n_state": [len(minima)],
+            "kth_hash": pd.array(
+                [minima[k - 1] if len(minima) >= k else None], dtype="Int64"
+            ),
+            "version": [version],
+        }
+    )
 
 
 def streaming_kmv(stream: DataFrame, k: int = KMV_K) -> DataFrame:
@@ -1937,12 +1868,10 @@ def streaming_kmv(stream: DataFrame, k: int = KMV_K) -> DataFrame:
         F.col("event_type").cast("string").alias("event_type"),
         F.col("h").cast("long").alias("h"),
     )
-    return keyed.groupBy("event_type").applyInPandasWithState(
-        make_kmv_fn(k),
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        keyed, "event_type",
+        partial(_fold_kmv_frame, k=k), partial(emit_kmv, k=k),
+        KMV_STATE_SCHEMA, KMV_OUTPUT_SCHEMA,
     )
 
 
@@ -2770,50 +2699,34 @@ def dwells_from_series(
     return grid
 
 
-def make_dwell_fn():
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user = int(key[0])
-        if state.exists:
-            ts, eid, types, version = state.get
-            ts, eid, types = list(ts), list(eid), list(types)
-        else:
-            ts, eid, types, version = [], [], [], 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            absorbed += len(pdf)
-            ts, eid, types = merge_sequence(
-                ts, eid, types,
-                zip(
-                    pdf["ts_us"].tolist(),
-                    pdf["event_id"].tolist(),
-                    pdf["event_type"].tolist(),
-                ),
-            )
-        if not absorbed:
-            return
-        version += absorbed
-        state.update((ts, eid, types, version))
-        grid = dwells_from_series(ts, types)
-        if not grid:
-            return
-        items = sorted(grid.items())
-        n = len(items)
-        yield pd.DataFrame(
-            {
-                "user_id": _full(n, user),
-                "event_type": _obj([k[0] for k, _ in items]),
-                "dwell_s": _i64([k[1] for k, _ in items]),
-                "cnt": _i64([c for _, c in items]),
-                "version": _full(n, version),
-            },
-            copy=False,
-        )
+def _fold_dwell_frame(acc, pdf: pd.DataFrame):
+    return merge_sequence(
+        *(acc or ((), (), ())),
+        zip(
+            pdf["ts_us"].tolist(),
+            pdf["event_id"].tolist(),
+            pdf["event_type"].tolist(),
+        ),
+    )
 
-    return fn
+
+def emit_dwell(user, acc, version):
+    ts, _, types = acc
+    grid = dwells_from_series(ts, types)
+    if not grid:
+        return None
+    items = sorted(grid.items())
+    n = len(items)
+    return pd.DataFrame(
+        {
+            "user_id": _full(n, int(user)),
+            "event_type": _obj([k[0] for k, _ in items]),
+            "dwell_s": _i64([k[1] for k, _ in items]),
+            "cnt": _i64([c for _, c in items]),
+            "version": _full(n, version),
+        },
+        copy=False,
+    )
 
 
 def streaming_dwell_grid(stream: DataFrame) -> DataFrame:
@@ -2833,12 +2746,9 @@ def streaming_dwell_grid(stream: DataFrame) -> DataFrame:
         F.col("event_id").cast("long").alias("event_id"),
         F.col("event_type").cast("string").alias("event_type"),
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_dwell_fn(),
-        outputStructType=DWELL_OUTPUT_SCHEMA,
-        stateStructType=DWELL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        keyed, "user_id", _fold_dwell_frame, emit_dwell,
+        DWELL_STATE_SCHEMA, DWELL_OUTPUT_SCHEMA,
     )
 
 

@@ -19,21 +19,26 @@ strongest known guarantees at this size:
   guarantee holds for any arrival order.
 
 Emission: per batch, each touched shard re-emits its full summary with
-``version`` = rows absorbed so far (superseding contract — read the
-max-version rows per shard, same as the islands operator). State is
+``version`` = non-NULL rows absorbed so far (superseding contract — read
+the max-version rows per shard, same as the islands operator); the fold
+runs on the versioned-fold kernel (`streaming/versioned_fold.py`), which
+owns state, version and emission. State is
 EXACTLY 3·m scalars per shard regardless of stream length — the bound
 that makes this deployable where the exact operator is not.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from project_obsidian_core_spark.streaming.versioned_fold import (
+    versioned_fold_stream,
+)
 
 STATE_SCHEMA = T.StructType(
     [
@@ -75,49 +80,25 @@ def fold_space_saving(
     return summary
 
 
-def make_topk_fn(capacity: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        shard = int(key[0])
-        if state.exists:
-            keys_l, counts_l, errs_l, version = state.get
-            summary = {
-                k: (int(c), int(e))
-                for k, c, e in zip(keys_l, counts_l, errs_l)
-            }
-        else:
-            summary, version = {}, 0
-        absorbed = 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            counts = pdf["key"].value_counts()
-            absorbed += int(counts.sum())
-            fold_space_saving(summary, capacity, counts.items())
-        if not absorbed:
-            return
-        version += absorbed
-        ks = list(summary)
-        state.update(
-            (
-                ks,
-                [summary[k][0] for k in ks],
-                [summary[k][1] for k in ks],
-                version,
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "shard": [shard] * len(ks),
-                "key": ks,
-                "est_count": [summary[k][0] for k in ks],
-                "err_bound": [summary[k][1] for k in ks],
-                "version": [version] * len(ks),
-            }
-        )
+def _fold_summary(acc, pdf: pd.DataFrame, *, capacity: int):
+    summary = {k: (c, e) for k, c, e in zip(*acc)} if acc else {}
+    fold_space_saving(summary, capacity, pdf["key"].value_counts().items())
+    ks = list(summary)
+    return ks, [summary[k][0] for k in ks], [summary[k][1] for k in ks]
 
-    return fn
+
+def _emit_summary(shard, acc, version):
+    ks, ests, errs = acc
+    n = len(ks)
+    return pd.DataFrame(
+        {
+            "shard": [int(shard)] * n,
+            "key": ks,
+            "est_count": ests,
+            "err_bound": errs,
+            "version": [version] * n,
+        }
+    )
 
 
 def streaming_topk(
@@ -134,16 +115,15 @@ def streaming_topk(
     only when key mass is spread; a skewed shard weakens its own bound
     (never the other shards'), so size ``capacity`` for the largest
     shard you expect, not the average."""
-    sharded = stream.select(
+    # NULL keys are not counted (nor are they in ``version``), so they
+    # never reach the fold
+    sharded = stream.filter(F.col(key_col).isNotNull()).select(
         (F.abs(F.xxhash64(F.col(key_col))) % n_shards)
         .cast("int")
         .alias("shard"),
         F.col(key_col).alias("key"),
     )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        make_topk_fn(capacity),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_fold_stream(
+        sharded, "shard", partial(_fold_summary, capacity=capacity),
+        _emit_summary, STATE_SCHEMA, OUTPUT_SCHEMA,
     )

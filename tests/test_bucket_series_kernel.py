@@ -1,11 +1,12 @@
-"""The bucket-series kernel (`streaming/sequence_state.py`): its group-
-function contract over every emitter, and a source pin that keeps it the
-family's only implementation.
+"""The versioned-fold kernel (`streaming/versioned_fold.py`): its group-
+function contract over every operator that runs on it, and source pins
+that keep it the only implementation.
 
-Fifteen stream operators share one state shape — exact-int per-bucket
-sums plus a rows-absorbed ``version`` — and one group function,
-``bucket_series_fn(emit)``; each operator contributes only its ``emit``.
-The contract below is what the max-version drain in
+Twenty-two stream operators share one ``GroupState`` protocol: a state row
+``(*acc, version)`` and one group function, ``versioned_fold_fn(fold,
+emit)``.  The 15 bucket-series operators contribute an ``emit`` to
+``bucket_series_fn``; seven more contribute a ``(fold, emit)`` pair.  The
+contract below is what the max-version drain in
 ``plans/streaming_queries.py`` relies on, checked without Spark through
 the shared ``FakeState``:
 
@@ -14,10 +15,11 @@ the shared ``FakeState``:
   emitted row carries it;
 * each emitted frame's columns are its output schema's fields, in order
   (Spark matches pandas columns to the schema by name, so a drifted
-  frame would fail only at replay time).
+  frame would fail only at replay time), and the state row has one value
+  per state-schema field.
 
-The pin fails loudly if a second copy of the fold or of the
-``applyInPandasWithState`` wrapper is added back.
+The pins fail loudly if a second copy of the bucket fold or of the
+superseding ``applyInPandasWithState`` call is added back.
 """
 
 from __future__ import annotations
@@ -29,7 +31,12 @@ from functools import partial
 import pandas as pd
 import pytest
 
+from project_obsidian_core_spark.streaming import discovery_state as D
+from project_obsidian_core_spark.streaming import quantile_state as Q
+from project_obsidian_core_spark.streaming import sample_state as SA
 from project_obsidian_core_spark.streaming import sequence_state as S
+from project_obsidian_core_spark.streaming import topk_state as TK
+from project_obsidian_core_spark.streaming import versioned_fold as VF
 
 PKG = os.path.dirname(os.path.abspath(S.__file__)).rsplit(os.sep, 1)[0]
 
@@ -58,37 +65,172 @@ EMITTERS = {
 }
 
 
-def _batch(buckets):
+def _bucket_batch(rows):
+    buckets = [100 + r % 40 for r in rows]
     return pd.DataFrame(
         {"bucket": buckets, "v": [1_000 + 37 * (b % 11) for b in buckets]},
         dtype="int64",
     )
 
 
-@pytest.mark.parametrize("name", sorted(EMITTERS))
+def _event_batch(rows):
+    # three event types cycling over the rows; one distinct ts per row
+    return pd.DataFrame(
+        {
+            "event_type": [("view", "cart", "buy")[r % 3] for r in rows],
+            "ts_us": [1_000_000 * (r * 7 % 97) + r for r in rows],
+            "event_id": list(rows),
+        }
+    )
+
+
+#: name -> (fold, emit, key, input batch of row ids, state, output schema)
+FOLDS = {
+    "mannwhitney": (
+        S._fold_mannwhitney_frame,
+        S.emit_mannwhitney,
+        "t",
+        lambda rows: pd.DataFrame(
+            {"value": [float(r % 9) for r in rows], "is_a": [r % 2 == 0 for r in rows]}
+        ),
+        S.MANNWHITNEY_STATE_SCHEMA,
+        S.MANNWHITNEY_OUTPUT_SCHEMA,
+    ),
+    "kmv": (
+        partial(S._fold_kmv_frame, k=8),
+        partial(S.emit_kmv, k=8),
+        "t",
+        lambda rows: pd.DataFrame({"h": [r * 7919 % 1000 for r in rows]}),
+        S.KMV_STATE_SCHEMA,
+        S.KMV_OUTPUT_SCHEMA,
+    ),
+    "dwell": (
+        S._fold_dwell_frame,
+        S.emit_dwell,
+        7,
+        _event_batch,
+        S.DWELL_STATE_SCHEMA,
+        S.DWELL_OUTPUT_SCHEMA,
+    ),
+    "quantiles": (
+        partial(Q._fold_sketch, capacity=16),
+        partial(Q._emit_quantiles, qs=Q.QUANTILE_QS),
+        "s",
+        lambda rows: pd.DataFrame({"v": [r * 31 % 101 for r in rows]}),
+        Q.STATE_SCHEMA,
+        Q.OUTPUT_SCHEMA,
+    ),
+    "priority_sample": (
+        partial(SA._fold_sample, k=4),
+        SA._emit_sample,
+        "g",
+        lambda rows: pd.DataFrame(
+            {
+                "prio": [r * 37 % 211 for r in rows],
+                "id": list(rows),
+                "weight": [1 + r % 5 for r in rows],
+            }
+        ),
+        SA.STATE_SCHEMA,
+        SA.OUTPUT_SCHEMA,
+    ),
+    "topk": (
+        partial(TK._fold_summary, capacity=4),
+        TK._emit_summary,
+        3,
+        lambda rows: pd.DataFrame({"key": [f"k{r % 6}" for r in rows]}),
+        TK.STATE_SCHEMA,
+        TK.OUTPUT_SCHEMA,
+    ),
+    "discovery": (
+        D._fold_discovery,
+        D._emit_timeline,
+        7,
+        _event_batch,
+        D.STATE_SCHEMA,
+        D.OUTPUT_SCHEMA,
+    ),
+}
+
+CASES = {
+    **{
+        name: (
+            S.bucket_series_fn(emit),
+            "k",
+            _bucket_batch,
+            S.EWMA_STATE_SCHEMA,
+            schema,
+        )
+        for name, (emit, schema) in EMITTERS.items()
+    },
+    **{
+        name: (VF.versioned_fold_fn(fold, emit), key, batch, state, out)
+        for name, (fold, emit, key, batch, state, out) in FOLDS.items()
+    },
+}
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
 def test_kernel_contract(fake_state, name):
-    emit, schema = EMITTERS[name]
-    fn = S.bucket_series_fn(emit)
+    fn, key, batch, state_schema, schema = CASES[name]
     fields = [f.name for f in schema.fields]
 
     state = fake_state()
-    assert list(fn(("k",), iter([_batch([])]), state)) == []
+    assert list(fn((key,), iter([batch([])]), state)) == []
     assert not state.exists
 
-    # two batches over 40 hourly buckets; batch 2 revisits batch 1's
-    # buckets, so rows absorbed (the version) outrun distinct buckets
-    b1 = _batch(list(range(100, 120)) * 2)
-    b2 = _batch(list(range(110, 140)))
+    # two batches; batch 2 revisits batch 1's rows (same buckets, keys,
+    # values), so rows absorbed (the version) outrun the distinct rows
+    b1 = batch(list(range(0, 20)) * 2)
+    b2 = batch(list(range(10, 40)))
     absorbed = 0
-    for batch in (b1, b2):
-        out = list(fn(("k",), iter([batch]), state))
-        absorbed += len(batch)
-        assert state.get[2] == absorbed
-        assert len(out) == 1, "this series is long enough for every emitter"
+    for frame_in in (b1, b2):
+        out = list(fn((key,), iter([frame_in]), state))
+        absorbed += len(frame_in)
+        assert len(state.get) == len(state_schema.fields)
+        assert state.get[-1] == absorbed
+        assert len(out) == 1, "this input is long enough for every operator"
         frame = out[0]
         assert list(frame.columns) == fields
         assert len(frame) and (frame["version"] == absorbed).all()
-    assert list(state.get[0]) == list(range(100, 140))
+    if name in EMITTERS:
+        assert list(state.get[0]) == list(range(100, 140))
+
+
+def test_topk_fold_ignores_null_keys():
+    """A NULL key is never counted: the Space-Saving fold skips it, and
+    ``streaming_topk`` filters it before the kernel so that it is not in
+    ``version`` either (see ``test_streaming_topk_drops_null_keys``)."""
+    fold = FOLDS["topk"][0]
+    with_nulls = pd.DataFrame({"key": ["a", None, "b", None, "a"]})
+    assert fold(None, with_nulls) == fold(None, with_nulls.dropna())
+
+
+def test_streaming_topk_drops_null_keys(spark, tmp_path):
+    from project_obsidian_core_spark.plans.streaming_queries import (
+        _replay,
+        _run_memory,
+    )
+
+    def drain(tag, keys):
+        src = str(tmp_path / tag)
+        spark.createDataFrame([(k,) for k in keys], "key string").write.parquet(
+            src
+        )
+        out = TK.streaming_topk(_replay(spark, src), n_shards=1, capacity=4)
+        name = f"topk_null_keys_{tag}"
+        _run_memory(out, name, str(tmp_path / f"{tag}_ckpt"), spark, "append")
+        return sorted(
+            (r.key, r.est_count, r.version) for r in spark.table(name).collect()
+        )
+
+    # NULL keys leave both the counts and the version untouched, and a
+    # batch of only NULL keys emits nothing
+    assert drain("mixed", ["a", None, "b", None, "a"]) == [
+        ("a", 2, 3),
+        ("b", 1, 3),
+    ]
+    assert drain("only_null", [None, None]) == []
 
 
 def _calls(tree, name):
@@ -101,22 +243,46 @@ def _calls(tree, name):
     ]
 
 
-def test_fold_bucket_sums_has_one_call_site():
-    sites = []
+def _package_trees():
     for root, _, files in os.walk(PKG):
         for f in files:
             if f.endswith(".py"):
                 path = os.path.join(root, f)
                 with open(path) as fh:
-                    tree = ast.parse(fh.read())
-                sites += [path] * len(_calls(tree, "fold_bucket_sums"))
+                    yield path, fh.read()
+
+
+def test_fold_bucket_sums_has_one_call_site():
+    sites = []
+    for path, src in _package_trees():
+        sites += [path] * len(_calls(ast.parse(src), "fold_bucket_sums"))
     assert sites == [S.__file__], sites
 
 
-def test_sequence_state_has_ten_apply_in_pandas_sites():
-    # the bucket-series kernel plus the nine stateful operators with a
-    # state shape of their own (transitions, funnel, sessions, as-of,
-    # mannwhitney, kmv, last_touch, dwell, state_budget)
-    with open(S.__file__) as fh:
-        tree = ast.parse(fh.read())
-    assert len(_calls(tree, "applyInPandasWithState")) == 10
+def test_package_has_nine_apply_in_pandas_sites():
+    # the versioned-fold kernel, plus the operators with a timeout,
+    # eviction or exactly-once emission: transitions, funnel, sessions,
+    # as-of, last_touch and state_budget (sequence_state), islands
+    # (interval_state) and the counter-reset delta (delta_stream)
+    sites = {}
+    for path, src in _package_trees():
+        n = len(_calls(ast.parse(src), "applyInPandasWithState"))
+        if n:
+            sites[os.path.relpath(path, PKG)] = n
+    assert sum(sites.values()) == 9, sites
+    assert sites[os.path.join("streaming", "versioned_fold.py")] == 1, sites
+    for mod in (D, Q, SA, TK):
+        with open(mod.__file__) as fh:
+            tree = ast.parse(fh.read())
+        used = {
+            getattr(node, "id", None)
+            or getattr(node, "attr", None)
+            or getattr(node, "name", None)
+            for node in ast.walk(tree)
+        }
+        assert "GroupState" not in used, mod
+        assert not [
+            c
+            for c in _calls(tree, "update")
+            if getattr(getattr(c.func, "value", None), "id", None) == "state"
+        ], mod

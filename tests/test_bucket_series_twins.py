@@ -1,15 +1,22 @@
-"""Oracle coverage for the bucket-series stream twins that no other test
-replays end to end.
+"""Oracle coverage for the versioned-fold stream twins that no other test
+replays end to end, and for the empty-events corpus.
 
 Each query runs from the registry on the sf0.001 fixture and must equal
 its DuckDB oracle bit-exactly, compared with the normalizer of
 ``scripts/oracle_check.py``.  A twin that drains to zero rows would match
 an equally empty oracle, so every result must also be non-empty.
+
+The empty-events corpus is sf0.001 with ``events.parquet`` cut to zero
+rows: every query over events must then match its (empty) oracle rather
+than fail inside the engine.
 """
 
 from __future__ import annotations
 
+import os
+
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 
 from scripts.oracle_check import TABLES, approx_equal, sorted_rows
@@ -23,28 +30,74 @@ UNTESTED_TWINS = [
     "stream_range_rate",
     "stream_forecast_backtest",
     "stream_supplier_hhi",
+    "stream_dwell_time",
+    "stream_kmv_distinct",
+    "stream_topk_exact",
+    "stream_quantiles_exact",
+    "stream_discovery_timeline",
+    "stream_priority_sample",
 ]
+
+#: the in-row Markov fold plus the versioned-fold twins that replay events
+EMPTY_EVENTS_QUERIES = [
+    "events_markov_stationary",
+    "stream_mannwhitney",
+    "stream_kmv_distinct",
+    "stream_dwell_time",
+    "stream_topk_exact",
+    "stream_quantiles_exact",
+    "stream_discovery_timeline",
+    "stream_ewma",
+]
+
+
+def _duck(sf):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    return con
 
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = _duck(sf_dir)
     yield con
     con.close()
 
 
-@pytest.mark.parametrize("name", UNTESTED_TWINS)
-def test_twin_matches_its_oracle(spark, sf_dir, duck, name):
+@pytest.fixture(scope="module")
+def empty_events(sf_dir, tmp_path_factory):
+    """(dir, duckdb) for the sf0.001 corpus with zero events."""
+    d = tmp_path_factory.mktemp("empty_events")
+    for t in TABLES:
+        src = f"{sf_dir}/{t}.parquet"
+        if t == "events":
+            pq.write_table(pq.read_table(src).slice(0, 0), d / f"{t}.parquet")
+        else:
+            os.symlink(src, d / f"{t}.parquet")
+    con = _duck(str(d))
+    yield str(d), con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [*UNTESTED_TWINS, *(f"empty_events:{q}" for q in EMPTY_EVENTS_QUERIES)],
+)
+def test_twin_matches_its_oracle(spark, sf_dir, duck, request, name):
     from project_obsidian_core_spark.plans.registry import ORACLES, QUERIES
 
-    sdf = QUERIES[name](spark, sf_dir)
+    corpus, _, name = name.rpartition(":")
+    sf, con = request.getfixturevalue(corpus) if corpus else (sf_dir, duck)
+    sdf = QUERIES[name](spark, sf)
     s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    rel = duck.sql(ORACLES[name])
+    rel = con.sql(ORACLES[name])
     d_cols, d_rows = rel.columns, rel.fetchall()
 
-    assert s_rows, f"{name} drained no rows"
+    if corpus:
+        assert s_rows == [], f"{name} emitted rows without events"
+    else:
+        assert s_rows, f"{name} drained no rows"
     assert sorted(s_cols) == sorted(d_cols)
     a, b = sorted_rows(s_cols, s_rows), sorted_rows(d_cols, d_rows)
     assert a == b, (

@@ -715,11 +715,16 @@ def test_kmv_fold_merges_across_batches(fake_state):
     over arbitrary micro-batch splits must equal the one-shot fold, and
     state never exceeds k entries."""
     import hashlib
+    from functools import partial
 
     import pandas as pd
 
     from project_obsidian_core_spark.streaming.sequence_state import (
-        make_kmv_fn,
+        _fold_kmv_frame,
+        emit_kmv,
+    )
+    from project_obsidian_core_spark.streaming.versioned_fold import (
+        versioned_fold_fn,
     )
 
     k = 8
@@ -730,7 +735,7 @@ def test_kmv_fold_merges_across_batches(fake_state):
     want = sorted(set(hashes))[:k]
 
     # one-shot
-    fn = make_kmv_fn(k)
+    fn = versioned_fold_fn(partial(_fold_kmv_frame, k=k), partial(emit_kmv, k=k))
     s1 = fake_state()
     out = list(fn(("t",), iter([pd.DataFrame({"h": hashes})]), s1))
     assert list(s1.get[0]) == want
