@@ -2799,10 +2799,13 @@ def events_markov_stationary(
     # constant in the round count.  Arithmetic is verbatim: per-entry
     # `pi[a]·c div r` truncation then int64 sums (reordered only —
     # associative), largest-remainder uniform start ranked over the sorted
-    # from-types, and a relational join-miss ≡ the fold's 0-contribution,
-    # so the values are bit-identical (oracle-gated at both SFs).  The
-    # final inner joins restrict output to from∩to types, mirrored by the
-    # `keep` filter.  The corpus stage (lead window → matrix) is unchanged.
+    # from-types, and a relational join-miss ≡ a skipped contribution, so
+    # the values are bit-identical (oracle-gated at both SFs).  A type
+    # absent from a round's relation is NULL in the fold (see `step`), so
+    # the final inner joins — from-types with a row in rounds R-1 and R —
+    # are the `keep` filter; testing from∩to types instead kept a type
+    # whose support died out on an absorbing chain.  The corpus stage
+    # (lead window → matrix) is unchanged.
     # A global aggregate over an empty matrix still yields one row whose
     # `ms` is empty; `sequence(1, size(un))` would then count down to
     # [1, 0] and the `div size(fts)` seed divide by zero, so that row is
@@ -2816,11 +2819,15 @@ def events_markov_stationary(
     def bind(val: str, name: str, body: str) -> str:
         return f"element_at(transform(array({val}), {name} -> {body}), 1)"
 
+    # NULL marks a type with no support in a round (no row in the
+    # oracle's round relation): a step sums only the contributions of
+    # supported sources and stays NULL when there are none
     step = (
         "transform(sequence(1, size(un)), j ->"
-        " aggregate(ei, 0L, (acc, e) ->"
-        "  acc + IF(e.ti = j,"
-        "           element_at({pi}, e.fi) * e.c div e.r, 0L)))"
+        " aggregate(ei, CAST(NULL AS BIGINT), (acc, e) ->"
+        "  IF(e.ti = j AND element_at({pi}, e.fi) IS NOT NULL,"
+        "     coalesce(acc, 0L) + element_at({pi}, e.fi) * e.c div e.r,"
+        "     acc)))"
     )
     final = (
         "filter(transform(sequence(1, size(un)), j ->"
@@ -2832,7 +2839,8 @@ def events_markov_stationary(
         "  element_at(pa, j) AS pi_prev_ppm,"
         "  abs(element_at(pb, j) - element_at(pa, j)) AS delta_ppm,"
         "  array_position(fts, element_at(un, j)) > 0"
-        "   AND array_position(tts, element_at(un, j)) > 0 AS keep)),"
+        "   AND element_at(pb, j) IS NOT NULL"
+        "   AND element_at(pa, j) IS NOT NULL AS keep)),"
         " s -> s.keep)"
     )
     body = bind(step.format(pi="pa"), "pb", final)
@@ -2846,7 +2854,7 @@ def events_markov_stationary(
         f"transform(un, u -> IF(array_position(fts, u) > 0,"
         f" {scale} div size(fts)"
         f" + IF(array_position(fts, u) <= {scale} % size(fts), 1L, 0L),"
-        f" 0L))",
+        f" CAST(NULL AS BIGINT)))",
         "p0",
         body,
     )

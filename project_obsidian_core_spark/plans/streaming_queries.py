@@ -1320,7 +1320,7 @@ def stream_funnel_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     deadline window), so their ``max_stage`` is emitted once with
     ``is_final=True``, the event rows leave state, and a 1-flag
     tombstone absorbs later traffic; unfinalized users carry only the
-    provably-live state slice (see ``make_funnel_fn``).  Replay is
+    provably-live state slice (see ``freeze_funnel``).  Replay is
     event-time-ordered range chunks (:func:`_events_src_ordered`).
     Drain = finals ∪ max-version live rows of users WITHOUT a final
     (per-user scalar: a final supersedes the user's live history),
@@ -1401,7 +1401,7 @@ def stream_asof_join_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     state; among frozen purchases only the latest survives as the
     anchor for live/future clicks.  Unlike the windowed twins this
     eviction is LOSSLESS — finals ∪ max-version live ≡ the batch ASOF
-    join exactly (``make_asof_fn`` docstring has the proof; unit-pinned
+    join exactly (``freeze_asof`` docstring has the proof; unit-pinned
     incl. the idle-key EventTimeTimeout flush in
     tests/test_sequence_evict.py).  Replay is event-time-ordered range
     chunks (:func:`_events_src_ordered` — the transport-order

@@ -22,10 +22,9 @@ Mechanics
   rows — the same superseding contract a compacted changelog topic has;
   intermediate versions are the live dashboard's progressive view.
 - state size = open islands per key, which telemetry-shaped data keeps
-  orders of magnitude below interval count; a production deployment
-  evicts islands whose end passed the watermark (they can never merge
-  again) by emitting them as FINAL — the eviction hook is the same
-  splice, not new machinery.
+  orders of magnitude below interval count; ``evict=True`` drops islands
+  whose end passed the watermark (they can never merge again) after
+  emitting them as FINAL, on the watermark-freeze kernel.
 
 Scale: groups hash-partition by key across executors; per-batch work is
 O(batch · log islands + merged spans). The state store checkpoints the
@@ -34,14 +33,21 @@ arrays as typed Arrow columns per micro-batch.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from typing import Any
+import bisect
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from project_obsidian_core_spark.streaming.freeze_fold import (
+    FreezeOp,
+    freeze_fold_stream,
+)
+from project_obsidian_core_spark.streaming.versioned_fold import (
+    versioned_fold_stream,
+)
 
 STATE_SCHEMA = T.StructType(
     [
@@ -98,70 +104,51 @@ def fold_interval(
     )
 
 
-def make_islands_fn(key_cols: Sequence[str], evict: bool = False):
-    """``evict=True`` enables watermark eviction: islands whose end is
-    older than the group-state watermark can never merge again (the
-    watermark bounds how late a new interval's start may be), so they
-    are emitted once with ``is_final=True`` and DROPPED from state —
-    this is what keeps state at "open islands", not "all islands", on
-    an unbounded stream. Requires ``withWatermark`` on the source."""
+def _fold_islands(acc, pdf: pd.DataFrame):
+    s_arr, e_arr, n_arr = (
+        np.asarray(a, dtype=np.int64) for a in (acc or ((), (), ()))
+    )
+    for s, e in zip(pdf["start_us"].to_numpy(), pdf["end_us"].to_numpy()):
+        s_arr, e_arr, n_arr = fold_interval(s_arr, e_arr, n_arr, int(s), int(e))
+    return s_arr.tolist(), e_arr.tolist(), n_arr.tolist()
+
+
+def freeze_islands(acc, wm_us: int):
+    """Islands whose end is older than the watermark can never merge
+    again (the watermark bounds how late a new interval's start may be):
+    they freeze, are emitted once with ``is_final=True`` and leave state.
+    Ends are strictly increasing in the canonical form, so the closed
+    islands (``end < wm``) are a prefix."""
+    k = bisect.bisect_left(acc[1], wm_us)
+    if not k:
+        return None, acc
+    return tuple(a[:k] for a in acc), tuple(a[k:] for a in acc)
+
+
+def islands_freeze(key_cols: Sequence[str]) -> FreezeOp:
+    """The islands' freeze-kernel pieces: no wake rule (see
+    :func:`streaming_islands`).  ``live`` always carries ``is_final``
+    (False in the keep mode) because both modes' output has it."""
     keys = list(key_cols)
 
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s_l, e_l, n_l, version = state.get
-            s_arr = np.asarray(s_l, dtype=np.int64)
-            e_arr = np.asarray(e_l, dtype=np.int64)
-            n_arr = np.asarray(n_l, dtype=np.int64)
-        else:
-            s_arr = np.empty(0, dtype=np.int64)
-            e_arr = np.empty(0, dtype=np.int64)
-            n_arr = np.empty(0, dtype=np.int64)
-            version = 0
-        absorbed = 0
-        for pdf in pdfs:
-            for s, e in zip(
-                pdf["start_us"].to_numpy(), pdf["end_us"].to_numpy()
-            ):
-                s_arr, e_arr, n_arr = fold_interval(
-                    s_arr, e_arr, n_arr, int(s), int(e)
-                )
-                absorbed += 1
-        if not absorbed:
-            return
-        version += absorbed
+    def emit(key, acc, version: int, final=False):
+        s, e, n = acc
+        if not s:
+            return None
+        vals = key if len(keys) > 1 else (key,)
+        m = len(s)
+        return pd.DataFrame(
+            {
+                **{k: [vals[i]] * m for i, k in enumerate(keys)},
+                "island_start_us": np.asarray(s, dtype=np.int64),
+                "island_end_us": np.asarray(e, dtype=np.int64),
+                "n_intervals": np.asarray(n, dtype=np.int64),
+                "version": np.full(m, version, dtype=np.int64),
+                "is_final": np.full(m, final, dtype=bool),
+            }
+        )
 
-        def emit(sa, ea, na, final):
-            return pd.DataFrame(
-                {
-                    **{k: [key[i]] * len(sa) for i, k in enumerate(keys)},
-                    "island_start_us": sa,
-                    "island_end_us": ea,
-                    "n_intervals": na,
-                    "version": np.full(len(sa), version, dtype=np.int64),
-                    "is_final": np.full(len(sa), final, dtype=bool),
-                }
-            )
-
-        if evict:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            closed = e_arr < wm_us  # strictly: end < watermark never merges
-            if closed.any():
-                yield emit(s_arr[closed], e_arr[closed], n_arr[closed], True)
-                s_arr, e_arr, n_arr = (
-                    s_arr[~closed],
-                    e_arr[~closed],
-                    n_arr[~closed],
-                )
-        state.update((s_arr.tolist(), e_arr.tolist(), n_arr.tolist(), version))
-        if len(s_arr):
-            yield emit(s_arr, e_arr, n_arr, False)
-
-    return fn
+    return FreezeOp(_fold_islands, freeze_islands, emit)
 
 
 def streaming_islands(
@@ -171,11 +158,23 @@ def streaming_islands(
     ``(*key_cols, start_us, end_us)``. Emits superseding island-set
     versions per key; the current set = all ``is_final`` rows plus the
     max-version live rows. With ``evict=True`` (requires a watermarked
-    source) closed islands leave state — the unbounded-stream mode."""
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        make_islands_fn(key_cols, evict=evict),
-        outputStructType=output_schema([stream.schema[k] for k in key_cols]),
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    source) closed islands leave state — the unbounded-stream mode, run
+    by the watermark-freeze kernel (``streaming/freeze_fold.py``); the
+    keep mode runs the same fold and emitter on the versioned fold.
+
+    Evict mode has no wake rule, so it runs with ``NoTimeout`` like the
+    group function it replaced: a checkpoint written under ``NoTimeout``
+    fails to resume under ``EventTimeTimeout`` on PySpark 4.1.2
+    (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``).  The gap that leaves:
+    islands freeze only when their key receives rows, so the closed
+    islands of a key that goes quiet never finalize.  The drained set is
+    still correct (they stay in that key's max-version live rows), but
+    that key's state is not bounded."""
+    keys = list(key_cols)
+    out = output_schema([stream.schema[k] for k in keys])
+    op = islands_freeze(keys)
+    if evict:
+        return freeze_fold_stream(stream, keys, op, STATE_SCHEMA, out)
+    return versioned_fold_stream(
+        stream, keys, op.fold, op.live, STATE_SCHEMA, out
     )

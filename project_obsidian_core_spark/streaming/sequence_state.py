@@ -23,20 +23,23 @@ equivalence available for an order-dependent fold.
 Scale: state per user is that user's event sequence — O(activity), not
 O(corpus); on an unbounded stream ``evict=True`` (round 11, the
 interval_state contract) bounds it to the WATERMARK HORIZON with NO
-semantic loss: a row below the watermark can never gain a new
-predecessor (Spark drops late rows), so every adjacent pair whose
-second element is below the horizon is frozen — it is emitted once
-with ``is_final=True`` and its rows leave state, except the LAST
-frozen row, which stays as the boundary anchor (its outgoing pair can
-still change when the next in-horizon row arrives).  finals ∪
-max-version live rows ≡ the batch operator exactly, test-pinned; the
-per-batch O(state) re-sort shrinks to O(horizon activity).  Ties: the
-sequence sorts by (ts, event_id), the A38 total-order rule the batch
-window uses.
+semantic loss.  Each evicting operator here is a set of pure pieces —
+the keep twin's fold and emitter plus a freeze rule and a wake rule
+(:data:`TRANSITIONS_FREEZE`, :func:`funnel_freeze`,
+:func:`session_freeze`, :data:`ASOF_FREEZE`, :data:`BUDGET_FREEZE`) —
+run by the watermark-freeze kernel (``streaming/freeze_fold.py``), which
+owns the ``GroupState`` protocol, the timeouts and the ``is_final``
+column; the keep twins run the same fold and emitter on the
+versioned-fold kernel (``streaming/versioned_fold.py``).  For
+transitions, finals ∪ max-version live rows ≡ the batch operator
+exactly, test-pinned; the per-batch O(state) re-sort shrinks to
+O(horizon activity).  Ties: the sequence sorts by (ts, event_id), the
+A38 total-order rule the batch window uses.
 """
 
 from __future__ import annotations
 
+import bisect
 from collections.abc import Callable, Iterator
 from functools import partial
 
@@ -47,6 +50,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from project_obsidian_core_spark.streaming.freeze_fold import (
+    FreezeOp,
+    final_col,
+    freeze_fold_stream,
+)
 from project_obsidian_core_spark.streaming.versioned_fold import (
     versioned_fold_fn,
     versioned_fold_stream,
@@ -158,112 +166,112 @@ def transition_counts(types: list[str]) -> dict[tuple[str, str], int]:
     return out
 
 
-def make_sequence_fn(evict: bool = False):
-    """``evict=True`` enables watermark eviction (the interval_state
-    contract): the sequence prefix with ts below the group-state
-    watermark is FROZEN — Spark drops later-arriving rows below the
-    watermark, so no future row can be inserted before or between
-    frozen rows.  Every adjacent pair whose SECOND element is frozen is
-    therefore final: its counts are emitted once with
-    ``is_final=True``, and the frozen rows leave state except the LAST
-    one, kept as the boundary anchor (a future in-horizon row can still
-    insert directly after it, so the anchor's outgoing pair stays
-    live).  finals ∪ max-version live ≡ the batch counts, test-pinned.
-    Requires ``withWatermark`` upstream.
+def _fold_sequence(acc, pdf: pd.DataFrame, *, payload: str):
+    """Fold one frame into the sequence arrays ``(ts, eid, payload,
+    *tail)`` (:func:`merge_sequence`); evict-mode tail fields ride along."""
+    ts, eid, vals, *tail = acc or ((), (), ())
+    merged = merge_sequence(
+        ts, eid, vals,
+        zip(
+            pdf["ts_us"].tolist(),
+            pdf["event_id"].tolist(),
+            pdf[payload].tolist(),
+        ),
+    )
+    return (*merged, *tail)
 
-    QUIESCENT keys flush too (round 13, closing the same idle-key gap
-    the r12 ADVICE called out for funnel/sessions): whenever more than
-    the anchor remains, the key arms an EVENT-TIME TIMEOUT at the
-    second element's timestamp — the exact instant the next pair can
-    freeze — and the timeout runs the same eviction sweep with no input
-    rows.  A timeout flush bumps ``version`` and re-emits the remaining
-    live counts; when the remainder is the bare anchor (no live pairs),
-    it emits ONE ``n=0`` version-marker row instead, because this
-    family's drain is ADDITIVE (finals + max-version live counts) and
-    the pre-flush live frame — which still carries the just-finalized
-    pairs — must lose the max-version race or the drain double-counts.
-    """
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user = int(key[0])
-        timed_out = evict and state.hasTimedOut
-        if state.exists:
-            ts, eid, types, version = state.get
-            ts, eid, types = list(ts), list(eid), list(types)
-        else:
-            ts, eid, types, version = [], [], [], 0
-        absorbed = 0
-        if not timed_out:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                absorbed += len(pdf)
-                ts, eid, types = merge_sequence(
-                    ts, eid, types,
-                    zip(
-                        pdf["ts_us"].tolist(),
-                        pdf["event_id"].tolist(),
-                        pdf["event_type"].tolist(),
-                    ),
-                )
-        if not absorbed and not timed_out:
-            return
-        version += absorbed
+#: the (ts, event_id, event_type) sequence fold of transitions, the funnel
+#: and the dwell grid
+_fold_events = partial(_fold_sequence, payload="event_type")
 
-        def frame(items, final):
-            n = len(items)
-            cols = {
-                "user_id": _full(n, user),
-                "prev_type": _obj([p for (p, _), _ in items]),
-                "next_type": _obj([q for (_, q), _ in items]),
-                "n": _i64([c for _, c in items]),
-                "version": _full(n, version),
-            }
-            if evict:
-                cols["is_final"] = np.full(n, final, dtype=bool)
-            return pd.DataFrame(cols, copy=False)
 
-        if evict:
-            import bisect
+def freeze_sequence(acc, wm_us: int):
+    """The transitions freeze rule over parallel arrays ``acc`` sorted by
+    ``acc[0]`` (ts): rows below the watermark are frozen — Spark drops
+    later rows below it, so no future row lands before or between them.
+    Every adjacent pair whose SECOND element is frozen is therefore
+    final; the frozen rows leave state except the LAST one, kept as the
+    boundary anchor (a future in-horizon row can still land right after
+    it, so the anchor's outgoing pair stays live).  The state-size probe
+    runs the same rule over its ts array."""
+    cut = bisect.bisect_left(acc[0], wm_us)
+    if cut <= 1:
+        return None, acc
+    return tuple(a[:cut] for a in acc), tuple(a[cut - 1 :] for a in acc)
 
-            wm_ms = state.getCurrentWatermarkMs()
-            wm_us = wm_ms * 1000
-            cut = bisect.bisect_left(ts, wm_us)
 
-            def rearm():
-                # the next pair freezes when the watermark passes the
-                # SECOND element (cut > 1 needs ts[1] < wm); an
-                # anchor-only key can't freeze anything without new data
-                if len(ts) > 1:
-                    state.setTimeoutTimestamp(
-                        max(ts[1] // 1000 + 1, wm_ms + 1)
-                    )
+def wake_sequence(acc):
+    """The next pair freezes when the watermark passes the SECOND row
+    (``cut > 1`` needs ``ts[1] < wm``); an anchor-only key can't freeze
+    anything without new rows."""
+    ts = acc[0]
+    return ts[1] if len(ts) > 1 else None
 
-            if timed_out and cut <= 1:
-                # spurious wake: nothing freezable yet
-                rearm()
-                state.update((ts, eid, types, version))
-                return
-            if timed_out:
-                version += 1
-            if cut > 1:
-                finalized = transition_counts(types[:cut])
-                ts, eid, types = ts[cut - 1 :], eid[cut - 1 :], types[cut - 1 :]
-                if finalized:
-                    yield frame(sorted(finalized.items()), True)
-            rearm()
-        state.update((ts, eid, types, version))
-        counts = transition_counts(types)
-        if counts:
-            yield frame(sorted(counts.items()), False)
-        elif evict and timed_out and ts:
-            # n=0 version marker (see docstring): supersedes the stale
-            # pre-flush live frame in the additive drain
-            yield frame([((types[0], types[0]), 0)], False)
 
-    return fn
+def _transitions_frame(user, items, version: int, final) -> pd.DataFrame:
+    n = len(items)
+    return pd.DataFrame(
+        {
+            "user_id": _full(n, int(user)),
+            "prev_type": _obj([p for (p, _), _ in items]),
+            "next_type": _obj([q for (_, q), _ in items]),
+            "n": _i64([c for _, c in items]),
+            "version": _full(n, version),
+            **final_col(n, final),
+        },
+        copy=False,
+    )
+
+
+def emit_transitions(user, acc, version: int, final=None):
+    counts = transition_counts(acc[2])
+    if not counts:
+        return None
+    return _transitions_frame(user, sorted(counts.items()), version, final)
+
+
+def _transitions_marker(user, acc, version: int, final) -> pd.DataFrame:
+    """The ``n=0`` version marker of a flush that leaves only the anchor:
+    the transitions drain is ADDITIVE (finals + max-version live counts),
+    so the pre-flush live frame, which still carries the just-finalized
+    pairs, must lose the max-version race or the drain double-counts."""
+    t = acc[2][0]
+    return _transitions_frame(user, [((t, t), 0)], version, final)
+
+
+#: evict-mode transitions (the interval_state contract): finals ∪
+#: max-version live ≡ the batch counts, test-pinned.  QUIESCENT keys flush
+#: too (round 13): whenever more than the anchor remains, the key wakes at
+#: the second row's ts, the exact instant the next pair can freeze.
+TRANSITIONS_FREEZE = FreezeOp(
+    _fold_events, freeze_sequence, emit_transitions, wake_sequence,
+    marker=_transitions_marker,
+)
+
+
+def _sequence_twin(
+    stream: DataFrame, evict: bool, op: FreezeOp, schemas, *payload
+) -> DataFrame:
+    """Wire a per-user sequence operator over an event stream: project
+    (user_id, event_id, ts_us, *payload), then run ``op`` on the freeze
+    kernel (``evict=True``) or its fold and live emitter on the versioned
+    fold.  ``schemas`` = (state, output, evict state, evict output)."""
+    keyed = stream.select(
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("event_id").cast("long").alias("event_id"),
+        F.unix_micros("ts").alias("ts_us"),
+        *payload,
+        # evict mode must RETAIN the watermark-tagged event-time column:
+        # projecting it away severs the watermark and
+        # getCurrentWatermarkMs() raises inside the state fn
+        *([F.col("ts")] if evict else []),
+    )
+    if evict:
+        return freeze_fold_stream(keyed, "user_id", op, *schemas[2:])
+    return versioned_fold_stream(
+        keyed, "user_id", op.fold, op.live, *schemas[:2]
+    )
 
 
 def streaming_transitions(stream: DataFrame, evict: bool = False) -> DataFrame:
@@ -271,28 +279,10 @@ def streaming_transitions(stream: DataFrame, evict: bool = False) -> DataFrame:
     columns (user_id, event_id, ts, event_type).  ``evict=True`` (needs
     a watermarked source) bounds state to the watermark horizon and
     adds the ``is_final`` column — the unbounded-stream mode."""
-    keyed = stream.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.unix_micros("ts").alias("ts_us"),
+    return _sequence_twin(
+        stream, evict, TRANSITIONS_FREEZE,
+        (STATE_SCHEMA, OUTPUT_SCHEMA, STATE_SCHEMA, EVICT_OUTPUT_SCHEMA),
         F.col("event_type").cast("string").alias("event_type"),
-        # evict mode must RETAIN the watermark-tagged event-time column:
-        # projecting it away severs the watermark and
-        # getCurrentWatermarkMs() raises inside the state fn
-        *([F.col("ts")] if evict else []),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_sequence_fn(evict=evict),
-        outputStructType=EVICT_OUTPUT_SCHEMA if evict else OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        # evict mode wakes keys when their next pair can freeze so
-        # quiescent users still flush (r13, the funnel/session pattern)
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if evict
-            else GroupStateTimeout.NoTimeout
-        ),
     )
 
 
@@ -321,6 +311,14 @@ FUNNEL_EVICT_STATE_SCHEMA = T.StructType(
 )
 
 
+def _anchor(ts: list[int], types: list[str], stage: str) -> int | None:
+    """ts of the first ``stage`` row of a sorted sequence, or None."""
+    for t, y in zip(ts, types):
+        if y == stage:
+            return t
+    return None
+
+
 def funnel_progress(
     ts: list[int], types: list[str], stages: tuple[str, ...], within_us: int
 ) -> int:
@@ -330,11 +328,7 @@ def funnel_progress(
     stage strictly after the previous pick and at or before
     anchor + within_us; greedy-earliest is optimal under the fixed
     global deadline. Pure function; unit-tested directly."""
-    anchor = None
-    for t, y in zip(ts, types):
-        if y == stages[0]:
-            anchor = t
-            break
+    anchor = _anchor(ts, types, stages[0])
     if anchor is None:
         return 0
     deadline = anchor + within_us
@@ -352,15 +346,31 @@ def funnel_progress(
     return reached
 
 
-def make_funnel_fn(stages: tuple[str, ...], within_us: int, evict: bool = False):
-    """``evict=True`` (r11 verdict Next #5): unlike the fold-family path
-    statistics, the anchored funnel HAS a semantic horizon — once the
-    anchor is below the watermark it is FROZEN (the final anchor is the
-    earliest stage-1, and every future row has ts ≥ watermark > anchor),
-    and once ``anchor + within < watermark`` no future row can land in
-    the deadline window either, so ``max_stage`` can never change: emit
-    it once with ``is_final=True``, drop the event rows, keep a 1-flag
-    tombstone.  Until then state is PRUNED to the provably-live slice:
+def emit_funnel(user, acc, version: int, final=None, *, stages, within_us):
+    ts, _, types, *done = acc
+    if done and done[0]:
+        return None  # tombstone: the user's final row was its last
+    return pd.DataFrame(
+        {
+            "user_id": [int(user)],
+            "max_stage": [funnel_progress(ts, types, stages, within_us)],
+            "version": [version],
+            **final_col(1, final),
+        }
+    )
+
+
+def freeze_funnel(acc, wm_us: int, *, stages, within_us: int):
+    """The funnel freeze rule (r11 verdict Next #5): unlike the
+    fold-family path statistics, the anchored funnel HAS a semantic
+    horizon — once the anchor is below the watermark it is FROZEN (the
+    final anchor is the earliest stage-1, and every future row has ts ≥
+    watermark > anchor), and once ``anchor + within < watermark`` no
+    future row can land in the deadline window either, so ``max_stage``
+    can never change: the whole sequence freezes (emitted once as the
+    user's final row) and state keeps a 1-flag tombstone (``done``, empty
+    arrays; later rows are dropped).  Until then state is PRUNED to the
+    provably-live slice:
 
     * anchor frozen (anchor < wm), not expired → only ``[anchor,
       anchor+within]`` rows can still matter (rows before the anchor are
@@ -371,111 +381,44 @@ def make_funnel_fn(stages: tuple[str, ...], within_us: int, evict: bool = False)
       a ≥ wm or a = current anchor ≥ wm, and progression needs
       t > a ≥ wm > t — impossible.
 
-    Both prunes are lossless for the final answer (re-inserted replayed
-    rows land outside the live slice and change nothing), so finals ∪
+    Both prunes are lossless for the answer (re-inserted replayed rows
+    land outside the live slice and change nothing), so finals ∪
     max-version live of unfinalized users ≡ the batch A44 greedy,
-    unit-pinned in tests/test_sequence_evict.py.
+    unit-pinned in tests/test_sequence_evict.py."""
+    ts, eid, types, done = acc
+    if done:
+        return None, ([], [], [], True)
+    anchor = _anchor(ts, types, stages[0])
+    if anchor is not None and anchor + within_us < wm_us:
+        return acc, ([], [], [], True)
+    if anchor is not None and anchor < wm_us:
+        lo, hi = anchor, anchor + within_us
+    else:
+        lo, hi = wm_us, None
+    keep = [i for i, t in enumerate(ts) if t >= lo and (hi is None or t <= hi)]
+    return None, (*([a[i] for i in keep] for a in (ts, eid, types)), False)
 
-    QUIESCENT keys finalize too (r12 ADVICE — the exact gap fixed for
-    the as-of join in r12 but left NoTimeout here): whenever a live
-    anchor exists the key arms an EVENT-TIME TIMEOUT at the one instant
-    it can finalize without new data — the anchor's deadline falling
-    below the watermark — so other keys' traffic advancing the watermark
-    flushes it.  The timeout flush bumps ``version`` by 1 and emits ONLY
-    the final row (nothing changed for the live view), so drains keep
-    their finals-take-precedence contract.  Anchorless keys never arm
-    (they cannot finalize without a new stage-1 row — no idle wakes)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user = int(key[0])
-        done = False
-        timed_out = evict and state.hasTimedOut
-        if state.exists:
-            if evict:
-                ts, eid, types, version, done = state.get
-            else:
-                ts, eid, types, version = state.get
-            ts, eid, types = list(ts), list(eid), list(types)
-        else:
-            ts, eid, types, version = [], [], [], 0
-        absorbed = 0
-        if not timed_out:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                absorbed += len(pdf)
-                if done:
-                    continue  # tombstoned: the outcome is immutable
-                ts, eid, types = merge_sequence(
-                    ts, eid, types,
-                    zip(
-                        pdf["ts_us"].tolist(),
-                        pdf["event_id"].tolist(),
-                        pdf["event_type"].tolist(),
-                    ),
-                )
-        if (not absorbed and not timed_out) or done:
-            return
-        version += absorbed
+def wake_funnel(acc, *, stages, within_us: int):
+    """QUIESCENT keys finalize too (r12 ADVICE): a key with an anchor
+    wakes when the anchor's deadline falls below the watermark, the one
+    instant it can finalize without new rows.  Anchorless keys never
+    arm (they cannot finalize without a new stage-1 row)."""
+    anchor = _anchor(acc[0], acc[2], stages[0])
+    return None if anchor is None else anchor + within_us
 
-        def frame(stage, final):
-            cols = {
-                "user_id": [user],
-                "max_stage": [stage],
-                "version": [version],
-            }
-            if evict:
-                cols["is_final"] = [final]
-            return pd.DataFrame(cols)
 
-        if evict:
-            wm_ms = state.getCurrentWatermarkMs()
-            wm_us = wm_ms * 1000
-            anchor = None
-            for t, y in zip(ts, types):
-                if y == stages[0]:
-                    anchor = t
-                    break
-            if anchor is not None and anchor + within_us < wm_us:
-                if timed_out:
-                    # the flush emission gets its own version so drains
-                    # see it as the newest frame for this user
-                    version += 1
-                yield frame(
-                    funnel_progress(ts, types, stages, within_us), True
-                )
-                state.update(([], [], [], version, True))
-                return
-            if anchor is not None and anchor < wm_us:
-                lo, hi = anchor, anchor + within_us
-            else:
-                lo, hi = wm_us, None
-            keep = [
-                i
-                for i, t in enumerate(ts)
-                if t >= lo and (hi is None or t <= hi)
-            ]
-            stage_now = funnel_progress(ts, types, stages, within_us)
-            ts = [ts[i] for i in keep]
-            eid = [eid[i] for i in keep]
-            types = [types[i] for i in keep]
-            if anchor is not None:
-                # wake at the exact event-time the anchor's deadline
-                # falls below the watermark — the only instant this key
-                # can finalize without new data (no periodic idle wakes)
-                state.setTimeoutTimestamp(
-                    max((anchor + within_us) // 1000 + 1, wm_ms + 1)
-                )
-            state.update((ts, eid, types, version, False))
-            if not timed_out:
-                yield frame(stage_now, False)
-            return
-        state.update((ts, eid, types, version))
-        yield frame(funnel_progress(ts, types, stages, within_us), False)
-
-    return fn
+def funnel_freeze(stages: tuple[str, ...], within_us: int) -> FreezeOp:
+    """The funnel's freeze-kernel pieces (the keep twin runs ``fold`` and
+    ``live`` on the versioned fold)."""
+    kw = {"stages": stages, "within_us": within_us}
+    return FreezeOp(
+        _fold_events,
+        partial(freeze_funnel, **kw),
+        partial(emit_funnel, **kw),
+        partial(wake_funnel, **kw),
+        init=([], [], [], False),
+    )
 
 
 def streaming_sequence_funnel(
@@ -489,31 +432,14 @@ def streaming_sequence_funnel(
     anchor AFTER later stages still converges to the batch answer).
     ``evict=True`` (needs a watermarked source) finalizes users whose
     anchor + within < watermark and prunes dead rows from the rest —
-    see :func:`make_funnel_fn` for the horizon proof."""
-    keyed = stream.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.unix_micros("ts").alias("ts_us"),
+    see :func:`freeze_funnel` for the horizon proof."""
+    return _sequence_twin(
+        stream, evict, funnel_freeze(stages, within_us),
+        (
+            STATE_SCHEMA, FUNNEL_OUTPUT_SCHEMA,
+            FUNNEL_EVICT_STATE_SCHEMA, FUNNEL_EVICT_OUTPUT_SCHEMA,
+        ),
         F.col("event_type").cast("string").alias("event_type"),
-        # keep the watermark-tagged column alive in evict mode
-        *([F.col("ts")] if evict else []),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_funnel_fn(stages, within_us, evict=evict),
-        outputStructType=(
-            FUNNEL_EVICT_OUTPUT_SCHEMA if evict else FUNNEL_OUTPUT_SCHEMA
-        ),
-        stateStructType=(
-            FUNNEL_EVICT_STATE_SCHEMA if evict else STATE_SCHEMA
-        ),
-        outputMode="append",
-        # evict mode wakes keys when their anchor's deadline crosses the
-        # watermark so quiescent users still finalize (r12 ADVICE)
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if evict
-            else GroupStateTimeout.NoTimeout
-        ),
     )
 
 
@@ -575,122 +501,70 @@ def gap_sessions(
     return out
 
 
-def make_session_fn(gap_us: int, evict: bool = False):
-    """``evict=True``: a session whose end satisfies ``end + gap <
-    watermark`` is CLOSED — every future row has ts ≥ watermark, so its
-    distance to any row of that session strictly exceeds the gap: it
-    can neither extend, join, nor split it.  Closed sessions form a
-    prefix of the ordered session list; they are emitted once with
-    ``is_final=True`` and their rows leave state; ``closed_n`` in state
-    keeps the global 1-based session numbering exact.  Drain = finals ∪
-    max-version live with FINALS TAKING PRECEDENCE by (user_id,
-    session_idx) ≡ the batch sessionization, test-pinned: a timeout
-    flush (below) finalizes sessions whose last live frame may remain
-    the max-version one.
+def emit_sessions(user, acc, version: int, final=None, *, gap_us: int):
+    ts, _, vals, *closed_n = acc
+    rows = gap_sessions(ts, vals, gap_us)
+    if not rows:
+        return None
+    first = closed_n[0] if closed_n else 0
+    n = len(rows)
+    return pd.DataFrame(
+        {
+            "user_id": _full(n, int(user)),
+            "session_idx": _i64([first + r[0] for r in rows]),
+            "session_start_us": _i64([r[1] for r in rows]),
+            "session_end_us": _i64([r[2] for r in rows]),
+            "n_events": _i64([r[3] for r in rows]),
+            "value_sum": _i64([r[4] for r in rows]),
+            "version": _full(n, version),
+            **final_col(n, final),
+        },
+        copy=False,
+    )
 
-    QUIESCENT keys finalize too (r12 ADVICE): whenever open rows remain
-    the key arms an EVENT-TIME TIMEOUT at the instant its tail session's
-    gap expires — ``last_ts + gap`` crossing the watermark — so other
-    keys' traffic flushes idle keys.  The timeout flush bumps
-    ``version`` and emits only the finals (the open remainder, if any,
-    is re-emitted live at the bumped version so the live view never
-    re-carries a flushed session)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user = int(key[0])
-        closed_n = 0
-        timed_out = evict and state.hasTimedOut
-        if state.exists:
-            if evict:
-                ts, eid, vals, version, closed_n = state.get
-            else:
-                ts, eid, vals, version = state.get
-            ts, eid, vals = list(ts), list(eid), list(vals)
-        else:
-            ts, eid, vals, version = [], [], [], 0
-        absorbed = 0
-        if not timed_out:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                absorbed += len(pdf)
-                # same linear two-run merge as the type-sequence state (the
-                # payload column is the cents value instead of the type)
-                ts, eid, vals = merge_sequence(
-                    ts, eid, vals,
-                    zip(
-                        pdf["ts_us"].tolist(),
-                        pdf["event_id"].tolist(),
-                        pdf["cents"].tolist(),
-                    ),
-                )
-        if not absorbed and not timed_out:
-            return
-        version += absorbed
-        rows = gap_sessions(ts, vals, gap_us)
+def freeze_sessions(acc, wm_us: int, *, gap_us: int):
+    """The sessions freeze rule: a session whose end satisfies ``end +
+    gap < watermark`` is CLOSED — every future row has ts ≥ watermark,
+    so its distance to any row of that session strictly exceeds the gap:
+    it can neither extend, join, nor split it.  Closed sessions form a
+    prefix of the ordered session list, cut at the last session boundary
+    (a gap > ``gap_us``) among the rows with ``ts + gap < wm``; they
+    leave state, and ``closed_n`` keeps the global 1-based session
+    numbering exact."""
+    ts, eid, vals, closed_n = acc
+    k = bisect.bisect_left(ts, wm_us - gap_us)
+    while 0 < k < len(ts) and ts[k] - ts[k - 1] <= gap_us:
+        k -= 1
+    if not k:
+        return None, acc
+    n_closed = 1 + sum(b - a > gap_us for a, b in zip(ts, ts[1:k]))
+    return (
+        (ts[:k], eid[:k], vals[:k], closed_n),
+        (ts[k:], eid[k:], vals[k:], closed_n + n_closed),
+    )
 
-        def frame(srows, final):
-            n = len(srows)
-            cols = {
-                "user_id": _full(n, user),
-                "session_idx": _i64([closed_n + r[0] for r in srows]),
-                "session_start_us": _i64([r[1] for r in srows]),
-                "session_end_us": _i64([r[2] for r in srows]),
-                "n_events": _i64([r[3] for r in srows]),
-                "value_sum": _i64([r[4] for r in srows]),
-                "version": _full(n, version),
-            }
-            if evict:
-                cols["is_final"] = np.full(n, final, dtype=bool)
-            return pd.DataFrame(cols, copy=False)
 
-        if evict:
-            wm_ms = state.getCurrentWatermarkMs()
-            wm_us = wm_ms * 1000
-            n_closed = 0
-            while (
-                n_closed < len(rows)
-                and rows[n_closed][2] + gap_us < wm_us
-            ):
-                n_closed += 1
-            if timed_out and not n_closed:
-                # spurious wake (clock skew between the armed target and
-                # the strict < close test): re-arm and go quiet
-                if ts:
-                    state.setTimeoutTimestamp(
-                        max((ts[-1] + gap_us) // 1000 + 1, wm_ms + 1)
-                    )
-                state.update((ts, eid, vals, version, closed_n))
-                return
-            if timed_out:
-                # flush emissions get their own version so the drain's
-                # max-version live view supersedes the pre-flush frame
-                version += 1
-            if n_closed:
-                yield frame(rows[:n_closed], True)
-                n_drop = sum(r[3] for r in rows[:n_closed])
-                ts, eid, vals = ts[n_drop:], eid[n_drop:], vals[n_drop:]
-                rows = [
-                    (r[0] - n_closed, r[1], r[2], r[3], r[4])
-                    for r in rows[n_closed:]
-                ]
-                closed_n += n_closed
-            if ts:
-                # wake at the exact event-time the open tail's gap
-                # expires under the watermark (no periodic idle wakes);
-                # an emptied key never re-arms — new data wakes it
-                state.setTimeoutTimestamp(
-                    max((ts[-1] + gap_us) // 1000 + 1, wm_ms + 1)
-                )
-            state.update((ts, eid, vals, version, closed_n))
-        else:
-            state.update((ts, eid, vals, version))
-        if rows:
-            yield frame(rows, False)
+def wake_sessions(acc, *, gap_us: int):
+    """QUIESCENT keys close too (r12 ADVICE): a key with open rows wakes
+    when its tail session's gap expires under the watermark; an emptied
+    key never arms — new rows wake it."""
+    ts = acc[0]
+    return ts[-1] + gap_us if ts else None
 
-    return fn
+
+def session_freeze(gap_us: int) -> FreezeOp:
+    """Gap sessions' freeze-kernel pieces.  Drain = finals ∪ max-version
+    live with FINALS TAKING PRECEDENCE by (user_id, session_idx) ≡ the
+    batch sessionization, test-pinned: a timeout flush finalizes sessions
+    whose last live frame may remain the max-version one."""
+    return FreezeOp(
+        partial(_fold_sequence, payload="cents"),
+        partial(freeze_sessions, gap_us=gap_us),
+        partial(emit_sessions, gap_us=gap_us),
+        partial(wake_sessions, gap_us=gap_us),
+        init=([], [], [], 0),
+    )
 
 
 def streaming_gap_sessions(
@@ -706,31 +580,13 @@ def streaming_gap_sessions(
     ``evict=True`` (needs a watermarked source) finalizes closed
     sessions out of state — the unbounded-stream mode.
     Expects (user_id, event_id, ts, cents)."""
-    keyed = stream.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.unix_micros("ts").alias("ts_us"),
+    return _sequence_twin(
+        stream, evict, session_freeze(gap_us),
+        (
+            SESSION_STATE_SCHEMA, SESSION_OUTPUT_SCHEMA,
+            SESSION_EVICT_STATE_SCHEMA, SESSION_EVICT_OUTPUT_SCHEMA,
+        ),
         F.col("cents").cast("long").alias("cents"),
-        # keep the watermark-tagged column alive in evict mode (see
-        # streaming_transitions)
-        *([F.col("ts")] if evict else []),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_session_fn(gap_us, evict=evict),
-        outputStructType=(
-            SESSION_EVICT_OUTPUT_SCHEMA if evict else SESSION_OUTPUT_SCHEMA
-        ),
-        stateStructType=(
-            SESSION_EVICT_STATE_SCHEMA if evict else SESSION_STATE_SCHEMA
-        ),
-        outputMode="append",
-        # evict mode wakes keys when their tail session's gap expires
-        # under the watermark so quiescent users still close (r12 ADVICE)
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if evict
-            else GroupStateTimeout.NoTimeout
-        ),
     )
 
 
@@ -942,162 +798,93 @@ def _asof_lookup_np(
     return vals, cents, mask
 
 
-def make_asof_fn(evict: bool = False):
-    """``evict=True`` enables watermark eviction for the TWO-SIDED state
-    (round 11, extending the interval_state contract to the as-of join):
+def _fold_asof(acc, pdf: pd.DataFrame):
+    c_ts, c_eid, c_cents, p_ts, p_cents = acc or ([], [], [], [], [])
+    rows = list(
+        zip(
+            pdf["ts_us"].tolist(),
+            pdf["event_id"].tolist(),
+            pdf["cents"].tolist(),
+            pdf["side"].tolist(),
+        )
+    )
+    clicks = [(t, e, v) for t, e, v, side in rows if side == "L"]
+    purchases = [(t, v) for t, _, v, side in rows if side != "L"]
+    if clicks:
+        c_ts, c_eid, c_cents = merge_sequence(c_ts, c_eid, c_cents, clicks)
+    if purchases:
+        p_ts, p_cents = fold_purchases(p_ts, p_cents, purchases)
+    return c_ts, c_eid, c_cents, p_ts, p_cents
+
+
+def emit_asof(user, acc, version: int, final=None):
+    c_ts, c_eid, c_cents, p_ts, p_cents = acc
+    if not c_ts:
+        return None
+    n = len(c_ts)
+    # direct IntegerArray construction skips pd.array's per-element
+    # inference; no-match columns stay typed nullable Int64 for
+    # purchase-less users (an object column of Nones trips the
+    # serializer's concat FutureWarning and loses the long dtype)
+    h_vals, h_cents, h_mask = _asof_lookup_np(c_ts, p_ts, p_cents)
+    return pd.DataFrame(
+        {
+            "user_id": _full(n, int(user)),
+            "event_id": _i64(c_eid),
+            "ts_us": _i64(c_ts),
+            "cents": _i64(c_cents),
+            "last_purchase_us": pd.arrays.IntegerArray(h_vals, h_mask),
+            "last_purchase_cents": pd.arrays.IntegerArray(h_cents, h_mask),
+            "version": _full(n, version),
+            **final_col(n, final),
+        },
+        copy=False,
+    )
+
+
+def freeze_asof(acc, wm_us: int):
+    """The as-of freeze rule for the TWO-SIDED state (round 11):
 
     - a CLICK below the watermark is FINAL — any not-yet-seen purchase
       is either ≥ wm (strictly after the click, never as-of eligible)
       or < wm (dropped by Spark as late), so its match can never change
-      again; it is emitted once with ``is_final=True`` and leaves state.
+      again; the frozen clicks carry the FULL purchase map, so they are
+      matched before the purge below, and leave state.
     - among PURCHASES below the watermark only the LATEST survives: for
       every live/future click (ts ≥ wm) the as-of winner among frozen
       purchases is their max-ts one — the rest are dominated forever.
 
-    finals ∪ max-version live (finals taking precedence by event_id —
-    a timeout flush finalizes clicks whose last live frame may remain
-    the max-version one) ≡ the batch ASOF join exactly (no semantic
-    loss — unlike the windowed twins, this eviction is lossless),
-    test-pinned; state shrinks to the horizon's clicks plus the
-    in-horizon purchases + one anchor purchase.  QUIESCENT keys flush
-    too (the r11 ADVICE gap — ``if not absorbed: return`` alone never
-    re-evaluated eviction for idle keys): evict mode registers an
-    EVENT-TIME TIMEOUT at the precise next-evictable event time (the
-    first live click, or the second-oldest purchase — r12 ADVICE
-    replaced the wm+60s literal, which woke every idle key each
-    micro-batch under larger watermark delays), so when the watermark
-    advances past it on other keys' traffic the state fn fires with
-    ``hasTimedOut`` and runs the same eviction sweep with no input
-    rows, re-arming while anything evictable remains.  Requires
-    ``withWatermark`` upstream."""
+    A purge with no frozen click still counts as a freeze (a timeout
+    flush bumps ``version``) but renders no final rows.  The eviction is
+    lossless: state shrinks to the horizon's clicks plus the in-horizon
+    purchases + one anchor purchase."""
+    c_ts, c_eid, c_cents, p_ts, p_cents = acc
+    cut = bisect.bisect_left(c_ts, wm_us)
+    pcut = bisect.bisect_left(p_ts, wm_us)
+    if not cut and pcut <= 1:
+        return None, acc
+    p = max(pcut - 1, 0)
+    return (
+        (c_ts[:cut], c_eid[:cut], c_cents[:cut], p_ts, p_cents),
+        (c_ts[cut:], c_eid[cut:], c_cents[cut:], p_ts[p:], p_cents[p:]),
+    )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user = int(key[0])
-        timed_out = evict and state.hasTimedOut
-        if state.exists:
-            c_ts, c_eid, c_cents, p_ts, p_cents, version = state.get
-            c_ts, c_eid, c_cents = list(c_ts), list(c_eid), list(c_cents)
-            p_ts, p_cents = list(p_ts), list(p_cents)
-        else:
-            c_ts, c_eid, c_cents, p_ts, p_cents, version = [], [], [], [], [], 0
-        absorbed = 0
-        if not timed_out:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                absorbed += len(pdf)
-                # one numpy side-mask instead of two pandas boolean
-                # row-subsets (per-group constant cost, guide §4)
-                sides = pdf["side"].to_numpy()
-                b_ts = pdf["ts_us"].tolist()
-                b_cents = pdf["cents"].tolist()
-                lmask = sides == "L"
-                if lmask.any():
-                    b_eid = pdf["event_id"].tolist()
-                    c_ts, c_eid, c_cents = merge_sequence(
-                        c_ts, c_eid, c_cents,
-                        [
-                            (t, e, v)
-                            for t, e, v, is_l in zip(
-                                b_ts, b_eid, b_cents, lmask.tolist()
-                            )
-                            if is_l
-                        ],
-                    )
-                if not lmask.all():
-                    p_ts, p_cents = fold_purchases(
-                        p_ts, p_cents,
-                        [
-                            (t, v)
-                            for t, v, is_l in zip(b_ts, b_cents, lmask.tolist())
-                            if not is_l
-                        ],
-                    )
-        if not absorbed and not timed_out:
-            return
-        version += absorbed
 
-        def frame(cts, ceid, ccents, hits, final):
-            n = len(cts)
-            # hits = (values int64 array, null mask) from asof_lookup;
-            # direct IntegerArray construction skips pd.array's per-element
-            # inference while producing the identical nullable column
-            h_vals, h_cents, h_mask = hits
-            cols = {
-                "user_id": _full(n, user),
-                "event_id": _i64(ceid),
-                "ts_us": _i64(cts),
-                "cents": _i64(ccents),
-                "last_purchase_us": pd.arrays.IntegerArray(h_vals, h_mask),
-                "last_purchase_cents": pd.arrays.IntegerArray(h_cents, h_mask),
-                "version": _full(n, version),
-            }
-            if evict:
-                cols["is_final"] = np.full(n, final, dtype=bool)
-            return pd.DataFrame(cols, copy=False)
+def wake_asof(acc):
+    """QUIESCENT keys flush too (r11/r12 ADVICE): the next evictable event
+    time is the first live click freezing (``c_ts[0] < wm``) or the
+    second purchase being dominated (``p_ts[1] < wm``), so an idle key
+    wakes exactly once per state transition, never per micro-batch."""
+    c_ts, p_ts = acc[0], acc[3]
+    cands = c_ts[:1] + p_ts[1:2]
+    return min(cands) if cands else None
 
-        if evict:
-            import bisect
 
-            wm_ms = state.getCurrentWatermarkMs()
-            wm_us = wm_ms * 1000
-            cut = bisect.bisect_left(c_ts, wm_us)
-            pcut = bisect.bisect_left(p_ts, wm_us)
-
-            def next_evict_ms() -> int:
-                # the exact event-time at which something NEW becomes
-                # evictable — the first live click freezing (c_ts[0] <
-                # wm) or the second purchase being dominated (p_ts[1] <
-                # wm) — clamped above the current watermark.  Precise
-                # re-arm instead of the r12 wm+60s literal (ADVICE):
-                # under any watermark delay an idle key wakes exactly
-                # once per state transition, never per micro-batch.
-                cands = []
-                if c_ts:
-                    cands.append(c_ts[0])
-                if len(p_ts) > 1:
-                    cands.append(p_ts[1])
-                return max(min(cands) // 1000 + 1, wm_ms + 1)
-
-            if timed_out and cut == 0 and pcut <= 1:
-                # idle key, nothing evictable yet: re-arm and go quiet
-                if c_ts or len(p_ts) > 1:
-                    state.setTimeoutTimestamp(next_evict_ms())
-                state.update(
-                    (c_ts, c_eid, c_cents, p_ts, p_cents, version)
-                )
-                return
-            if timed_out:
-                # a flush emission needs its own version so the drain's
-                # max-version live view supersedes the pre-flush frame
-                version += 1
-            if cut > 0:
-                # frozen clicks: matched against the FULL purchase map,
-                # emitted exactly once, then evicted
-                fh = _asof_lookup_np(c_ts[:cut], p_ts, p_cents)
-                yield frame(c_ts[:cut], c_eid[:cut], c_cents[:cut], fh, True)
-                c_ts, c_eid, c_cents = c_ts[cut:], c_eid[cut:], c_cents[cut:]
-            # purchase purge: in-horizon ones plus the latest frozen one
-            # (the only frozen purchase any future click can match)
-            if pcut > 1:
-                p_ts, p_cents = p_ts[pcut - 1 :], p_cents[pcut - 1 :]
-            # re-arm while anything can still freeze (live clicks, or
-            # in-horizon purchases that a later watermark dominates) —
-            # at the precise next-evictable event time, not a literal
-            if c_ts or len(p_ts) > 1:
-                state.setTimeoutTimestamp(next_evict_ms())
-        state.update((c_ts, c_eid, c_cents, p_ts, p_cents, version))
-        if not c_ts:
-            return
-        hits = _asof_lookup_np(c_ts, p_ts, p_cents)
-        # no-match columns are null for purchase-less users: pandas
-        # nullable Int64 keeps them typed (an object column of Nones trips
-        # the serializer's concat FutureWarning and loses the long dtype)
-        yield frame(c_ts, c_eid, c_cents, hits, False)
-
-    return fn
+#: evict-mode as-of join: finals ∪ max-version live (finals taking
+#: precedence by event_id — a timeout flush finalizes clicks whose last
+#: live frame may remain the max-version one) ≡ the batch ASOF join
+#: exactly, test-pinned
+ASOF_FREEZE = FreezeOp(_fold_asof, freeze_asof, emit_asof, wake_asof)
 
 
 def streaming_asof_join(stream: DataFrame, evict: bool = False) -> DataFrame:
@@ -1119,29 +906,14 @@ def streaming_asof_join(stream: DataFrame, evict: bool = False) -> DataFrame:
     horizon (the same documented loss as every windowed twin here).
     Expects (user_id, event_id, ts, cents, side) with side ∈ {'L','R'}.
     """
-    keyed = stream.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.unix_micros("ts").alias("ts_us"),
+    return _sequence_twin(
+        stream, evict, ASOF_FREEZE,
+        (
+            ASOF_STATE_SCHEMA, ASOF_OUTPUT_SCHEMA,
+            ASOF_STATE_SCHEMA, ASOF_EVICT_OUTPUT_SCHEMA,
+        ),
         F.col("cents").cast("long").alias("cents"),
         F.col("side").cast("string").alias("side"),
-        # evict mode must RETAIN the watermark-tagged event-time column:
-        # projecting it away severs the watermark and
-        # getCurrentWatermarkMs() raises inside the state fn
-        *([F.col("ts")] if evict else []),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_asof_fn(evict=evict),
-        outputStructType=ASOF_EVICT_OUTPUT_SCHEMA if evict else ASOF_OUTPUT_SCHEMA,
-        stateStructType=ASOF_STATE_SCHEMA,
-        outputMode="append",
-        # evict mode times out quiescent keys on watermark advance so
-        # their frozen clicks flush and leave state (r11 ADVICE)
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if evict
-            else GroupStateTimeout.NoTimeout
-        ),
     )
 
 
@@ -2699,17 +2471,6 @@ def dwells_from_series(
     return grid
 
 
-def _fold_dwell_frame(acc, pdf: pd.DataFrame):
-    return merge_sequence(
-        *(acc or ((), (), ())),
-        zip(
-            pdf["ts_us"].tolist(),
-            pdf["event_id"].tolist(),
-            pdf["event_type"].tolist(),
-        ),
-    )
-
-
 def emit_dwell(user, acc, version):
     ts, _, types = acc
     grid = dwells_from_series(ts, types)
@@ -2747,25 +2508,24 @@ def streaming_dwell_grid(stream: DataFrame) -> DataFrame:
         F.col("event_type").cast("string").alias("event_type"),
     )
     return versioned_fold_stream(
-        keyed, "user_id", _fold_dwell_frame, emit_dwell,
+        keyed, "user_id", _fold_events, emit_dwell,
         DWELL_STATE_SCHEMA, DWELL_OUTPUT_SCHEMA,
     )
 
 
 # ------------- T47: per-user eviction state-size probe (round 16) ---------
 #: r15 verdict #6: the twins' state bounds were unit-pinned but never
-#: MEASURED in a driver-visible artifact.  This probe applies the
-#: make_sequence_fn(evict=True) retention rule — watermark cut at
-#: bisect_left + one below-watermark anchor — to the same ordered
-#: replay and emits the per-key LIVE STATE ROW COUNT through the
-#: normal output path, so the drained sizes are the real operational
-#: numbers, not a formula.  The timeout re-arms at the exact next
-#: state-transition instant (ts[1] crossing the watermark — the
-#: production fns' next-freeze idiom; r17 replaced the wm+1 literal
-#: that woke every key each micro-batch): every key holding more than
-#: the anchor still sweeps at or before the final watermark whenever a
-#: trim remains, so the drained sizes stay replay-chunk-independent and
-#: exactly SQL-expressible (the `stream_state_budget` gate).
+#: MEASURED in a driver-visible artifact.  This probe runs the evict-mode
+#: transitions freeze rule (:func:`freeze_sequence`: watermark cut at
+#: bisect_left + one below-watermark anchor, and its wake at ts[1]) on the
+#: freeze kernel over the same ordered replay, and emits the per-key LIVE
+#: STATE ROW COUNT through the normal output path, so the drained sizes
+#: are the real operational numbers, not a formula.  Every key holding
+#: more than the anchor still sweeps at or before the final watermark
+#: whenever a trim remains, so the drained sizes stay
+#: replay-chunk-independent and exactly SQL-expressible (the
+#: `stream_state_budget` gate).  The output has no ``is_final`` column:
+#: the drain is the max-version row per key.
 BUDGET_STATE_SCHEMA = T.StructType(
     [
         T.StructField("ts_us", T.ArrayType(T.LongType())),
@@ -2782,65 +2542,27 @@ BUDGET_OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def make_state_budget_fn():
-    """Retention-rule mirror of ``make_sequence_fn(evict=True)``
-    (sequence_state.py:122 — the bisect cut keeping ``ts[cut-1:]``:
-    everything at/above the watermark plus ONE frozen anchor), reduced
-    to the ts list since only SIZE is reported."""
-    import bisect
+def _fold_budget_ts(acc, pdf: pd.DataFrame):
+    # batch rows are unordered: one sort of state+batch (timsort gallops
+    # over the presorted state run); only the SIZE is reported, so the
+    # state is the ts list alone
+    return (sorted([*(acc[0] if acc else ()), *pdf["ts_us"].tolist()]),)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user = int(key[0])
-        timed_out = state.hasTimedOut
-        if state.exists:
-            ts, version = state.get
-            ts = list(ts)
-        else:
-            ts, version = [], 0
-        absorbed = 0
-        if not timed_out:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                absorbed += len(pdf)
-                # batch rows are unordered: one sort of state+batch (timsort
-                # gallops over the presorted state run) replaces per-row
-                # insort, and tolist() replaces per-element Series access
-                ts = sorted(ts + pdf["ts_us"].tolist())
-        if not absorbed and not timed_out:
-            return
-        version += absorbed + (1 if timed_out else 0)
 
-        wm_ms = state.getCurrentWatermarkMs()
-        cut = bisect.bisect_left(ts, wm_ms * 1000)
-        if cut > 1:
-            ts = ts[cut - 1 :]
-        if len(ts) > 1:
-            # exact re-arm (r17): the cut only advances when the watermark
-            # passes ts[1] (cut > 1 ⟺ ts[1] < wm), so waking at that
-            # instant — the sequence/session fns' proven idiom — sweeps at
-            # every state TRANSITION instead of every watermark advance
-            # (the r16 wm+1 literal woke all ~1.5k keys each micro-batch,
-            # doubling the replay's per-group fixed cost).  The final
-            # drained size is unchanged: a key whose ts[1] never falls
-            # below the final watermark has nothing left to trim, and one
-            # whose ts[1] does gets its sweep at or before the final
-            # batch; the max-version drain still selects each key's last
-            # emission.
-            state.setTimeoutTimestamp(max(ts[1] // 1000 + 1, wm_ms + 1))
-        state.update((ts, version))
-        yield pd.DataFrame(
-            {
-                "user_id": _full(1, user),
-                "n_state": _full(1, len(ts)),
-                "version": _full(1, version),
-            },
-            copy=False,
-        )
+def emit_budget(user, acc, version: int, final=None) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "user_id": _full(1, int(user)),
+            "n_state": _full(1, len(acc[0])),
+            "version": _full(1, version),
+        },
+        copy=False,
+    )
 
-    return fn
+
+BUDGET_FREEZE = FreezeOp(
+    _fold_budget_ts, freeze_sequence, emit_budget, wake_sequence
+)
 
 
 def streaming_state_rows(stream: DataFrame) -> DataFrame:
@@ -2851,10 +2573,7 @@ def streaming_state_rows(stream: DataFrame) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         F.col("ts"),
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_state_budget_fn(),
-        outputStructType=BUDGET_OUTPUT_SCHEMA,
-        stateStructType=BUDGET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return freeze_fold_stream(
+        keyed, "user_id", BUDGET_FREEZE,
+        BUDGET_STATE_SCHEMA, BUDGET_OUTPUT_SCHEMA,
     )

@@ -4,7 +4,10 @@
 Twenty-two operators share it — the 15 bucket-series operators and the
 Mann-Whitney, KMV and dwell folds of ``sequence_state.py``, plus the
 quantile, priority-sample, Space-Saving and discovery folds of their own
-modules.  Each contributes only its input ``select``, a pure ``fold`` and
+modules.  The keep (non-evicting) twins of transitions, funnel, sessions,
+as-of join and islands run on it too, with the fold and live emitter
+their evict twins give the watermark-freeze kernel
+(``freeze_fold.py``).  Each contributes only its input ``select``, a pure ``fold`` and
 an ``emit`` frame builder; the kernel alone owns the ``GroupState``
 protocol (Structured Streaming's stateful operator as one function over
 key, rows and state).
@@ -25,9 +28,10 @@ Contract:
   key, so it totally orders the key's emissions.
 * **Emit.** ``emit(key, acc, version) -> DataFrame | None`` runs once per
   non-empty batch, after the state update, with ``key`` the grouping
-  value as Spark passes it.  It re-derives the key's WHOLE current answer
-  from ``acc`` (a late row may revise any earlier output row) and stamps
-  every row with ``version``, or returns None for no row yet.
+  value as Spark passes it (the tuple of values for a multi-column
+  key).  It re-derives the key's WHOLE current answer from ``acc`` (a
+  late row may revise any earlier output row) and stamps every row with
+  ``version``, or returns None for no row yet.
 * **Empty batch.** A batch with no rows for the key emits nothing and
   neither creates nor touches state.
 * **Drain.** Readers keep, per key, the rows of the maximum version: each
@@ -47,7 +51,7 @@ functions still resume.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -82,7 +86,7 @@ def versioned_fold_fn(fold: Fold, emit: Emit):
             return
         version += absorbed
         state.update((*acc, version))
-        out = emit(key[0], acc, version)
+        out = emit(key[0] if len(key) == 1 else key, acc, version)
         if out is not None:
             yield out
 
@@ -91,7 +95,7 @@ def versioned_fold_fn(fold: Fold, emit: Emit):
 
 def versioned_fold_stream(
     keyed: DataFrame,
-    key: str,
+    key: str | Sequence[str],
     fold: Fold,
     emit: Emit,
     state_schema: T.StructType,

@@ -32,6 +32,7 @@ import pandas as pd
 import pytest
 
 from project_obsidian_core_spark.streaming import discovery_state as D
+from project_obsidian_core_spark.streaming import interval_state as IS
 from project_obsidian_core_spark.streaming import quantile_state as Q
 from project_obsidian_core_spark.streaming import sample_state as SA
 from project_obsidian_core_spark.streaming import sequence_state as S
@@ -105,7 +106,7 @@ FOLDS = {
         S.KMV_OUTPUT_SCHEMA,
     ),
     "dwell": (
-        S._fold_dwell_frame,
+        S._fold_events,
         S.emit_dwell,
         7,
         _event_batch,
@@ -259,19 +260,25 @@ def test_fold_bucket_sums_has_one_call_site():
     assert sites == [S.__file__], sites
 
 
-def test_package_has_nine_apply_in_pandas_sites():
-    # the versioned-fold kernel, plus the operators with a timeout,
-    # eviction or exactly-once emission: transitions, funnel, sessions,
-    # as-of, last_touch and state_budget (sequence_state), islands
-    # (interval_state) and the counter-reset delta (delta_stream)
+def test_package_has_four_apply_in_pandas_sites():
+    # one per stream kernel (versioned fold, watermark freeze) plus the
+    # counter-reset delta (delta_stream) and last_touch's exactly-once
+    # emission (sequence_state)
     sites = {}
     for path, src in _package_trees():
         n = len(_calls(ast.parse(src), "applyInPandasWithState"))
         if n:
             sites[os.path.relpath(path, PKG)] = n
-    assert sum(sites.values()) == 9, sites
-    assert sites[os.path.join("streaming", "versioned_fold.py")] == 1, sites
-    for mod in (D, Q, SA, TK):
+    assert sites == {
+        os.path.join("streaming", f): 1
+        for f in (
+            "versioned_fold.py",
+            "freeze_fold.py",
+            "delta_stream.py",
+            "sequence_state.py",
+        )
+    }, sites
+    for mod in (D, Q, SA, TK, IS):
         with open(mod.__file__) as fh:
             tree = ast.parse(fh.read())
         used = {

@@ -8,7 +8,9 @@ an equally empty oracle, so every result must also be non-empty.
 
 The empty-events corpus is sf0.001 with ``events.parquet`` cut to zero
 rows: every query over events must then match its (empty) oracle rather
-than fail inside the engine.
+than fail inside the engine.  The absorbing-events corpus keeps each
+user's first three events as view → click → purchase; the stationary
+Markov fold must then drain to zero rows like its oracle.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -37,6 +40,8 @@ UNTESTED_TWINS = [
     "stream_discovery_timeline",
     "stream_priority_sample",
 ]
+
+STAGES = ("view", "click", "purchase")
 
 #: the in-row Markov fold plus the versioned-fold twins that replay events
 EMPTY_EVENTS_QUERIES = [
@@ -65,14 +70,14 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.fixture(scope="module")
-def empty_events(sf_dir, tmp_path_factory):
-    """(dir, duckdb) for the sf0.001 corpus with zero events."""
-    d = tmp_path_factory.mktemp("empty_events")
+def _events_corpus(sf_dir, tmp_path_factory, name, rewrite):
+    """(dir, duckdb) for the sf0.001 corpus with ``rewrite`` applied to
+    the events table."""
+    d = tmp_path_factory.mktemp(name)
     for t in TABLES:
         src = f"{sf_dir}/{t}.parquet"
         if t == "events":
-            pq.write_table(pq.read_table(src).slice(0, 0), d / f"{t}.parquet")
+            pq.write_table(rewrite(pq.read_table(src)), d / f"{t}.parquet")
         else:
             os.symlink(src, d / f"{t}.parquet")
     con = _duck(str(d))
@@ -80,9 +85,42 @@ def empty_events(sf_dir, tmp_path_factory):
     con.close()
 
 
+@pytest.fixture(scope="module")
+def empty_events(sf_dir, tmp_path_factory):
+    """The sf0.001 corpus with zero events."""
+    yield from _events_corpus(
+        sf_dir, tmp_path_factory, "empty_events", lambda t: t.slice(0, 0)
+    )
+
+
+def _absorbing_chain(events: pa.Table) -> pa.Table:
+    """Each user's first three events in (ts, event_id) order, typed
+    view, click, purchase: ``purchase`` has no outgoing transition, so
+    the chain's mass drains into it and no type keeps support through
+    the last power-iteration rounds."""
+    df = events.to_pandas().sort_values(["user_id", "ts", "event_id"])
+    rank = df.groupby("user_id").cumcount()
+    df = df[rank < 3].assign(
+        event_type=rank[rank < 3].map(dict(enumerate(STAGES)))
+    )
+    return pa.Table.from_pandas(df, schema=events.schema, preserve_index=False)
+
+
+@pytest.fixture(scope="module")
+def absorbing_events(sf_dir, tmp_path_factory):
+    """The sf0.001 corpus whose events form an absorbing Markov chain."""
+    yield from _events_corpus(
+        sf_dir, tmp_path_factory, "absorbing_events", _absorbing_chain
+    )
+
+
 @pytest.mark.parametrize(
     "name",
-    [*UNTESTED_TWINS, *(f"empty_events:{q}" for q in EMPTY_EVENTS_QUERIES)],
+    [
+        *UNTESTED_TWINS,
+        *(f"empty_events:{q}" for q in EMPTY_EVENTS_QUERIES),
+        "absorbing_events:events_markov_stationary",
+    ],
 )
 def test_twin_matches_its_oracle(spark, sf_dir, duck, request, name):
     from project_obsidian_core_spark.plans.registry import ORACLES, QUERIES
@@ -95,7 +133,8 @@ def test_twin_matches_its_oracle(spark, sf_dir, duck, request, name):
     d_cols, d_rows = rel.columns, rel.fetchall()
 
     if corpus:
-        assert s_rows == [], f"{name} emitted rows without events"
+        # neither corpus leaves a type with support in the last rounds
+        assert s_rows == [], f"{name} emitted rows on {corpus}"
     else:
         assert s_rows, f"{name} drained no rows"
     assert sorted(s_cols) == sorted(d_cols)

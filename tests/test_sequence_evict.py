@@ -546,11 +546,16 @@ def test_funnel_evict_state_bound_direct(fake_state):
     are pruned; a frozen unexpired anchor keeps only its window slice."""
     import pandas as pd
 
-    from project_obsidian_core_spark.streaming.sequence_state import (
-        make_funnel_fn,
+    from project_obsidian_core_spark.streaming import sequence_state as S
+    from project_obsidian_core_spark.streaming.freeze_fold import (
+        freeze_fold_fn,
     )
 
-    fn = make_funnel_fn(_F_STAGES, _F_WITHIN_US, evict=True)
+    fn = freeze_fold_fn(
+        S.funnel_freeze(_F_STAGES, _F_WITHIN_US),
+        S.FUNNEL_EVICT_STATE_SCHEMA,
+        S.FUNNEL_EVICT_OUTPUT_SCHEMA,
+    )
 
     # anchorless user: 100 noise rows below the watermark all prune away
     st = fake_state(wm_ms=(BASE_US + 3_600_000_000) // 1000)
