@@ -14,15 +14,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from project_obsidian_core_spark.functions.units import ratio_of_sums
-
-
-def _time_filter(df: DataFrame, start, end) -> DataFrame:
-    if start is not None:
-        df = df.filter(F.col("time") >= F.lit(start).cast("timestamp"))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.lit(end).cast("timestamp"))
-    return df
+from project_obsidian_core_spark.analytics.sql import aggregate, in_list, in_order, quote, time_range
 
 
 def distinct_metrics(metrics: DataFrame) -> DataFrame:
@@ -40,16 +32,19 @@ def metric_series(
     end: datetime | str | None = None,
 ) -> DataFrame:
     """A9: AVG(metric_value) per bucket per metric name
-    (01-Connect_and_Metrics.ipynb cell-10)."""
-    df = _time_filter(metrics.filter(F.col("metric_name").isin(metric_names)), start, end)
-    return (
-        df.groupBy(
-            F.window("time", bucket).getField("start").alias("time_bucket"),
-            "metric_name",
-        )
-        .agg(F.avg("metric_value").alias("avg_value"))
-        .orderBy("time_bucket", "metric_name")
+    (01-Connect_and_Metrics.ipynb cell-10), ordered by (bucket, name).
+
+    The result has one row per bucket of the range per named metric —
+    what the dashboard collects — so it is finished in one partition
+    (one shuffle, no sampling job).
+    """
+    agg = aggregate(
+        metrics,
+        [in_list("metric_name", metric_names), *time_range(metrics.columns, start, end)],
+        [f"window(time, {quote(bucket)}).start AS time_bucket", "metric_name"],
+        ["avg(metric_value) AS avg_value"],
     )
+    return in_order(agg, "time_bucket", "metric_name")
 
 
 def buffer_hit_ratio(
@@ -62,28 +57,31 @@ def buffer_hit_ratio(
 ) -> DataFrame:
     """J2+A5: per-(bucket, instance) buffer cache hit ratio
     hit/(hit+read), aligned via conditional aggregation — the reference's
-    pivot-join (01-Connect_and_Metrics.ipynb cell-8).
+    pivot-join (01-Connect_and_Metrics.ipynb cell-8) — ordered by
+    (bucket, instance).
 
     A single shuffle: the conditional sums compute both series in one
-    aggregate rather than self-joining the long table.
+    aggregate rather than self-joining the long table.  The result has
+    one row per bucket of the range per instance — what the dashboard
+    collects — so it is finished in one partition.
     """
-    df = _time_filter(
-        metrics.filter(F.col("metric_name").isin([hit_metric, read_metric])), start, end
+    hit, read = (
+        f"sum(CASE WHEN metric_name = {quote(m)} THEN metric_value END)" for m in (hit_metric, read_metric)
     )
-    agg = df.groupBy(
-        F.window("time", bucket).getField("start").alias("time_bucket"),
-        "instance_id",
-    ).agg(
-        F.sum(F.when(F.col("metric_name") == hit_metric, F.col("metric_value"))).alias("blocks_hit"),
-        F.sum(F.when(F.col("metric_name") == read_metric, F.col("metric_value"))).alias("blocks_read"),
+    # functions.units.ratio_of_sums over the NULL-as-0 sums, as an
+    # aggregate expression (each sum is still computed once)
+    h, r = f"coalesce({hit}, 0.0D)", f"coalesce({read}, 0.0D)"
+    agg = aggregate(
+        metrics,
+        [in_list("metric_name", [hit_metric, read_metric]), *time_range(metrics.columns, start, end)],
+        [f"window(time, {quote(bucket)}).start AS time_bucket", "instance_id"],
+        [
+            f"{hit} AS blocks_hit",
+            f"{read} AS blocks_read",
+            f"CASE WHEN {h} + {r} > 0 THEN {h} / ({h} + {r}) ELSE 0.0D END AS hit_ratio",
+        ],
     )
-    return (
-        agg.withColumn(
-            "hit_ratio",
-            ratio_of_sums(F.coalesce("blocks_hit", F.lit(0.0)), F.coalesce("blocks_read", F.lit(0.0))),
-        )
-        .orderBy("time_bucket", "instance_id")
-    )
+    return in_order(agg, "time_bucket", "instance_id")
 
 
 def gap_fill_minutes(metrics: DataFrame, step_us: int = 60_000_000) -> DataFrame:

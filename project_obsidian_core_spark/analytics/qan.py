@@ -7,34 +7,55 @@ analyze_query_trend cell-4, multi-metric CTE+UNION cell-12) and
 notebooks/qan_analysis_example.ipynb (MySQL/PG top-N cells,
 metrics-comparison cell).
 
-All functions are pure logical-plan constructors: filters go first (so
-Catalyst pushes them into the parquet scan / hour partitions), aggregates use
-built-in functions only (whole-stage codegen, map-side partials), and top-N is
-orderBy+limit (planned as TakeOrderedAndProject — no global sort at scale).
+All functions are pure logical-plan constructors, and a dashboard calls
+them on every refresh, so their fixed driver cost is the refresh's cost:
+
+* **One lean plan per panel.** Each panel is a few SQL strings — one
+  ``where``, one grouping, one ``selectExpr`` — not a chain of ``Column``
+  calls (each a py4j round trip) and ``withColumn`` calls (each a fresh
+  analysis).
+* **Filters first** (:func:`analytics.sql.time_range`): the exact
+  ``time`` predicate plus, on an hour-partitioned table, the bounds on
+  ``event_date``/``event_hour`` that prune partitions before the scan.
+* **Aggregates use built-in functions only** (whole-stage codegen,
+  map-side partials), and each input is scanned once.
+* **Ordering never costs a range-partition sampling job.** A top-N is
+  ``orderBy`` + ``limit`` (TakeOrderedAndProject: per-partition heaps and
+  one bounded merge). A panel whose result is bounded by construction —
+  per system, per time bucket of one query, the ≤ 3×limit ranking —
+  finishes in one partition (``coalesce(1)`` + ``sortWithinPartitions``)
+  instead of a global sort (a sampling job plus one more shuffle).
+
+Spark jobs per call (one per shuffle stage, plus the result stage):
+``top_queries`` 2, ``query_trend`` 2, ``top_by_multiple_metrics`` 3,
+``compare_systems`` 3.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from project_obsidian_core_spark.functions.units import guarded_div
+from project_obsidian_core_spark.analytics.sql import aggregate, ident, in_order, quote, time_range
 
 #: metric column resolving the notebook's `{metric}` parameter per system
 DEFAULT_METRIC = {"mysql": "total_timer_wait_delta", "postgresql": "total_exec_time_delta"}
 ID_COLUMN = {"mysql": "statement_digest", "postgresql": "query_id"}
 
 
-def _time_filter(df: DataFrame, start: datetime | str | None, end: datetime | str | None) -> DataFrame:
-    """P5: `__time BETWEEN a AND b` — with hour partitioning this prunes
-    partitions before the scan."""
-    if start is not None:
-        df = df.filter(F.col("time") >= F.lit(start).cast("timestamp"))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.lit(end).cast("timestamp"))
-    return df
+def _totals(metric: str) -> list[str]:
+    """total_calls, total_metric and (A4: CASE WHEN SUM(calls)>0 THEN
+    SUM(x)/SUM(calls) ELSE 0 END, ``functions.units.guarded_div``)
+    avg_metric_per_call, as aggregate expressions: the repeated sums are
+    one aggregate each, and the average needs no projection of its own."""
+    calls, total = "sum(calls_delta)", f"sum({ident(metric)})"
+    return [
+        f"{calls} AS total_calls",
+        f"{total} AS total_metric",
+        f"CASE WHEN {calls} > 0 THEN {total} / {calls} ELSE 0.0D END AS avg_metric_per_call",
+    ]
 
 
 def top_queries(
@@ -49,28 +70,20 @@ def top_queries(
     """Top-N queries by total of ``metric`` — the signature QAN query
     (02-Query_Analysis.ipynb cell-4 get_top_queries; A3+A4+O1).
 
-    Returns (identity, sample, total_calls, total_metric, avg_metric_per_call).
+    Returns (identity, sample, total_calls, total_metric, avg_metric_per_call)
+    ordered by ``total_metric`` descending, then identity.
     """
     metric = metric or DEFAULT_METRIC[db_system]
-    id_col = ID_COLUMN[db_system]
-    df = _time_filter(qan.filter(F.col("db_system") == db_system), start, end)
+    preds = [f"db_system = {quote(db_system)}", *time_range(qan.columns, start, end)]
     if sample_filter:
-        df = df.filter(F.col("statement_sample").like(f"%{sample_filter}%"))  # P6
-    return (
-        df.groupBy(F.col(id_col).alias("query_identity"))
-        .agg(
-            F.max("statement_sample").alias("statement_sample"),
-            F.sum("calls_delta").alias("total_calls"),
-            F.sum(metric).alias("total_metric"),
-        )
-        .withColumn(
-            # A4: CASE WHEN SUM(calls)>0 THEN SUM(x)/SUM(calls) ELSE 0 END
-            "avg_metric_per_call",
-            guarded_div(F.col("total_metric"), F.col("total_calls")),
-        )
-        .orderBy(F.desc("total_metric"), F.asc("query_identity"))
-        .limit(limit)
+        preds.append(f"statement_sample LIKE {quote(f'%{sample_filter}%')}")  # P6
+    agg = aggregate(
+        qan,
+        preds,
+        [f"{ident(ID_COLUMN[db_system])} AS query_identity"],
+        ["max(statement_sample) AS statement_sample", *_totals(metric)],
     )
+    return agg.orderBy(F.desc("total_metric"), "query_identity").limit(limit)
 
 
 def query_trend(
@@ -83,23 +96,25 @@ def query_trend(
     end: datetime | str | None = None,
 ) -> DataFrame:
     """Per-query time-series trend (analyze_query_trend, A6+P7):
-    TIME_FLOOR(__time, PT5M) buckets of calls and metric totals."""
+    TIME_FLOOR(__time, PT5M) buckets of calls and metric totals, ordered
+    by bucket.
+
+    One query's series has one row per bucket of the range, so it is
+    finished in one partition (:func:`analytics.sql.in_order`).
+    """
     metric = metric or DEFAULT_METRIC[db_system]
-    id_col = ID_COLUMN[db_system]
-    df = _time_filter(
-        qan.filter((F.col("db_system") == db_system) & (F.col(id_col) == query_identity)),
-        start,
-        end,
+    preds = [
+        f"db_system = {quote(db_system)}",
+        f"{ident(ID_COLUMN[db_system])} = {quote(query_identity)}",
+        *time_range(qan.columns, start, end),
+    ]
+    agg = aggregate(
+        qan,
+        preds,
+        [f"window(time, {quote(bucket)}).start AS time_bucket"],
+        _totals(metric),
     )
-    return (
-        df.groupBy(F.window("time", bucket).getField("start").alias("time_bucket"))
-        .agg(
-            F.sum("calls_delta").alias("total_calls"),
-            F.sum(metric).alias("total_metric"),
-        )
-        .withColumn("avg_metric_per_call", guarded_div("total_metric", "total_calls"))
-        .orderBy("time_bucket")
-    )
+    return in_order(agg, "time_bucket")
 
 
 def top_by_multiple_metrics(
@@ -113,12 +128,19 @@ def top_by_multiple_metrics(
     three ranked CTEs UNION ALLed; W1+U1+O3+P9).
 
     Ranks the same aggregated relation by three metrics, tags each ranking
-    with a literal label, unions, and sorts (metric, value desc). The
-    aggregate is computed once and reused across the three rankings.
+    with a literal label, and sorts (metric, value desc, identity).
+
+    One aggregate computes all three sums in one scan.  ``stack`` turns
+    each identity's row into one row per label, and a ``row_number`` per
+    label keeps the top ``limit`` by the sum in its own type (a long sum
+    is cut as a long: two sums above 2**53 can differ as longs yet cast
+    to the same double).  Spark plans that cut as a partial per-label
+    limit before the shuffle, so at most 3 × limit rows per map task
+    cross it.  Only then is ``value`` (the sum as a double) ranked
+    (P9: ``row_number`` by value desc, identity), and the ≤ 3×limit rows
+    are ordered in one partition.
     """
-    id_col = ID_COLUMN[db_system]
-    df = _time_filter(qan.filter(F.col("db_system") == db_system), start, end)
-    metric_for = {
+    labels = {
         "mysql": {
             "exec_time": "total_timer_wait_delta",
             "rows_examined": "rows_examined_delta",
@@ -130,33 +152,44 @@ def top_by_multiple_metrics(
             "temp_blks_written": "temp_blks_written_delta",
         },
     }[db_system]
-
-    agg = df.groupBy(F.col(id_col).alias("query_identity")).agg(
-        *[F.sum(F.coalesce(F.col(c), F.lit(0))).alias(label) for label, c in metric_for.items()]
+    agg = aggregate(
+        qan,
+        [f"db_system = {quote(db_system)}", *time_range(qan.columns, start, end)],
+        [f"{ident(ID_COLUMN[db_system])} AS query_identity"],
+        [f"sum(coalesce({ident(c)}, 0)) AS {label}" for label, c in labels.items()],
     )
-
-    # Top-N via orderBy+limit (TakeOrderedAndProject — per-partition heaps,
-    # no global single-partition sort); the rank column (P9) is recovered on
-    # the ≤ 3*limit-row union with a window PARTITIONed BY metric. The cast
-    # to double is monotone, so ranking by `value` reproduces the per-label
-    # ordering exactly.
-    ranked = []
-    for label in metric_for:
-        ranked.append(
-            agg.orderBy(F.desc(label), F.asc("query_identity"))
-            .limit(limit)
-            .select(
-                F.lit(label).alias("metric"),
-                F.col("query_identity"),
-                F.col(label).cast("double").alias("value"),
-            )
+    # one sort key per distinct sum type; a label fills its own type's key
+    types = dict(agg.dtypes)
+    slots = sorted({types[label] for label in labels})
+    rows = ", ".join(
+        ", ".join(
+            [quote(label)]
+            + [label if types[label] == t else f"CAST(NULL AS {t})" for t in slots]
+            + [f"CAST({label} AS DOUBLE)"]
         )
-    out = ranked[0]
-    for r in ranked[1:]:
-        out = out.unionByName(r)  # U1
-    w = Window.partitionBy("metric").orderBy(F.desc("value"), F.asc("query_identity"))
-    out = out.withColumn("rank", F.row_number().over(w))
-    return out.orderBy("metric", F.desc("value"), "query_identity")  # O3
+        for label in labels
+    )
+    keys = [f"k{i}" for i in range(len(slots))]
+    cut = ", ".join(f"{k} DESC" for k in keys)
+    ranked = (
+        agg.selectExpr(
+            "query_identity", f"stack({len(labels)}, {rows}) AS (metric, {', '.join(keys)}, value)"
+        )
+        .selectExpr(
+            "metric",
+            "query_identity",
+            "value",
+            f"row_number() OVER (PARTITION BY metric ORDER BY {cut}, query_identity) AS cut",
+        )
+        .where(f"cut <= {int(limit)}")
+        .selectExpr(
+            "coalesce(metric, '') AS metric",  # stack types it nullable; a label never is
+            "query_identity",
+            "value",
+            "row_number() OVER (PARTITION BY metric ORDER BY value DESC, query_identity) AS `rank`",
+        )
+    )
+    return in_order(ranked, "metric", F.desc("value"), "query_identity")  # O3
 
 
 def compare_systems(
@@ -167,21 +200,21 @@ def compare_systems(
     """Cross-system summary (qan_analysis_example.ipynb metrics-comparison
     cell; A7+A8): per db_system — record count, distinct queries, total
     calls, and an avg-latency-ms that dispatches on system (MySQL ps->ms,
-    PG already ms)."""
-    df = _time_filter(qan, start, end)
-    latency_ms = F.when(
-        F.col("db_system") == "mysql", F.col("total_timer_wait_delta") / F.lit(1e9)
-    ).when(F.col("db_system") == "postgresql", F.col("total_exec_time_delta"))
-    per_call = F.when(F.col("calls_delta") > 0, latency_ms / F.col("calls_delta"))
-    return (
-        df.groupBy("db_system")
-        .agg(
-            F.count(F.lit(1)).alias("record_count"),
-            F.countDistinct(
-                F.coalesce(F.col("statement_digest"), F.col("query_id"))
-            ).alias("unique_queries"),
-            F.sum("calls_delta").alias("total_calls"),
-            F.avg(per_call).alias("avg_latency_ms"),
-        )
-        .orderBy("db_system")
+    PG already ms).  One row per system, so it is ordered in one
+    partition."""
+    latency_ms = (
+        "CASE WHEN db_system = 'mysql' THEN total_timer_wait_delta / 1.0E9D"
+        " WHEN db_system = 'postgresql' THEN total_exec_time_delta END"
     )
+    agg = aggregate(
+        qan,
+        time_range(qan.columns, start, end),
+        ["db_system"],
+        [
+            "count(1) AS record_count",
+            "count(DISTINCT coalesce(statement_digest, query_id)) AS unique_queries",
+            "sum(calls_delta) AS total_calls",
+            f"avg(CASE WHEN calls_delta > 0 THEN ({latency_ms}) / calls_delta END) AS avg_latency_ms",
+        ],
+    )
+    return in_order(agg, "db_system")

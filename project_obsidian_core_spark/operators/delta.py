@@ -173,18 +173,20 @@ def mysql_deltas_to_qan(deltas: DataFrame) -> DataFrame:
         "sum_no_index_used_delta": "no_index_used_delta",
         "sum_no_good_index_used_delta": "no_good_index_used_delta",
     }
-    base = deltas.select(
-        F.col("snapshot_ts").alias("time"),
-        F.lit(schemas.SERVICE_NAME).alias("service_name"),
-        F.lit("mysql").alias("db_system"),
-        F.col("instance_id"),
-        F.col("digest").alias("statement_digest"),
-        F.col("digest_text").alias("statement_sample"),
-        F.col("schema_name").alias("db_schema"),
-        F.col("time_period_seconds"),
-        *[F.col(src).alias(dst) for src, dst in rename.items()],
+    return _conform_to_qan(
+        deltas,
+        {
+            "time": "snapshot_ts",
+            "service_name": f"'{schemas.SERVICE_NAME}'",
+            "db_system": "'mysql'",
+            "instance_id": "instance_id",
+            "statement_digest": "digest",
+            "statement_sample": "digest_text",
+            "db_schema": "schema_name",
+            "time_period_seconds": "time_period_seconds",
+            **{dst: src for src, dst in rename.items()},
+        },
     )
-    return _conform_to_qan(base)
 
 
 def pg_deltas_to_qan(deltas: DataFrame) -> DataFrame:
@@ -193,41 +195,44 @@ def pg_deltas_to_qan(deltas: DataFrame) -> DataFrame:
     ``rows_examined_delta`` is aliased from ``rows_delta`` for cross-system
     compatibility (postgresql/collector.go:250-251).
     """
-    metric_renames = {
-        "calls_delta": "calls_delta",
-        "total_plan_time_delta": "total_plan_time_delta",
-        "total_exec_time_delta": "total_exec_time_delta",
-        "rows_delta": "rows_delta",
-        **{f"{c}_delta": f"{c}_delta" for c in schemas.PG_LONG_METRIC_COLS if c.endswith(("_hit", "_read", "_dirtied", "_written"))},
-        "blk_read_time_delta": "blk_read_time_delta",
-        "blk_write_time_delta": "blk_write_time_delta",
-    }
-    base = deltas.select(
-        F.col("snapshot_ts").alias("time"),
-        F.lit(schemas.SERVICE_NAME).alias("service_name"),
-        F.lit("postgresql").alias("db_system"),
-        F.col("instance_id"),
-        F.col("query_id"),
-        F.col("query").alias("statement_sample"),
-        F.col("user_id"),
-        F.col("db_id").alias("db_name_id"),
-        F.col("time_period_seconds"),
-        F.col("rows_delta").alias("rows_examined_delta"),
-        *[F.col(src).alias(dst) for src, dst in metric_renames.items()],
+    metrics = [
+        "calls_delta",
+        "total_plan_time_delta",
+        "total_exec_time_delta",
+        "rows_delta",
+        *[f"{c}_delta" for c in schemas.PG_LONG_METRIC_COLS if c.endswith(("_hit", "_read", "_dirtied", "_written"))],
+        "blk_read_time_delta",
+        "blk_write_time_delta",
+    ]
+    return _conform_to_qan(
+        deltas,
+        {
+            "time": "snapshot_ts",
+            "service_name": f"'{schemas.SERVICE_NAME}'",
+            "db_system": "'postgresql'",
+            "instance_id": "instance_id",
+            "query_id": "query_id",
+            "statement_sample": "query",
+            "user_id": "user_id",
+            "db_name_id": "db_id",
+            "time_period_seconds": "time_period_seconds",
+            "rows_examined_delta": "rows_delta",
+            **{m: m for m in metrics},
+        },
     )
-    return _conform_to_qan(base)
 
 
-def _conform_to_qan(df: DataFrame) -> DataFrame:
-    """Add missing qan_db columns as typed nulls and order columns."""
-    present = set(df.columns)
-    cols = []
-    for field in schemas.QAN_DB_SCHEMA.fields:
-        if field.name in present:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
+def _conform_to_qan(df: DataFrame, sources: dict[str, str]) -> DataFrame:
+    """One projection onto ``QAN_DB_SCHEMA``, in its column order: each
+    qan_db column is its SQL source in ``sources`` cast to the column's
+    type, or a typed NULL.  One ``selectExpr`` call, so a streaming
+    micro-batch pays one analysis, not one py4j call per column."""
+    return df.selectExpr(
+        *[
+            f"CAST({sources.get(f.name, 'NULL')} AS {f.dataType.simpleString()}) AS {f.name}"
+            for f in schemas.QAN_DB_SCHEMA.fields
+        ]
+    )
 
 
 def union_qan(mysql_qan: DataFrame, pg_qan: DataFrame) -> DataFrame:

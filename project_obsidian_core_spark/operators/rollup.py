@@ -20,31 +20,44 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _with_columns(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """``withColumn`` for every ``name: SQL expression`` of ``exprs`` as
+    one ``selectExpr`` (one analysis instead of one per column): an
+    existing column is replaced in place, a new one is appended."""
+    cols = [f"{exprs[c]} AS `{c}`" if c in exprs else f"`{c}`" for c in df.columns]
+    cols += [f"{e} AS `{c}`" for c, e in exprs.items() if c not in df.columns]
+    return df.selectExpr(*cols)
+
+
+def _partitions(time_sql: str) -> dict[str, str]:
+    return {"event_date": f"to_date({time_sql})", "event_hour": f"hour({time_sql})"}
+
+
 def with_time_partitions(df: DataFrame, time_col: str = "time") -> DataFrame:
     """Add hour-grained partition columns (segmentGranularity=HOUR)."""
-    return df.withColumn("event_date", F.to_date(time_col)).withColumn(
-        "event_hour", F.hour(time_col)
-    )
+    return _with_columns(df, _partitions(f"`{time_col}`"))
 
 
 def qan_rollup(qan: DataFrame, time_col: str = "time") -> DataFrame:
     """qan_db ingest shaping: second-truncated time + partition columns.
 
     rollup=false (qan_db_ingestion.json:96) — no row merging happens; this is
-    a projection, not an aggregation.
+    a projection, not an aggregation, built as one ``selectExpr``.
     """
-    return with_time_partitions(
-        qan.withColumn(time_col, F.date_trunc("second", F.col(time_col))), time_col
-    )
+    trunc = f"date_trunc('second', `{time_col}`)"
+    return _with_columns(qan, {time_col: trunc, **_partitions(trunc)})
 
 
 def write_qan(qan: DataFrame, path: str, mode: str = "append") -> None:
     """Write the qan_db fact table hour-partitioned.
 
-    Idempotency note (SURVEY §7.3): streaming foreachBatch retries would
-    double-count with blind append; callers in the streaming path use
-    batch-scoped overwrite instead
-    (streaming/delta_stream.idempotent_parquet_sink).
+    Idempotency note (SURVEY §7.3): ``mode="append"`` is not idempotent.
+    A streaming foreachBatch callback that appends its micro-batch here
+    (the scrape → delta stream → dashboard chain does) double-counts an
+    epoch that Spark retries.  ``streaming/delta_stream.
+    idempotent_parquet_sink`` is exactly-once (a retried epoch overwrites
+    its own ``_batch=<epoch>`` directory), but it skips this rollup, so
+    its output has no hour partitions to prune.
     """
     (
         qan_rollup(qan)

@@ -28,6 +28,25 @@ def build_session(
     On a real cluster, ``master`` comes from spark-submit and
     ``shuffle_partitions`` should be ~2-3x total executor cores; locally we
     default both to the CPU budget.
+
+    Generated-code cache (``spark.sql.codegen.cache.maxEntries``, a static
+    conf read when the JVM first generates code): 1000 classes. Spark's
+    default of 100 is smaller than one scrape-to-dashboard cycle and its
+    set-up, so every dashboard refresh recompiled 66-91 classes (0.9-1.3 s
+    of Janino at local[4]). Distinct classes measured with an unbounded
+    cache at local[4]:
+
+    * 207 for a perfbench ``tick_stream`` run (set-up plus 4 cycles);
+    * 175 for one ``corpus_dedup`` op;
+    * 178 for one pass over bench.py's 14-query contract subset at sf0.01.
+
+    1000 holds all three at once (564) with 1.8x headroom, and each alone
+    with 4.8x or more; a refresh then compiles 8 classes. Those 8 are new
+    every cycle, because Spark inlines the range panels' timestamp
+    literals (and the stream write's) into generated code, so a long-lived
+    session fills the cache. The cap is therefore also a memory bound: a
+    cached class kept about 25-35 KB of live heap (source plus bytecode),
+    so a full cache holds about 25-35 MB, against about 3 MB at 100.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -53,6 +72,9 @@ def build_session(
             "spark.sql.streaming.stateStore.maintenanceInterval",
             os.environ.get("SPARK_GRAFT_STATE_MAINT_INTERVAL", "600s"),
         )
+        # generated-code cache sized from measured working sets: see the
+        # docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
     )

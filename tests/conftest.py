@@ -24,7 +24,10 @@ class FakeState:
     """Stand-in for pyspark's ``GroupState`` so a stateful group function
     can be driven batch by batch without Spark.  ``wm_ms`` is the event-
     time watermark the evict-mode functions read; ``timeout_ms`` records
-    the last timeout they arm (Spark requires it past the watermark)."""
+    the timeout the current call armed (Spark requires it past the
+    watermark).  Drive calls through :meth:`drive`: like Spark, it clears
+    the key's timeout before each call, so a call that arms none leaves
+    none."""
 
     def __init__(self, wm_ms=0):
         self.exists = False
@@ -47,6 +50,14 @@ class FakeState:
     def setTimeoutTimestamp(self, ms):
         assert ms > self.wm_ms  # Spark's contract
         self.timeout_ms = ms
+
+    def drive(self, fn, key, frames, timed_out=False):
+        """One call of the group function ``fn`` for ``key`` over
+        ``frames``, as Spark makes it: the timeout is cleared first, and
+        ``hasTimedOut`` says whether this call is a timeout."""
+        self.timeout_ms = None
+        self.hasTimedOut = timed_out
+        return list(fn(key, iter(frames), self))
 
 
 @pytest.fixture

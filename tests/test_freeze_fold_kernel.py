@@ -6,7 +6,9 @@ shared ``FakeState`` without Spark.
 * a timeout where nothing froze (a spurious wake) re-arms and writes
   state but neither bumps ``version`` nor emits;
 * a timeout where something froze (a flush) bumps ``version`` by 1;
-* every armed timeout lies past the watermark (``FakeState`` asserts it);
+* every armed timeout lies past the watermark (``FakeState`` asserts it),
+  and a call that arms none leaves none (``FakeState.drive`` clears the
+  timeout first, as Spark does): a finalized funnel key arms no timeout;
 * each frozen part is emitted as final rows exactly once, and every
   frame has its output schema's columns in order.
 """
@@ -85,8 +87,7 @@ class Driver:
     def __call__(self, *frames, wm_us=None, timed_out=False):
         if wm_us is not None:
             self.state.wm_ms = wm_us // 1000
-        self.state.hasTimedOut = timed_out
-        out = list(self.fn(self.key, iter(frames), self.state))
+        out = self.state.drive(self.fn, self.key, frames, timed_out)
         for frame in out:
             assert list(frame.columns) == self.schema.fieldNames()
             assert frame["version"].nunique() == 1
@@ -118,7 +119,6 @@ def test_spurious_wake_rearms_quietly(fake_state, name):
     armed = d.state.timeout_ms
     assert armed is not None
     # the watermark has not reached anything freezable yet
-    d.state.timeout_ms = None
     assert d(timed_out=True) == []
     assert d.version == len(b)
     assert d.state.timeout_ms == armed
@@ -153,6 +153,8 @@ def test_finals_emitted_once_per_frozen_part(fake_state, name):
     finals = _finals(out)
     if "is_final" in d.schema.fieldNames():
         assert len(finals) == 1
+    if name == "funnel":  # a finalized user is a tombstone: no wake left
+        assert d.state.timeout_ms is None
     b3 = _batch(name, 3, t0=late + 100_000_000)
     out = d(b3)
     assert not _finals(out)
