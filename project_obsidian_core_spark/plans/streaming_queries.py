@@ -48,18 +48,24 @@ _SNAP_SCHEMA = T.StructType(
 
 # ------------------------------------------------------ replay harness ---
 # Every twin below replays a parquet snapshot of its input table as a file
-# stream (fresh checkpoint per run), drains it into a memory table, and —
-# for versioned emissions — reads back each key's max-version rows.
+# stream, drains it with one ``_drain`` call (fresh checkpoint and memory
+# table per run) and — for versioned emissions — reads back each key's
+# max-version rows.
 
 
-def _materialize(key: str, run: int, build: Callable[[], DataFrame]) -> str:
+def _materialize(
+    key: str, build: Callable[[], DataFrame], copies: int = 1
+) -> str:
     """Write ``build()`` once per process as a parquet dir a file-source
-    stream can replay; later runs with the same ``key`` reuse it (fixture
-    construction, not the operator under test)."""
+    stream can replay, ``copies`` times over (one file set per copy);
+    later runs with the same ``key`` reuse it (fixture construction, not
+    the operator under test)."""
     src = _SRC_CACHE.get(key)
     if src is None:
-        src = f"{tempfile.mkdtemp(prefix=f'obsidian_src_{run}_')}/src"
-        build().write.mode("overwrite").parquet(src)
+        src = f"{tempfile.mkdtemp(prefix='obsidian_src_')}/src"
+        df = build()
+        for i in range(copies):
+            df.write.mode("append" if i else "overwrite").parquet(src)
         _SRC_CACHE[key] = src
     return src
 
@@ -73,17 +79,14 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_src(spark: SparkSession, sf_dir: str, run: int) -> str:
-    return _materialize(f"events:{sf_dir}", run, lambda: _events(spark, sf_dir))
+def _events_src(spark: SparkSession, sf_dir: str) -> str:
+    return _materialize(f"events:{sf_dir}", lambda: _events(spark, sf_dir))
 
 
-def _documents_src(
-    spark: SparkSession, sf_dir: str, run: int, *cols: str
-) -> str:
+def _documents_src(spark: SparkSession, sf_dir: str, *cols: str) -> str:
     """The named columns of the documents table."""
     return _materialize(
         f"documents:{','.join(cols)}:{sf_dir}",
-        run,
         lambda: load(spark, sf_dir, "documents").select(*cols),
     )
 
@@ -99,17 +102,33 @@ def _replay(
     return reader.parquet(src)
 
 
-def _run_memory(
-    df: DataFrame, name: str, ckpt: str, spark: SparkSession, mode: str
-) -> None:
-    """Drain an availableNow stream into the memory table ``name`` —
-    ``mode`` "complete" for aggregations, "append" for stateful
-    emissions — at 8 shuffle partitions."""
+def _drain(
+    spark: SparkSession,
+    df: DataFrame,
+    mode: str,
+    *,
+    partitions: int = 8,
+    state: bool = False,
+) -> DataFrame:
+    """Run the stream ``df`` over all of its input (availableNow) from a
+    fresh checkpoint into a memory table, at ``partitions`` shuffle
+    partitions, and return that table: ``mode`` "complete" for
+    aggregations, "append" for stateful emissions.
+
+    With ``state=True`` it returns instead the rows the stream's stateful
+    operator holds after the last batch, read from the same checkpoint
+    with Spark's ``statestore`` source: one row per state key, a ``key``
+    and a ``value`` struct (an ``applyInPandasWithState`` state row is
+    ``value.groupState``).  The emitted rows then go to a ``noop`` sink,
+    so the session does not keep them."""
+    run = next(_RUN_IDS)
+    name = f"obsidian_drain_{run}"
+    ckpt = f"{tempfile.mkdtemp(prefix=f'{name}_')}/ckpt"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     try:
         q = (
-            df.writeStream.format("memory")
+            df.writeStream.format("noop" if state else "memory")
             .queryName(name)
             .outputMode(mode)
             .option("checkpointLocation", ckpt)
@@ -120,6 +139,9 @@ def _run_memory(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    if state:
+        return spark.read.format("statestore").load(ckpt)
+    return spark.table(name)
 
 
 def _latest(emitted: DataFrame, *keys: str) -> DataFrame:
@@ -150,25 +172,26 @@ _MINUTE = "unix_micros(ts) div 60000000"
 _HOUR = "unix_micros(ts) div 3600000000"
 
 
+def _metric_series(spark: SparkSession, sf_dir: str, bucket: str) -> DataFrame:
+    """Events replayed as (metric_name, bucket, v=cents) rows, ``bucket``
+    a SQL expression over ``ts``."""
+    return _replay(spark, _events_src(spark, sf_dir), "4").select(
+        _metric_name(), F.expr(bucket).alias("bucket"), F.col("cents").alias("v")
+    )
+
+
 def _replay_metric_series(
     spark: SparkSession,
     sf_dir: str,
-    tag: str,
     bucket: str,
     op: Callable[..., DataFrame],
     *args,
 ) -> DataFrame:
-    """Replay events as (metric_name, bucket, v=cents) rows — ``bucket``
-    a SQL expression over ``ts`` — through the bucket-series operator
-    ``op(keyed, *args)`` and return its max-version rows per metric."""
-    run = next(_RUN_IDS)
-    keyed = _replay(spark, _events_src(spark, sf_dir, run), "4").select(
-        _metric_name(), F.expr(bucket).alias("bucket"), F.col("cents").alias("v")
-    )
-    name = f"stream_{tag}_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_{tag}_{run}_")
-    _run_memory(op(keyed, *args), name, f"{tmp}/ckpt", spark, "append")
-    return _latest(spark.table(name), "metric_name")
+    """Replay the metric series of ``bucket`` through the bucket-series
+    operator ``op(keyed, *args)`` and return its max-version rows per
+    metric."""
+    keyed = _metric_series(spark, sf_dir, bucket)
+    return _latest(_drain(spark, op(keyed, *args), "append"), "metric_name")
 
 
 def synthesize_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,12 +243,10 @@ def stream_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism (measured 48 s → 8.5 s at sf0.1 going 32 → 8). At fleet
     scale you size this to the instance count, not the table width.
     """
-    run = next(_RUN_IDS)
-    ckpt = f"{tempfile.mkdtemp(prefix=f'obsidian_stream_{run}_')}/ckpt"
     # The synthesized snapshot history stands in for a live collector
     # feed; each run replays it from a fresh checkpoint.
     src = _materialize(
-        f"snapshots:{sf_dir}", run, lambda: synthesize_snapshots(spark, sf_dir)
+        f"snapshots:{sf_dir}", lambda: synthesize_snapshots(spark, sf_dir)
     )
     stream = spark.readStream.schema(_SNAP_SCHEMA).parquet(src)
     deltas = DS.stateful_deltas(
@@ -234,14 +255,8 @@ def stream_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         metric_fields=[("count_star", T.LongType()), ("value_cents", T.LongType())],
         activity_col="count_star",
     )
-    name = f"stream_snapshot_delta_{run}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "10")  # = #instances
-    try:
-        DS.run_replay(deltas, ckpt, query_name=name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).orderBy("instance_id", "digest", "snapshot_ts")
+    emitted = _drain(spark, deltas, "append", partitions=10)  # = #instances
+    return emitted.orderBy("instance_id", "digest", "snapshot_ts")
 
 
 ORACLE_stream_snapshot_delta = f"""
@@ -308,9 +323,7 @@ def stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_obsidian_core_spark.plans.temporal_queries import RANGE_SPAN_US
     from project_obsidian_core_spark.streaming import interval_join as IJ
 
-    run = next(_RUN_IDS)
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_ij_{run}_")
-    src = _events_src(spark, sf_dir, run)
+    src = _events_src(spark, sf_dir)
     anchors = (
         _replay(spark, src)
         .filter(F.col("event_type") == "purchase")
@@ -320,17 +333,9 @@ def stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = IJ.interval_join(
         anchors, probes, on="user_id", span_seconds=RANGE_SPAN_US // 1_000_000
     )
-    out_path = f"{tmp}/pairs"
-    name = f"stream_range_join_{run}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        DS.run_replay(pairs, f"{tmp}/ckpt", sink_path=out_path, query_name=name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    emitted = spark.read.parquet(out_path)
     return (
-        emitted.groupBy("a_event_id", "a_ts")
+        _drain(spark, pairs, "append")
+        .groupBy("a_event_id", "a_ts")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("p_cents").alias("sum_cents"),
@@ -360,9 +365,7 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from project_obsidian_core_spark.plans.pipeline_queries import _SESSION_GAP
 
-    run = next(_RUN_IDS)
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_sess_{run}_")
-    stream = _replay(spark, _events_src(spark, sf_dir, run))
+    stream = _replay(spark, _events_src(spark, sf_dir))
     sess = stream.groupBy(
         F.session_window("ts", _SESSION_GAP), F.col("user_id")
     ).agg(
@@ -371,11 +374,9 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("value_sum"),
     )
-    name = f"stream_session_stats_{run}"
-    _run_memory(
-        sess.drop("session_window"), name, f"{tmp}/ckpt", spark, "complete"
+    return _drain(spark, sess.drop("session_window"), "complete").orderBy(
+        "user_id", "session_start_us"
     )
-    return spark.table(name).orderBy("user_id", "session_start_us")
 
 
 # ------------------------------------------------- streaming deduplication
@@ -387,16 +388,12 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     promoted to the driver gate: if the stateful dedup ever under- or
     over-drops across micro-batches, the counts diverge.
     """
-    run = next(_RUN_IDS)
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_dedup_{run}_")
-    src = _SRC_CACHE.get(f"events2x:{sf_dir}")
-    if src is None:
-        src = f"{tmp}/events2x"
-        ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-        # two writes -> two file sets -> duplicates arrive across batches
-        ev.write.mode("overwrite").parquet(src)
-        ev.write.mode("append").parquet(src)
-        _SRC_CACHE[f"events2x:{sf_dir}"] = src
+    # two copies -> two file sets -> duplicates arrive across batches
+    src = _materialize(
+        f"events2x:{sf_dir}",
+        lambda: load(spark, sf_dir, "events").select("event_id", "ts", "event_type"),
+        copies=2,
+    )
 
     # the watermark delay must cover the table's full time span: replay
     # file order is not time order, so a shorter delay would drop late
@@ -409,9 +406,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    name = f"stream_dedup_events_{run}"
-    _run_memory(counts, name, f"{tmp}/ckpt", spark, "complete")
-    return spark.table(name).select(
+    return _drain(spark, counts, "complete").select(
         "event_type", F.col("n_events").cast("long").alias("n_events")
     ).orderBy("event_type")
 
@@ -438,8 +433,7 @@ def stream_rollup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     on. Window state is keyed by (window, user, type): bounded by the time
     span, not the row count, so a 100 TB replay holds only the open windows.
     """
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run))
+    stream = _replay(spark, _events_src(spark, sf_dir))
     roll = (
         stream.groupBy(
             F.window("ts", "1 minute"), F.col("user_id"), F.col("event_type")
@@ -460,10 +454,7 @@ def stream_rollup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_min_cents",
         )
     )
-    name = f"stream_rollup_minute_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_roll_{run}_")
-    _run_memory(roll, name, f"{tmp}/ckpt", spark, "complete")
-    return spark.table(name).orderBy("time", "user_id", "event_type")
+    return _drain(spark, roll, "complete").orderBy("time", "user_id", "event_type")
 
 
 # ------------------------------------------------ streaming top-N digests
@@ -480,17 +471,13 @@ def stream_top_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume), and the rank/limit runs on the drained state, NOT inside the
     stream, so no per-batch global sort is paid.
     """
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run))
+    stream = _replay(spark, _events_src(spark, sf_dir))
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("total_calls"),
         F.sum("cents").alias("total_value_cents"),
     )
-    name = f"stream_top_digests_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_topd_{run}_")
-    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
     return (
-        spark.table(name)
+        _drain(spark, agg, "complete")
         .withColumn(
             "avg_value",
             F.when(
@@ -517,8 +504,7 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     without restarting it. State is only the per-nation aggregate (25
     rows), regardless of stream volume.
     """
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
+    src = _events_src(spark, sf_dir)
     dim = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     stream = _replay(spark, src)
     joined = stream.join(
@@ -528,10 +514,7 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("sum_cents"),
     )
-    name = f"stream_enrich_events_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_enrich_{run}_")
-    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
-    return spark.table(name).orderBy("n_name")
+    return _drain(spark, agg, "complete").orderBy("n_name")
 
 
 ORACLE_stream_enrich_events = """
@@ -558,13 +541,9 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from project_obsidian_core_spark.datapipe import curation as C
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _documents_src(spark, sf_dir, run, "doc_id", "text"), "4")
+    stream = _replay(spark, _documents_src(spark, sf_dir, "doc_id", "text"), "4")
     gated = C.quality_filter(stream)
-    name = f"stream_quality_filter_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_qf_{run}_")
-    _run_memory(gated, name, f"{tmp}/ckpt", spark, "append")
-    return spark.table(name).orderBy("doc_id")
+    return _drain(spark, gated, "append").orderBy("doc_id")
 
 
 # ------------------------------------------------- streaming CDC MERGE
@@ -595,8 +574,7 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from project_obsidian_core_spark.plans import cdc_queries as cdc
 
-    run = next(_RUN_IDS)
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_cdcstream_{run}_")
+    tmp = tempfile.mkdtemp(prefix="obsidian_cdcstream_")
     base = cdc._orders_snapshot(spark, sf_dir)
     base_cols = base.columns
     changes_src = f"{tmp}/changes"
@@ -644,16 +622,12 @@ def stream_sliding_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained state via a second aggregation over the (window, user) pairs,
     the standard two-level shape for streaming COUNT(DISTINCT).
     """
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run))
+    stream = _replay(spark, _events_src(spark, sf_dir))
     pairs = stream.groupBy(
         F.window("ts", "1 hour", "15 minutes"), F.col("user_id")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    name = f"stream_sliding_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_slide_{run}_")
-    _run_memory(pairs, name, f"{tmp}/ckpt", spark, "complete")
     return (
-        spark.table(name)
+        _drain(spark, pairs, "complete")
         .groupBy(F.unix_micros(F.col("window.start")).alias("win_start_us"))
         .agg(
             F.count(F.lit(1)).alias("active_users"),
@@ -681,15 +655,11 @@ def stream_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CHUNK_SIZE,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _documents_src(spark, sf_dir, run, "doc_id", "text"), "4")
+    stream = _replay(spark, _documents_src(spark, sf_dir, "doc_id", "text"), "4")
     chunked = P.chunk_documents(
         stream, size=_CHUNK_SIZE, overlap=_CHUNK_OVERLAP
     )
-    name = f"stream_chunk_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_chunk_{run}_")
-    _run_memory(chunked, name, f"{tmp}/ckpt", spark, "append")
-    return spark.table(name).orderBy("doc_id", "chunk_idx")
+    return _drain(spark, chunked, "append").orderBy("doc_id", "chunk_idx")
 
 
 # --------------------------------------------------- streaming OHLC twin --
@@ -710,8 +680,7 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator. State is one row per (metric, open bucket) — bounded by
     time span x series cardinality, never by row volume.
     """
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run))
+    stream = _replay(spark, _events_src(spark, sf_dir))
     rows = stream.select(
         _metric_name(),
         (F.expr("unix_micros(ts) div 300000000") * F.lit(300)).alias(
@@ -728,11 +697,8 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("v").alias("volume"),
         F.count(F.lit(1)).alias("n_samples"),
     )
-    name = f"stream_ohlc_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_ohlc_{run}_")
-    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
     return (
-        spark.table(name)
+        _drain(spark, agg, "complete")
         .select(
             "metric_name",
             "bucket_epoch_s",
@@ -761,8 +727,7 @@ def stream_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous live metrics quantize the value to a fixed grid first (the
     A32 PSI rationale); the equivalence contract here is on the exact
     value space."""
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run))
+    stream = _replay(spark, _events_src(spark, sf_dir))
     agg = stream.select(
         "event_type",
         "value",
@@ -772,11 +737,8 @@ def stream_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ca").cast("long").alias("da"),
         F.sum("cb").cast("long").alias("db"),
     )
-    name = f"stream_ks_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_ks_{run}_")
-    _run_memory(agg, name, f"{tmp}/ckpt", spark, "complete")
 
-    per_val = spark.table(name)
+    per_val = _drain(spark, agg, "complete")
     wcum = (
         Window.partitionBy("event_type")
         .orderBy("value")
@@ -829,16 +791,12 @@ def stream_discovery_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_discovery,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     out = streaming_discovery(
         stream.select("user_id", "event_type", "ts", "event_id")
     )
-    name = f"stream_discovery_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_disc_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "user_id")
+    latest = _latest(_drain(spark, out, "append"), "user_id")
     return latest.select(
         "user_id",
         "event_type",
@@ -866,8 +824,7 @@ def stream_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_islands,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     iv = stream.select(
         "event_type",
         F.unix_micros("ts").alias("start_us"),
@@ -877,11 +834,8 @@ def stream_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("end_us"),
     )
     out = streaming_islands(iv, ["event_type"])
-    name = f"stream_islands_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_isl_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "event_type")
+    latest = _latest(_drain(spark, out, "append"), "event_type")
     wid = Window.partitionBy("event_type").orderBy("island_start_us")
     return latest.select(
         "event_type",
@@ -917,18 +871,14 @@ def stream_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from project_obsidian_core_spark.streaming.topk_state import streaming_topk
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     keyed = stream.select(F.col("user_id").cast("string").alias("user_key"))
     out = streaming_topk(
         keyed, key_col="user_key",
         n_shards=_TOPK_SHARDS, capacity=_TOPK_CAPACITY,
     )
-    name = f"stream_topk_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_topk_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "shard")
+    latest = _latest(_drain(spark, out, "append"), "shard")
     # each key lives in exactly one shard, so the drained summaries union
     # without reconciliation; err_bound rides along so any eviction
     # (est != exact) breaks the value hash loudly
@@ -976,8 +926,7 @@ def stream_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_quantiles,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     keyed = stream.select(
         F.col("event_type"),
         F.expr("CAST(floor(value * 1000000) AS BIGINT)").alias("v_micro"),
@@ -986,11 +935,8 @@ def stream_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed, series_col="event_type", value_col="v_micro",
         capacity=_QUANT_CAPACITY,
     )
-    name = f"stream_quant_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_quant_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "series")
+    latest = _latest(_drain(spark, out, "append"), "series")
     return latest.select(
         "series", "q_pct", "value", "n", "err_bound"
     ).orderBy("series", "q_pct")
@@ -1031,17 +977,13 @@ def stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_priority_sample,
     )
 
-    run = next(_RUN_IDS)
-    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "n_chars")
+    src = _documents_src(spark, sf_dir, "doc_id", "source", "n_chars")
     stream = _replay(spark, src, "2")
     out = streaming_priority_sample(
         stream, k=4, weight=F.col("n_chars"), group_col="source"
     )
-    name = f"stream_psample_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_ps_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "grp")
+    latest = _latest(_drain(spark, out, "append"), "grp")
     return latest.select(
         F.col("grp").alias("source"),
         F.col("id").alias("doc_id"),
@@ -1070,14 +1012,10 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_transitions,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     out = streaming_transitions(stream)
-    name = f"stream_markov_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_mkv_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "user_id")
+    latest = _latest(_drain(spark, out, "append"), "user_id")
     mat = latest.groupBy("prev_type", "next_type").agg(
         F.sum("n").alias("n_transitions")
     )
@@ -1112,14 +1050,10 @@ def stream_sequence_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_sequence_funnel,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     out = streaming_sequence_funnel(stream, _STAGES, _SEQ_WINDOW_US)
-    name = f"stream_funnel_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_fnl_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "user_id")
+    latest = _latest(_drain(spark, out, "append"), "user_id")
     agg = latest.agg(
         *[
             F.sum((F.col("max_stage") >= i).cast("long")).alias(f"s{i}")
@@ -1155,14 +1089,10 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_gap_sessions,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     out = streaming_gap_sessions(stream, _SESSION_GAP_US)
-    name = f"stream_sess_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_sess_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "user_id")
+    latest = _latest(_drain(spark, out, "append"), "user_id")
     return latest.select(
         "user_id",
         "session_idx",
@@ -1174,7 +1104,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_src_ordered(
-    spark: SparkSession, sf_dir: str, run: int, n_chunks: int = 6
+    spark: SparkSession, sf_dir: str, n_chunks: int = 6
 ) -> str:
     """Materialize (once per process) the events table as ``n_chunks``
     parquet files covering CONSECUTIVE event-time ranges, with strictly
@@ -1190,18 +1120,21 @@ def _events_src_ordered(
     k-1's max, so the watermark (max − delay after batch k-1) never
     overtakes unseen data.  The chunking is a driver-side loop over a
     CONSTANT number of bounded Spark jobs (6 range filters), not a
-    per-row driver pass."""
+    per-row driver pass.  An empty events table gives one zero-row file,
+    so the replay still has a schema and runs one batch."""
     key = f"events_ordered:{sf_dir}"
     src = _SRC_CACHE.get(key)
     if src is not None:
         return src
-    base = tempfile.mkdtemp(prefix=f"obsidian_evord_{run}_")
+    base = tempfile.mkdtemp(prefix="obsidian_evord_")
     src = f"{base}/events_src"
     os.makedirs(src)
     ev = _events(spark, sf_dir)
     lo, hi = ev.selectExpr(
         "min(unix_micros(ts))", "max(unix_micros(ts))"
     ).first()
+    if lo is None:  # no events: one chunk, written with zero rows
+        lo, hi, n_chunks = 0, 0, 1
     span = int(hi) - int(lo) + 1
     now = time.time()
     n_files = 0
@@ -1297,18 +1230,14 @@ def _sessionize_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_gap_sessions,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src_ordered(spark, sf_dir, run)
+    src = _events_src_ordered(spark, sf_dir)
     stream = (
         _replay(spark, src, "1")
         .withWatermark("ts", "1 minute")
     )
     out = streaming_gap_sessions(stream, _SESSION_GAP_US, evict=True)
-    name = f"stream_sess_evict_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_sessev_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    return spark.table(name)
+    return _drain(spark, out, "append")
 
 
 # ---------- T21e: anchored funnel with WATERMARK EVICTION, gated ----------
@@ -1374,8 +1303,7 @@ def _funnel_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_sequence_funnel,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src_ordered(spark, sf_dir, run)
+    src = _events_src_ordered(spark, sf_dir)
     stream = (
         _replay(spark, src, "1")
         .withWatermark("ts", "1 minute")
@@ -1383,11 +1311,8 @@ def _funnel_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_sequence_funnel(
         stream, _STAGES, _SEQ_WINDOW_US, evict=True
     )
-    name = f"stream_funnel_evict_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_fnlev_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    return spark.table(name)
+    return _drain(spark, out, "append")
 
 
 # ---------- T24e: as-of join with WATERMARK EVICTION, gated (r13) --------
@@ -1450,8 +1375,7 @@ def _asof_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_asof_join,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src_ordered(spark, sf_dir, run)
+    src = _events_src_ordered(spark, sf_dir)
     stream = (
         _replay(spark, src, "1")
         .withWatermark("ts", "1 minute")
@@ -1467,11 +1391,8 @@ def _asof_evict_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = streaming_asof_join(stream, evict=True)
-    name = f"stream_asof_evict_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_asofev_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    return spark.table(name)
+    return _drain(spark, out, "append")
 
 
 # -------------------- T23: streaming dual-EWMA (W3 live, bit-exact) ------
@@ -1487,9 +1408,7 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_ewma,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "ewma", _MINUTE, streaming_ewma
-    )
+    latest = _replay_metric_series(spark, sf_dir, _MINUTE, streaming_ewma)
     return latest.select(
         "metric_name", "n_buckets", "ewma_fast", "ewma_slow"
     ).orderBy("metric_name")
@@ -1514,8 +1433,7 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_asof_join,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
+    src = _events_src(spark, sf_dir)
     stream = (
         _replay(spark, src, "4")
         .filter(F.col("event_type").isin("click", "purchase"))
@@ -1530,11 +1448,8 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = streaming_asof_join(stream)
-    name = f"stream_asof_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_asof_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "user_id")
+    latest = _latest(_drain(spark, out, "append"), "user_id")
     return latest.select(
         "event_id",
         "user_id",
@@ -1559,9 +1474,7 @@ def stream_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_pettitt,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "pettitt", _HOUR, streaming_pettitt
-    )
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_pettitt)
     return latest.select(
         "metric_name", "n_buckets", "last_hour_of_seg1", "k_signed", "k_stat"
     ).orderBy("metric_name")
@@ -1583,7 +1496,7 @@ def stream_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_bollinger,
     )
 
-    latest = _replay_metric_series(spark, sf_dir, "boll", _HOUR, streaming_bollinger)
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_bollinger)
     # the drain drops the NULL-hour retraction sentinels
     latest = latest.filter(F.col("hour").isNotNull())
     return latest.select(
@@ -1603,9 +1516,7 @@ def stream_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_drawdown,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "dd", _HOUR, streaming_drawdown
-    )
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_drawdown)
     return latest.select(
         "metric_name",
         "n_hours",
@@ -1635,9 +1546,7 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = (
         f"unix_micros(ts) div {_OHLC_BUCKET_S * 1_000_000} * {_OHLC_BUCKET_S}"
     )
-    latest = _replay_metric_series(
-        spark, sf_dir, "cusum", bucket, streaming_cusum
-    )
+    latest = _replay_metric_series(spark, sf_dir, bucket, streaming_cusum)
     return latest.select(
         "metric_name",
         "bucket_epoch_s",
@@ -1666,7 +1575,7 @@ def stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     latest = _replay_metric_series(
-        spark, sf_dir, "holt", _HOUR, streaming_holt, HOLT_ALPHA, HOLT_BETA
+        spark, sf_dir, _HOUR, streaming_holt, HOLT_ALPHA, HOLT_BETA
     )
     return latest.select(
         "metric_name",
@@ -1693,7 +1602,7 @@ def stream_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     latest = _replay_metric_series(
-        spark, sf_dir, "acf", _MINUTE, streaming_acf, _ACF_MAX_LAG
+        spark, sf_dir, _MINUTE, streaming_acf, _ACF_MAX_LAG
     )
     return latest.select(
         "metric_name",
@@ -1717,9 +1626,7 @@ def stream_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_theil_sen,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "ts", _HOUR, streaming_theil_sen
-    )
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_theil_sen)
     return latest.select(
         "metric_name",
         "n_buckets",
@@ -1741,8 +1648,7 @@ def stream_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_mannwhitney,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
+    src = _events_src(spark, sf_dir)
     stream = (
         _replay(spark, src, "4")
         .select(
@@ -1752,11 +1658,8 @@ def stream_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = streaming_mannwhitney(stream)
-    name = f"stream_mw_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_mw_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "event_type")
+    latest = _latest(_drain(spark, out, "append"), "event_type")
     return latest.select(
         "event_type", "n_a", "n_b", "r_a_x2", "u_a_x2", "tie_term", "z"
     ).orderBy("event_type")
@@ -1787,18 +1690,14 @@ def stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_report,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     counters_s = (
         cms_keyed(stream)
         .select(F.explode(cms_probes()).alias("p"))
         .groupBy(F.col("p.r").alias("r"), F.col("p.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    name = f"stream_cms_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_cms_{run}_")
-    _run_memory(counters_s, name, f"{tmp}/ckpt", spark, "complete")
-    counters = spark.table(name)
+    counters = _drain(spark, counters_s, "complete")
     keyed = cms_keyed(load(spark, sf_dir, "events"))
     return cms_report(keyed, counters)
 
@@ -1824,8 +1723,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_kmv,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     hashed_s = stream.select(
         "event_type",
         shared_hash60(
@@ -1833,11 +1731,8 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("h"),
     )
     out = streaming_kmv(hashed_s, k=_KMV_K)
-    name = f"stream_kmv_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_kmv_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    sk = _latest(spark.table(name), "event_type").select(
+    sk = _latest(_drain(spark, out, "append"), "event_type").select(
         "event_type", "n_state", "kth_hash"
     )
     # batch audit (exactly the A87 report): exact count + full distinct
@@ -1913,8 +1808,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_last_touch,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src_ordered(spark, sf_dir, run), "1")
+    stream = _replay(spark, _events_src_ordered(spark, sf_dir), "1")
     # the ordered src drops `props`; rebuild the channel from the raw
     # table keyed by event_id (a broadcast-size static dim at gate SFs,
     # a plain join at scale) so the channel definition stays A28's
@@ -1944,12 +1838,9 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = streaming_last_touch(shaped, _ATTR_LOOKBACK_S * 1_000_000)
-    name = f"stream_attr_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_attr_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
     return (
-        spark.table(name)
+        _drain(spark, out, "append")
         .groupBy("channel")
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
@@ -1973,7 +1864,7 @@ def stream_spc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_spc,
     )
 
-    latest = _replay_metric_series(spark, sf_dir, "spc", _HOUR, streaming_spc)
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_spc)
     # the drain drops the NULL-bucket retraction sentinels
     latest = latest.filter(F.col("bucket").isNotNull())
     return latest.select(
@@ -1996,9 +1887,7 @@ def stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_seasonal,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "seasonal", _HOUR, streaming_seasonal
-    )
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_seasonal)
     return latest.select(
         "metric_name", "bucket", "v", "trend_sum25", "n_win", "detr25",
         "hod", "seasonal",
@@ -2018,9 +1907,7 @@ def stream_autoperiod(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_autoperiod,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "autoperiod", _HOUR, streaming_autoperiod
-    )
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_autoperiod)
     return latest.select(
         "metric_name", "dominant_lag", "dominant_acf", "second_lag",
         "second_acf", "is_daily",
@@ -2040,9 +1927,7 @@ def stream_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_winsorize,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "winsorize", _HOUR, streaming_winsorize
-    )
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_winsorize)
     return latest.select(
         "metric_name", "n_buckets", "p05", "p95", "n_clip_low",
         "n_clip_high", "sum_raw", "sum_winsor", "winsor_mean",
@@ -2060,9 +1945,7 @@ def stream_range_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_range_rate,
     )
 
-    latest = _replay_metric_series(
-        spark, sf_dir, "range_rate", _HOUR, streaming_range_rate
-    )
+    latest = _replay_metric_series(spark, sf_dir, _HOUR, streaming_range_rate)
     return latest.select(
         "metric_name", "win", "n_samples", "first_bucket", "last_bucket",
         "counter_first", "counter_last", "n_resets", "increase",
@@ -2080,16 +1963,12 @@ def stream_language_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares are derived on the drained ≤|sources|·|langs| relation with
     the IDENTICAL integer expression as the batch plan.  Gated on the
     batch `corpus_language_mixture` oracle verbatim."""
-    run = next(_RUN_IDS)
-    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "lang")
+    src = _documents_src(spark, sf_dir, "doc_id", "source", "lang")
     stream = _replay(spark, src, "4")
     counts = stream.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
-    name = f"stream_langmix_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_langmix_{run}_")
-    _run_memory(counts, name, f"{tmp}/ckpt", spark, "complete")
-    emitted = spark.table(name)
+    emitted = _drain(spark, counts, "complete")
     # exact-ppm shares on the drained reduced relation — the IDENTICAL
     # integer expression as datapipe.curation.language_mixture
     from project_obsidian_core_spark.datapipe.curation import (
@@ -2116,7 +1995,7 @@ def stream_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     latest = _replay_metric_series(
-        spark, sf_dir, "fbt", _HOUR,
+        spark, sf_dir, _HOUR,
         streaming_forecast_backtest, HOLT_ALPHA, HOLT_BETA,
     )
     return latest.select(
@@ -2163,8 +2042,7 @@ def stream_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("nation", "l_suppkey", "epc")
         )
 
-    run = next(_RUN_IDS)
-    src = _materialize(f"li_hhi:{sf_dir}", run, lineitem_by_nation)
+    src = _materialize(f"li_hhi:{sf_dir}", lineitem_by_nation)
     stream = _replay(spark, src, "8")
     keyed = stream.select(
         "nation",
@@ -2172,11 +2050,8 @@ def stream_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("epc").alias("v"),
     )
     out = streaming_supplier_hhi(keyed)
-    name = f"stream_hhi_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_hhi_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "nation")
+    latest = _latest(_drain(spark, out, "append"), "nation")
     return latest.select(
         "nation", "n_suppliers", "revenue_cents", "hhi", "band"
     ).orderBy("nation")
@@ -2201,13 +2076,9 @@ def stream_token_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_doc_stats,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _documents_src(spark, sf_dir, run, "source", "text"), "4")
+    stream = _replay(spark, _documents_src(spark, sf_dir, "source", "text"), "4")
     grid = token_anomaly_grid(token_doc_stats(stream))
-    name = f"stream_toktom_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_toktom_{run}_")
-    _run_memory(grid, name, f"{tmp}/ckpt", spark, "complete")
-    return token_anomaly_report(spark.table(name))
+    return token_anomaly_report(_drain(spark, grid, "complete"))
 
 
 # -------- T45: streaming char-class fingerprint (X32 served live) ---------
@@ -2228,13 +2099,9 @@ def stream_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         charclass_sums,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _documents_src(spark, sf_dir, run, "source", "text"), "4")
+    stream = _replay(spark, _documents_src(spark, sf_dir, "source", "text"), "4")
     sums = charclass_sums(charclass_counts(stream))
-    name = f"stream_cclass_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_cclass_{run}_")
-    _run_memory(sums, name, f"{tmp}/ckpt", spark, "complete")
-    return charclass_report(spark.table(name), summed=True)
+    return charclass_report(_drain(spark, sums, "complete"), summed=True)
 
 
 # ---------- T46: streaming dwell-time quantiles (A110 served live) --------
@@ -2252,8 +2119,7 @@ def stream_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_dwell_grid,
     )
 
-    run = next(_RUN_IDS)
-    stream = _replay(spark, _events_src(spark, sf_dir, run), "4")
+    stream = _replay(spark, _events_src(spark, sf_dir), "4")
     keyed = stream.select(
         "user_id",
         F.expr("unix_micros(ts)").alias("ts_us"),
@@ -2261,11 +2127,8 @@ def stream_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
     )
     out = streaming_dwell_grid(keyed)
-    name = f"stream_dwell_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_dwell_{run}_")
-    _run_memory(out, name, f"{tmp}/ckpt", spark, "append")
 
-    latest = _latest(spark.table(name), "user_id")
+    latest = _latest(_drain(spark, out, "append"), "user_id")
     grid = latest.groupBy("event_type", "dwell_s").agg(
         F.sum("cnt").alias("cnt")
     )
@@ -2281,22 +2144,24 @@ def stream_state_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     per family, how many keys hold state, how many state rows exist in
     total, and the largest single key.
 
-    Families and where the number comes from — every size is the LIVE
-    state measurement the operator itself emits, never a formula:
+    Every size is read from the state the real operator keeps: each
+    family's stream is drained from a fresh checkpoint and that
+    checkpoint is read back with Spark's ``statestore`` source
+    (:func:`_drain` with ``state=True``), never a formula or a mirror:
 
-    - ``cms_counters``: the T33 complete-mode counter relation — rows
-      of the drained (r, bucket) table, ≤ d·w = 4096 forever.
+    - ``cms_counters``: the T33 complete-mode counter relation — key
+      rows per hash row ``r`` of the (r, bucket) aggregation state,
+      ≤ d·w = 4096 forever;
     - ``ewma_bucket_sums``: the T23 per-metric exact-int bucket sums —
-      ``n_buckets`` is in the emission schema; max-version drain.
-    - ``kmv_minima``: the T34 k-smallest-distinct-hash fold —
-      ``n_state`` is in the emission schema, ≤ k = 64 per key forever.
+      the length of each metric's ``buckets`` state array;
+    - ``kmv_minima``: the T34 k-smallest-distinct-hash fold — the length
+      of each type's ``minima`` state array, ≤ k = 64 per key forever;
     - ``sequence_evict``: the per-user ordered-sequence family under
-      watermark eviction (T20e/T21e/T22e) — the
-      :func:`streaming_state_rows` probe applies the same retention
-      rule (bisect cut + one frozen anchor) on the same ordered-chunk
-      replay and emits each key's live row count; the aggressive
-      re-arm makes the final sweep watermark-exact, so the drained
-      sizes are chunk-independent.
+      watermark eviction (T20e/T21e/T22e) — the length of each user's
+      ``ts_us`` state array under ``streaming_transitions(evict=True)``
+      on the ordered-chunk replay (bisect cut + one frozen anchor; a key
+      holding more than its anchor wakes whenever a trim remains, so the
+      final sizes are watermark-exact and chunk-independent).
 
     Exactness: every reported int is gated against a DuckDB twin that
     derives the SAME sizes from the retention contracts (distinct
@@ -2316,68 +2181,65 @@ def stream_state_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_obsidian_core_spark.streaming.sequence_state import (
         streaming_ewma,
         streaming_kmv,
-        streaming_state_rows,
+        streaming_transitions,
     )
 
-    run = next(_RUN_IDS)
-    src = _events_src(spark, sf_dir, run)
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_budget_{run}_")
+    src = _events_src(spark, sf_dir)
 
-    def fam_row(df: DataFrame, family: str, key: str, rows: str) -> DataFrame:
-        return df.agg(
-            F.lit(family).alias("family"),
-            F.count_distinct(F.col(key)).cast("long").alias("n_keys"),
-            F.sum(rows).cast("long").alias("state_rows"),
-            F.max(rows).cast("long").alias("max_rows_per_key"),
+    def family(name: str, per_key: DataFrame) -> DataFrame:
+        """A family's budget row from its per-key state sizes ``n``."""
+        return per_key.agg(
+            F.lit(name).alias("family"),
+            F.count(F.lit(1)).cast("long").alias("n_keys"),
+            F.sum("n").cast("long").alias("state_rows"),
+            F.max("n").cast("long").alias("max_rows_per_key"),
         )
 
-    def drain(out: DataFrame, fam: str, key: str, rows: str) -> DataFrame:
-        name = f"budget_{fam}_{run}"
-        _run_memory(out, name, f"{tmp}/{fam}", spark, "append")
-        return fam_row(_latest(spark.table(name), key), fam, key, rows)
+    def array_sizes(stream: DataFrame, field: str) -> DataFrame:
+        """Per key, the length of the state array ``field`` that an
+        ``applyInPandasWithState`` operator holds after the replay."""
+        state = _drain(spark, stream, "append", state=True)
+        return state.select(F.size(f"value.groupState.{field}").alias("n"))
 
-    # family: cms_counters (T33) — complete-mode counter table rows
+    # the grouping columns are named before the groupBy: over aliased
+    # expressions both state-key fields would be named _groupingexpression
     counters_s = (
         cms_keyed(_replay(spark, src, "4"))
         .select(F.explode(cms_probes()).alias("p"))
-        .groupBy(F.col("p.r").alias("r"), F.col("p.bucket").alias("bucket"))
+        .select("p.r", "p.bucket")
+        .groupBy("r", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    _run_memory(counters_s, f"budget_cms_{run}", f"{tmp}/cms", spark, "complete")
-    cms_rows = spark.table(f"budget_cms_{run}").select(
-        "r", F.lit(1).alias("one")
-    )
-    cms_fam = fam_row(
-        cms_rows.groupBy("r").agg(F.sum("one").alias("n_buckets")),
+    cms_state = _drain(spark, counters_s, "complete", state=True)
+    cms_fam = family(
         "cms_counters",
-        "r",
-        "n_buckets",
+        cms_state.groupBy("key.r").agg(F.count(F.lit(1)).alias("n")),
     )
 
-    # family: ewma_bucket_sums (T23) — n_buckets from the emission
-    ewma_last = _replay_metric_series(
-        spark, sf_dir, "budget_ewma", _MINUTE, streaming_ewma
+    ewma_fam = family(
+        "ewma_bucket_sums",
+        array_sizes(
+            streaming_ewma(_metric_series(spark, sf_dir, _MINUTE)), "buckets"
+        ),
     )
-    ewma_fam = fam_row(ewma_last, "ewma_bucket_sums", "metric_name", "n_buckets")
 
-    # family: kmv_minima (T34) — n_state from the emission
     hashed_s = _replay(spark, src, "4").select(
         "event_type",
         shared_hash60(
             F.concat(F.lit("kmv:"), F.col("user_id").cast("string"))
         ).alias("h"),
     )
-    kmv_fam = drain(
-        streaming_kmv(hashed_s, k=_KMV_K), "kmv_minima", "event_type", "n_state"
+    kmv_fam = family(
+        "kmv_minima", array_sizes(streaming_kmv(hashed_s, k=_KMV_K), "minima")
     )
 
-    # family: sequence_evict (T20e family) — the live-state probe on
-    # the ordered-chunk replay (the eviction contract's transport)
+    # the ordered-chunk replay is the eviction contract's transport
     stream_ord = _replay(
-        spark, _events_src_ordered(spark, sf_dir, run), "1"
+        spark, _events_src_ordered(spark, sf_dir), "1"
     ).withWatermark("ts", "1 minute")
-    seq_fam = drain(
-        streaming_state_rows(stream_ord), "sequence_evict", "user_id", "n_state"
+    seq_fam = family(
+        "sequence_evict",
+        array_sizes(streaming_transitions(stream_ord, evict=True), "ts_us"),
     )
 
     return (
@@ -2497,14 +2359,10 @@ def stream_extract_content(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_sums,
     )
 
-    run = next(_RUN_IDS)
-    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "text")
+    src = _documents_src(spark, sf_dir, "doc_id", "source", "text")
     stream = _replay(spark, src, "4")
     sums = extract_sums(extract_doc_stats(stream))
-    name = f"stream_x34_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_x34_{run}_")
-    _run_memory(sums, name, f"{tmp}/ckpt", spark, "complete")
-    return extract_report(spark.table(name))
+    return extract_report(_drain(spark, sums, "complete"))
 
 
 # ---------- T49: streaming Gini concentration monitor (A114 live) ---------
@@ -2536,14 +2394,10 @@ def stream_gini_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents("o_totalprice").alias("v"),
         )
 
-    run = next(_RUN_IDS)
-    src = _materialize(f"orders_seg:{sf_dir}", run, orders_by_segment)
+    src = _materialize(f"orders_seg:{sf_dir}", orders_by_segment)
     stream = _replay(spark, src, "4")
     grid = gini_grid(stream)
-    name = f"stream_gini_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_gini_{run}_")
-    _run_memory(grid, name, f"{tmp}/ckpt", spark, "complete")
-    return gini_report(spark.table(name))
+    return gini_report(_drain(spark, grid, "complete"))
 
 
 # ---------- T50: streaming shard-skew monitor (P20 served live) -----------
@@ -2565,11 +2419,7 @@ def stream_shard_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         shard_sums,
     )
 
-    run = next(_RUN_IDS)
-    src = _documents_src(spark, sf_dir, run, "doc_id", "source", "text")
+    src = _documents_src(spark, sf_dir, "doc_id", "source", "text")
     stream = _replay(spark, src, "4")
     sums = shard_sums(shard_stats(stream))
-    name = f"stream_shskew_{run}"
-    tmp = tempfile.mkdtemp(prefix=f"obsidian_shskew_{run}_")
-    _run_memory(sums, name, f"{tmp}/ckpt", spark, "complete")
-    return shard_report(spark.table(name))
+    return shard_report(_drain(spark, sums, "complete"))

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the local CPU budget: the default ``local[N]`` width and shuffle partitions
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -21,13 +22,15 @@ def build_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    silence_window_warning: bool = True,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with scale-aware defaults.
 
     On a real cluster, ``master`` comes from spark-submit and
     ``shuffle_partitions`` should be ~2-3x total executor cores; locally we
-    default both to the CPU budget.
+    default both to the CPU budget (``$SPARK_GRAFT_CPUS``, else 32).
+    ``extra_conf`` is applied last, so it overrides any conf set here
+    (for example ``spark.sql.streaming.stateStore.maintenanceInterval``
+    for a long-running production stream).
 
     Generated-code cache (``spark.sql.codegen.cache.maxEntries``, a static
     conf read when the JVM first generates code): 1000 classes. Spark's
@@ -48,7 +51,6 @@ def build_session(
     cached class kept about 25-35 KB of live heap (source plus bytecode),
     so a full cache holds about 25-35 MB, against about 3 MB at 100.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
@@ -67,11 +69,9 @@ def build_session(
         # with fresh checkpoints; the default 60 s state-store maintenance
         # pass then churns snapshot/cleanup work across every provider ever
         # loaded (measured: intermittent 2 s → 16 s replay spikes). For
-        # long-running production streams, set this back near the default.
-        .config(
-            "spark.sql.streaming.stateStore.maintenanceInterval",
-            os.environ.get("SPARK_GRAFT_STATE_MAINT_INTERVAL", "600s"),
-        )
+        # long-running production streams, set this back near the default
+        # through ``extra_conf``.
+        .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
         # generated-code cache sized from measured working sets: see the
         # docstring
         .config("spark.sql.codegen.cache.maxEntries", "1000")
@@ -81,16 +81,12 @@ def build_session(
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{DEFAULT_SHUFFLE_PARTITIONS}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # the suppression is JVM-global: library consumers running their OWN
-    # unwhitelisted plans in the same session can opt back into the
-    # "No Partition Defined" warning (r14 advice)
-    if silence_window_warning:
-        _silence_bounded_window_warning(spark)
+    _silence_bounded_window_warning(spark)
     return spark
 
 

@@ -1,10 +1,10 @@
 """The watermark-freeze kernel: the one group function and the one
 ``applyInPandasWithState`` call of every evicting stream operator.
 
-Six operators share it — the evict modes of transitions, the anchored
-funnel, gap sessions and the as-of join, the state-size probe (all in
-``sequence_state.py``) and the evict mode of islands
-(``interval_state.py``).  It is the second and last stream kernel, built
+Five operators share it — the evict modes of transitions, the anchored
+funnel, gap sessions and the as-of join (all in ``sequence_state.py``)
+and the evict mode of islands (``interval_state.py``).  Every one of
+them emits ``is_final``.  It is the second and last stream kernel, built
 on the contract of ``versioned_fold.py`` plus the three steps Structured
 Streaming adds for unbounded input: an event-time watermark, a per-group
 event-time timeout, and one user function over (key, rows, state).
@@ -25,11 +25,11 @@ Operator pieces (:class:`FreezeOp`), all pure:
   operator without a wake rule runs with no timeout.
 * ``live(key, acc, version, final=None) -> DataFrame | None`` — the keep
   twin's emitter.  It renders the live rows from ``rest`` and the final
-  rows from ``frozen``.  The kernel passes ``final`` (True or False) when
-  the output schema has ``is_final``, and the emitter adds the column
-  with :func:`final_col` (building it into the frame costs a few µs;
-  inserting it afterwards costs ~170 µs per frame, once per key per
-  micro-batch).
+  rows from ``frozen``.  The kernel passes ``final`` (True or False), and
+  the emitter adds the ``is_final`` column with :func:`final_col`
+  (building it into the frame costs a few µs; inserting it afterwards
+  costs ~170 µs per frame, once per key per micro-batch); the keep twins
+  call the same emitter with ``final=None`` and get no column.
 * ``marker(key, acc, version, final)`` (optional) — the rows a timeout
   flush emits when ``live`` has none (transitions' ``n=0`` row).
 
@@ -51,9 +51,7 @@ Kernel duties, in the order they run:
   something froze is a flush: ``version`` grows by 1, so the flush's
   frames supersede every earlier live frame of the key.
 * **Emit**: the final rows, then the live rows (or the marker after a
-  flush), each stamped with ``version`` and ``is_final``.  An output
-  schema without ``is_final`` (the state-size probe) has a max-version
-  drain only, so frozen parts leave state unemitted.
+  flush), each stamped with ``version`` and ``is_final``.
 
 Drains (finals are emitted exactly once per frozen part):
 
@@ -61,8 +59,7 @@ Drains (finals are emitted exactly once per frozen part):
 * sessions and as-of — finals ∪ max-version live, finals taking
   precedence by session / click;
 * funnel — a user's final row supersedes all of that user's live rows;
-* islands — finals ∪ the max-version live rows;
-* state-size probe — the max-version row per key.
+* islands — finals ∪ the max-version live rows.
 
 Islands has no wake rule and so keeps ``NoTimeout``.  Its evict
 checkpoints were written under ``NoTimeout``, and on PySpark 4.1.2 such a
@@ -98,7 +95,7 @@ Wake = Callable[[tuple], "int | None"]
 
 def final_col(n: int, final: bool | None) -> dict:
     """The ``is_final`` column of an ``n``-row frame, or none for
-    ``final=None`` (a keep twin, or an output without the column)."""
+    ``final=None`` (a keep twin)."""
     return {} if final is None else {"is_final": np.full(n, final, dtype=bool)}
 
 
@@ -113,13 +110,10 @@ class FreezeOp(NamedTuple):
     marker: Emit | None = None
 
 
-def freeze_fold_fn(
-    op: FreezeOp, state_schema: T.StructType, output_schema: T.StructType
-):
+def freeze_fold_fn(op: FreezeOp, state_schema: T.StructType):
     """The ``applyInPandasWithState`` group function of the contract in
     the module docstring."""
     vpos = state_schema.fieldNames().index("version")
-    flagged = "is_final" in output_schema.fieldNames()
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -150,14 +144,13 @@ def freeze_fold_fn(
         if spurious:  # re-armed above; nothing else changes
             return
         k = key[0] if len(key) == 1 else key
-        if frozen is not None and flagged:
+        if frozen is not None:
             out = op.live(k, frozen, version, True)
             if out is not None:
                 yield out
-        live = False if flagged else None
-        out = op.live(k, acc, version, live)
+        out = op.live(k, acc, version, False)
         if out is None and timed_out and op.marker is not None:
-            out = op.marker(k, acc, version, live)
+            out = op.marker(k, acc, version, False)
         if out is not None:
             yield out
 
@@ -176,7 +169,7 @@ def freeze_fold_stream(
     ``applyInPandasWithState`` call (append mode; an event-time timeout
     exactly when ``op`` has a wake rule)."""
     return keyed.groupBy(key).applyInPandasWithState(
-        freeze_fold_fn(op, state_schema, output_schema),
+        freeze_fold_fn(op, state_schema),
         outputStructType=output_schema,
         stateStructType=state_schema,
         outputMode="append",

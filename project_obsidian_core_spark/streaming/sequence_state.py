@@ -26,11 +26,13 @@ interval_state contract) bounds it to the WATERMARK HORIZON with NO
 semantic loss.  Each evicting operator here is a set of pure pieces —
 the keep twin's fold and emitter plus a freeze rule and a wake rule
 (:data:`TRANSITIONS_FREEZE`, :func:`funnel_freeze`,
-:func:`session_freeze`, :data:`ASOF_FREEZE`, :data:`BUDGET_FREEZE`) —
-run by the watermark-freeze kernel (``streaming/freeze_fold.py``), which
-owns the ``GroupState`` protocol, the timeouts and the ``is_final``
-column; the keep twins run the same fold and emitter on the
-versioned-fold kernel (``streaming/versioned_fold.py``).  For
+:func:`session_freeze`, :data:`ASOF_FREEZE`) — run by the
+watermark-freeze kernel (``streaming/freeze_fold.py``), which owns the
+``GroupState`` protocol, the timeouts and the ``is_final`` column; the
+keep twins run the same fold and emitter on the versioned-fold kernel
+(``streaming/versioned_fold.py``).  The bound is read, not mirrored:
+``stream_state_budget`` sizes this family from the per-user ``ts_us``
+arrays that evicting transitions keep in their state store.  For
 transitions, finals ∪ max-version live rows ≡ the batch operator
 exactly, test-pinned; the per-batch O(state) re-sort shrinks to
 O(horizon activity).  Ties: the sequence sorts by (ts, event_id), the
@@ -193,8 +195,9 @@ def freeze_sequence(acc, wm_us: int):
     Every adjacent pair whose SECOND element is frozen is therefore
     final; the frozen rows leave state except the LAST one, kept as the
     boundary anchor (a future in-horizon row can still land right after
-    it, so the anchor's outgoing pair stays live).  The state-size probe
-    runs the same rule over its ts array."""
+    it, so the anchor's outgoing pair stays live).  ``stream_state_budget``
+    reads the state this rule leaves (the ``ts_us`` array's length per
+    user) from the operator's checkpoint."""
     cut = bisect.bisect_left(acc[0], wm_us)
     if cut <= 1:
         return None, acc
@@ -2510,70 +2513,4 @@ def streaming_dwell_grid(stream: DataFrame) -> DataFrame:
     return versioned_fold_stream(
         keyed, "user_id", _fold_events, emit_dwell,
         DWELL_STATE_SCHEMA, DWELL_OUTPUT_SCHEMA,
-    )
-
-
-# ------------- T47: per-user eviction state-size probe (round 16) ---------
-#: r15 verdict #6: the twins' state bounds were unit-pinned but never
-#: MEASURED in a driver-visible artifact.  This probe runs the evict-mode
-#: transitions freeze rule (:func:`freeze_sequence`: watermark cut at
-#: bisect_left + one below-watermark anchor, and its wake at ts[1]) on the
-#: freeze kernel over the same ordered replay, and emits the per-key LIVE
-#: STATE ROW COUNT through the normal output path, so the drained sizes
-#: are the real operational numbers, not a formula.  Every key holding
-#: more than the anchor still sweeps at or before the final watermark
-#: whenever a trim remains, so the drained sizes stay
-#: replay-chunk-independent and exactly SQL-expressible (the
-#: `stream_state_budget` gate).  The output has no ``is_final`` column:
-#: the drain is the max-version row per key.
-BUDGET_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("version", T.LongType()),
-    ]
-)
-
-BUDGET_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_state", T.LongType()),
-        T.StructField("version", T.LongType()),
-    ]
-)
-
-
-def _fold_budget_ts(acc, pdf: pd.DataFrame):
-    # batch rows are unordered: one sort of state+batch (timsort gallops
-    # over the presorted state run); only the SIZE is reported, so the
-    # state is the ts list alone
-    return (sorted([*(acc[0] if acc else ()), *pdf["ts_us"].tolist()]),)
-
-
-def emit_budget(user, acc, version: int, final=None) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": _full(1, int(user)),
-            "n_state": _full(1, len(acc[0])),
-            "version": _full(1, version),
-        },
-        copy=False,
-    )
-
-
-BUDGET_FREEZE = FreezeOp(
-    _fold_budget_ts, freeze_sequence, emit_budget, wake_sequence
-)
-
-
-def streaming_state_rows(stream: DataFrame) -> DataFrame:
-    """Wire the state-size probe over a watermarked event stream;
-    expects (user_id, ts).  Drain = max-version row per user."""
-    keyed = stream.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.unix_micros("ts").alias("ts_us"),
-        F.col("ts"),
-    )
-    return freeze_fold_stream(
-        keyed, "user_id", BUDGET_FREEZE,
-        BUDGET_STATE_SCHEMA, BUDGET_OUTPUT_SCHEMA,
     )

@@ -19,7 +19,9 @@ the shared ``FakeState``:
   per state-schema field.
 
 The pins fail loudly if a second copy of the bucket fold or of the
-superseding ``applyInPandasWithState`` call is added back.
+superseding ``applyInPandasWithState`` call is added back, or if a
+stream twin starts and drains its own query instead of calling the
+replay harness's ``_drain``.
 """
 
 from __future__ import annotations
@@ -209,8 +211,8 @@ def test_topk_fold_ignores_null_keys():
 
 def test_streaming_topk_drops_null_keys(spark, tmp_path):
     from project_obsidian_core_spark.plans.streaming_queries import (
+        _drain,
         _replay,
-        _run_memory,
     )
 
     def drain(tag, keys):
@@ -219,10 +221,9 @@ def test_streaming_topk_drops_null_keys(spark, tmp_path):
             src
         )
         out = TK.streaming_topk(_replay(spark, src), n_shards=1, capacity=4)
-        name = f"topk_null_keys_{tag}"
-        _run_memory(out, name, str(tmp_path / f"{tag}_ckpt"), spark, "append")
         return sorted(
-            (r.key, r.est_count, r.version) for r in spark.table(name).collect()
+            (r.key, r.est_count, r.version)
+            for r in _drain(spark, out, "append").collect()
         )
 
     # NULL keys leave both the counts and the version untouched, and a
@@ -258,6 +259,37 @@ def test_fold_bucket_sums_has_one_call_site():
     for path, src in _package_trees():
         sites += [path] * len(_calls(ast.parse(src), "fold_bucket_sums"))
     assert sites == [S.__file__], sites
+
+
+#: the replay harness of ``plans/streaming_queries.py`` plus the one twin
+#: whose sink is not a memory table (``stream_cdc_merge``'s foreachBatch
+#: MERGE into a snapshot)
+DRAIN_OWNERS = {
+    "_materialize",
+    "_events_src_ordered",
+    "_drain",
+    "stream_cdc_merge",
+}
+
+
+def test_only_the_harness_starts_streams():
+    """No twin grows its own drain back: ``writeStream``, ``queryName``
+    and ``tempfile.mkdtemp`` appear only in the harness helpers."""
+    from project_obsidian_core_spark.plans import streaming_queries as SQ
+
+    with open(SQ.__file__) as fh:
+        tree = ast.parse(fh.read())
+    owners = set()
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "writeStream",
+                "queryName",
+                "mkdtemp",
+            ):
+                assert isinstance(fn, ast.FunctionDef), ast.dump(node)
+                owners.add(fn.name)
+    assert owners == DRAIN_OWNERS, owners
 
 
 def test_package_has_four_apply_in_pandas_sites():

@@ -7,8 +7,10 @@ its DuckDB oracle bit-exactly, compared with the normalizer of
 an equally empty oracle, so every result must also be non-empty.
 
 The empty-events corpus is sf0.001 with ``events.parquet`` cut to zero
-rows: every query over events must then match its (empty) oracle rather
-than fail inside the engine.  The absorbing-events corpus keeps each
+rows: every query over events must then match its oracle rather than
+fail inside the engine.  That oracle is empty except for the funnel's
+three zero-count stages and the state budget's four ``(family, 0, NULL,
+NULL)`` rows.  The absorbing-events corpus keeps each
 user's first three events as view → click → purchase; the stationary
 Markov fold must then drain to zero rows like its oracle.
 """
@@ -39,11 +41,16 @@ UNTESTED_TWINS = [
     "stream_quantiles_exact",
     "stream_discovery_timeline",
     "stream_priority_sample",
+    # four replays (CMS, EWMA, KMV, ordered evicting transitions), each
+    # read back from its checkpoint: about 30 s at sf0.001 in a warm
+    # session, 45 s as its first query
+    "stream_state_budget",
 ]
 
 STAGES = ("view", "click", "purchase")
 
-#: the in-row Markov fold plus the versioned-fold twins that replay events
+#: the in-row Markov fold plus the stream twins that replay events, the
+#: last five through the ordered-chunk replay
 EMPTY_EVENTS_QUERIES = [
     "events_markov_stationary",
     "stream_mannwhitney",
@@ -53,7 +60,15 @@ EMPTY_EVENTS_QUERIES = [
     "stream_quantiles_exact",
     "stream_discovery_timeline",
     "stream_ewma",
+    "stream_sessionize_evict",
+    "stream_funnel_evict",
+    "stream_asof_join_evict",
+    "stream_attribution",
+    "stream_state_budget",
 ]
+
+#: rows of the queries whose oracle is not empty on the empty corpus
+ROWS_ON_EMPTY = {"stream_funnel_evict": 3, "stream_state_budget": 4}
 
 
 def _duck(sf):
@@ -134,7 +149,7 @@ def test_twin_matches_its_oracle(spark, sf_dir, duck, request, name):
 
     if corpus:
         # neither corpus leaves a type with support in the last rounds
-        assert s_rows == [], f"{name} emitted rows on {corpus}"
+        assert len(s_rows) == ROWS_ON_EMPTY.get(name, 0), (name, corpus)
     else:
         assert s_rows, f"{name} drained no rows"
     assert sorted(s_cols) == sorted(d_cols)

@@ -1,5 +1,5 @@
 """The watermark-freeze kernel (`streaming/freeze_fold.py`): its group-
-function contract over all six evicting operators, driven through the
+function contract over all five evicting operators, driven through the
 shared ``FakeState`` without Spark.
 
 * an empty batch emits nothing and creates no state;
@@ -42,11 +42,6 @@ CASES = {
         S.SESSION_EVICT_OUTPUT_SCHEMA,
     ),
     "asof": (S.ASOF_FREEZE, S.ASOF_STATE_SCHEMA, S.ASOF_EVICT_OUTPUT_SCHEMA),
-    "state_budget": (
-        S.BUDGET_FREEZE,
-        S.BUDGET_STATE_SCHEMA,
-        S.BUDGET_OUTPUT_SCHEMA,
-    ),
     "islands": (
         IS.islands_freeze(["host"]),
         IS.STATE_SCHEMA,
@@ -79,7 +74,7 @@ def _batch(name, rows, t0=T0):
 class Driver:
     def __init__(self, name, fake_state):
         op, state_schema, self.schema = CASES[name]
-        self.fn = freeze_fold_fn(op, state_schema, self.schema)
+        self.fn = freeze_fold_fn(op, state_schema)
         self.vpos = state_schema.fieldNames().index("version")
         self.key = KEY.get(name, (7,))
         self.state = fake_state(wm_ms=T0 // 1000 - 1_000)
@@ -99,7 +94,7 @@ class Driver:
 
 
 def _finals(out):
-    return [f for f in out if "is_final" in f and f["is_final"].all()]
+    return [f for f in out if f["is_final"].all()]
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
@@ -132,8 +127,7 @@ def test_flush_bumps_version_and_finalizes_once(fake_state, name):
     flushed = d(wm_us=T0 + 10 * HOUR, timed_out=True)
     assert d.version == len(b) + 1
     assert flushed and all((f["version"] == len(b) + 1).all() for f in flushed)
-    if "is_final" in d.schema.fieldNames():
-        assert len(_finals(flushed)) == 1
+    assert len(_finals(flushed)) == 1
     # a second wake at the same watermark finds nothing left to freeze
     assert d(timed_out=True) == []
     assert d.version == len(b) + 1
@@ -150,9 +144,7 @@ def test_finals_emitted_once_per_frozen_part(fake_state, name):
     b2 = _batch(name, 3, t0=late)
     out = d(b2, wm_us=late)
     assert d.version == len(b1) + len(b2)
-    finals = _finals(out)
-    if "is_final" in d.schema.fieldNames():
-        assert len(finals) == 1
+    assert len(_finals(out)) == 1
     if name == "funnel":  # a finalized user is a tombstone: no wake left
         assert d.state.timeout_ms is None
     b3 = _batch(name, 3, t0=late + 100_000_000)
@@ -163,4 +155,4 @@ def test_finals_emitted_once_per_frozen_part(fake_state, name):
 
 def test_islands_run_without_timeout():
     assert CASES["islands"][0].wake is None
-    assert TIMED == ["transitions", "funnel", "sessions", "asof", "state_budget"]
+    assert TIMED == ["transitions", "funnel", "sessions", "asof"]

@@ -552,9 +552,7 @@ def test_funnel_evict_state_bound_direct(fake_state):
     )
 
     fn = freeze_fold_fn(
-        S.funnel_freeze(_F_STAGES, _F_WITHIN_US),
-        S.FUNNEL_EVICT_STATE_SCHEMA,
-        S.FUNNEL_EVICT_OUTPUT_SCHEMA,
+        S.funnel_freeze(_F_STAGES, _F_WITHIN_US), S.FUNNEL_EVICT_STATE_SCHEMA
     )
 
     # anchorless user: 100 noise rows below the watermark all prune away
